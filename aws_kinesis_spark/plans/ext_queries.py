@@ -193,9 +193,14 @@ def _ann_recall_check(ann: DataFrame, exact: DataFrame, min_recall: float) -> Da
     twice, so callers that pass the lazy brute-force frame computed the
     whole blocked-matmul twin TWICE (g62's plan showed the embeddings
     scan 14x / 2 extra Python stages). A left join from exact marks the
-    hit pairs and one aggregate counts both — |ann ∩ exact| is unchanged
-    because a top-k frame has unique (query_id, neighbor_id) keys."""
-    hits = ann.select("query_id", "neighbor_id").withColumn("__hit", F.lit(True))
+    hit pairs and one aggregate counts both. The ANN side is deduplicated
+    on (query_id, neighbor_id) first, so a repeated ANN row cannot fan out
+    the left join and inflate either count."""
+    hits = (
+        ann.select("query_id", "neighbor_id")
+        .dropDuplicates(["query_id", "neighbor_id"])
+        .withColumn("__hit", F.lit(True))
+    )
     return (
         exact.select("query_id", "neighbor_id")
         .join(hits, ["query_id", "neighbor_id"], "left")

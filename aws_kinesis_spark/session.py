@@ -55,6 +55,17 @@ def get_spark(app_name: str = "aws-kinesis-spark", cpus: str | None = None) -> S
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         # MIN/MAX/COUNT over parquet answer from footer statistics
         .config("spark.sql.parquet.aggregatePushdown", "true")
+        # list store dirs on the driver: above 32 paths Spark lists with a
+        # distributed job, which in local mode runs on executor threads of
+        # this same JVM against the same filesystem — scheduling with no
+        # work behind it. The engine's fan-outs (64 hash buckets per store
+        # dir, a restart batch's 60 source files) each paid one such job
+        # per read: 21 jobs, 6.5 s of job time in one traced 50 s
+        # dedup-ingest benchmark run on a 4-core host. The constant sits
+        # above every fan-out the engine produces. It is set here, not in
+        # configure(): on a cluster reading object stores, Spark's
+        # parallel listing stays the right default.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
         # (a former "spark.sql.shuffle.spill.compress" line was a no-op —

@@ -22,6 +22,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from aws_kinesis_spark.sources.envelope import decode_envelope
 
@@ -92,6 +93,77 @@ def _list_parquet_files(root: str) -> list[str]:
             if f.endswith(".parquet"):
                 out.append(os.path.join(dirpath, f))
     return sorted(out)
+
+
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _as_nullable(node):
+    # Spark reads every file-source column as nullable; mirror that on the
+    # JSON form of a schema (struct fields, array elements, map values)
+    if isinstance(node, dict):
+        return {
+            k: True if k in ("nullable", "containsNull", "valueContainsNull")
+            else _as_nullable(v)
+            for k, v in node.items()
+        }
+    if isinstance(node, list):
+        return [_as_nullable(v) for v in node]
+    return node
+
+
+def parquet_store_schema(path: str) -> StructType | None:
+    """The schema ``spark.read.parquet(path)`` would infer, from ONE footer
+    read on the driver with pyarrow — no Spark job. Spark infers a parquet
+    schema with a distributed footer-read job, which in a micro-batch
+    engine is scheduling with almost no work behind it; every store the
+    engine wrote has one schema per store, so one footer is the answer.
+
+    ``path`` is a data file or a store directory. Spark-written files
+    carry their Spark schema in the footer metadata; pyarrow-written ones
+    (the driver-side dedup stores) convert from the Arrow schema. The
+    hive ``key=value`` dirs between a directory ``path`` and its first
+    file append as partition columns, typed as Spark infers integers.
+    Returns None when there is nothing to take a schema from (no data
+    file, or a partition value that is not an integer): the caller then
+    lets Spark infer."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    if os.path.isdir(path):
+        first = None
+        for dirpath, dirs, files in os.walk(path):
+            dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+            data = sorted(
+                f for f in files
+                if f.endswith(".parquet") and not f.startswith(("_", "."))
+            )
+            if data:
+                first = os.path.join(dirpath, data[0])
+                break
+        if first is None:
+            return None
+        rel = os.path.relpath(os.path.dirname(first), path)
+        part_dirs = [] if rel == "." else rel.split(os.sep)
+    else:
+        first, part_dirs = path, []
+    partition_fields = []
+    for d in part_dirs:
+        key, eq, value = d.partition("=")
+        if not eq or not value.lstrip("-").isdigit():
+            return None
+        n = int(value)
+        partition_fields.append(
+            StructField(key, IntegerType() if -(2**31) <= n < 2**31 else LongType())
+        )
+    footer = pq.read_schema(first)
+    spark_json = (footer.metadata or {}).get(_SPARK_ROW_METADATA)
+    if spark_json is not None:
+        data_schema = StructType.fromJson(json.loads(spark_json))
+    else:
+        data_schema = from_arrow_schema(footer, prefer_timestamp_ntz=True)
+    schema = StructType(list(data_schema.fields) + partition_fields)
+    return StructType.fromJson(_as_nullable(schema.jsonValue()))
 
 
 def write_manifest(
@@ -319,7 +391,8 @@ def _empty_like_lake(spark: SparkSession, lake_dir: str) -> DataFrame:
             # DataFrame, so every entry in a manifest shares one schema
             # (cross-batch evolution is irrelevant — the NEWEST committed
             # schema is exactly what an empty delta should carry)
-            return spark.read.parquet(entries[0]).limit(0)
+            schema = parquet_store_schema(entries[0])
+            return spark.read.schema(schema).parquet(entries[0]).limit(0)
     raise ValueError(
         f"lake {lake_dir} has no non-empty committed batch to take a schema from"
     )
@@ -329,11 +402,12 @@ def read_via_manifest(spark: SparkSession, lake_dir: str, batch_id: int) -> Data
     """Warehouse-style read: 'COPY reads the manifest, never the folder'
     (README.md:429, 453-455). An empty manifest (all-error/empty flush) is
     a committed zero-row batch: returns an empty DataFrame with the
-    table's schema, not an error."""
+    table's schema, not an error. The manifest names the files and one
+    footer gives the schema, so building the frame launches no Spark job."""
     entries = [e["url"] for e in read_manifest(lake_dir, batch_id)["entries"]]
     if not entries:
         return _empty_like_lake(spark, lake_dir)
-    return spark.read.parquet(*entries)
+    return spark.read.schema(parquet_store_schema(entries[0])).parquet(*entries)
 
 
 def read_incremental(
@@ -354,7 +428,10 @@ def read_incremental(
     published reads as a zero-file batch. A manifest missing because the
     batch is still parked in ``_staged/`` raises instead — skipping it
     would silently drop the batch from every consumer that checkpoints
-    past it once it publishes (round-11 review)."""
+    past it once it publishes (round-11 review).
+
+    Planned on the driver like read_via_manifest: the schema is the first
+    file's footer, as Spark's own one-footer inference would take it."""
     files: list[str] = []
     for b in range(after_batch + 1, upto_batch + 1):
         try:
@@ -372,7 +449,7 @@ def read_incremental(
             continue  # dropped stage: the batch never existed to readers
     if not files:
         return _empty_like_lake(spark, lake_dir)
-    return spark.read.parquet(*files)
+    return spark.read.schema(parquet_store_schema(files[0])).parquet(*files)
 
 
 def register_lake_table(spark: SparkSession, name: str, lake_dir: str) -> None:

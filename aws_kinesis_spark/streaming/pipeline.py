@@ -21,6 +21,7 @@ from aws_kinesis_spark.sources.envelope import ENVELOPE_SCHEMA, decode_envelope
 from aws_kinesis_spark.sources.lake import (
     PARTITION_COLS,
     _list_parquet_files,
+    parquet_store_schema,
     purge_batch,
     split_errors,
     with_partition_cols,
@@ -290,6 +291,14 @@ def _latest_version_dir_below(table_dir: str, batch_id: int) -> str | None:
     return os.path.join(table_dir, versions[max(prev)]) if prev else None
 
 
+def _read_version(spark: SparkSession, vdir: str) -> DataFrame:
+    """One committed version dir, planned on the driver: the schema comes
+    from one footer (parquet_store_schema), so building the frame launches
+    no Spark job — the merge base of every versioned-store trigger and
+    every reader of the store."""
+    return spark.read.schema(parquet_store_schema(vdir)).parquet(vdir)
+
+
 def _commit_table_version(
     merged: DataFrame, table_dir: str, batch_id: int, write=None
 ) -> None:
@@ -393,7 +402,7 @@ def start_warehouse_upsert(
         deletes = collapsed.filter(F.col("op") == "D").select("id")
         base = _latest_version_dir_below(table_dir, batch_id)
         if base:
-            current = spark.read.parquet(base)
+            current = _read_version(spark, base)
         else:
             current = spark.createDataFrame([], schema)
         merged = staging_upsert(current, latest, ["id"]).join(
@@ -431,11 +440,12 @@ def read_warehouse_table(
         name = _pointer_dir(table_dir)
         if name is None:
             return spark.createDataFrame([], empty_schema or WAREHOUSE_SCHEMA)
-        return spark.read.parquet(os.path.join(table_dir, name))
-    vdir = _version_dir(table_dir, version)
-    if vdir is None:
-        raise ValueError(f"no committed version {version} in {table_dir}")
-    return spark.read.parquet(vdir)
+        vdir = os.path.join(table_dir, name)
+    else:
+        vdir = _version_dir(table_dir, version)
+        if vdir is None:
+            raise ValueError(f"no committed version {version} in {table_dir}")
+    return _read_version(spark, vdir)
 
 
 # DDL schema of the events fixture — the single definition shared by the
@@ -604,7 +614,7 @@ def start_scd2_maintenance(
             .select("id", "status", "op", "sequence_number")
         )
         base = _latest_version_dir_below(table_dir, batch_id)
-        versions = spark.read.parquet(base) if base else None
+        versions = _read_version(spark, base) if base else None
         merged = scd2_merge_increment(versions, decoded, ["id"], "sequence_number")
         _commit_table_version(merged, table_dir, batch_id)
 
@@ -786,9 +796,9 @@ def _compact_store(
     if total_bytes <= driver_fold_max_bytes:
         _fold_store_driver_side(srcs, tmp, part_col)
     else:
-        cols_df = spark.read.parquet(srcs[0])
-        cols = [c for c in cols_df.columns if c != part_col] + [part_col]
-        merged = _read_index_dirs(spark, srcs, cols)
+        schema = parquet_store_schema(srcs[0])
+        cols = [c for c in schema.fieldNames() if c != part_col] + [part_col]
+        merged = _read_index_dirs(spark, srcs, cols, schema)
         # cluster on the partition value before writing: one file per
         # bucket instead of files x source-dirs — every later reader opens
         # the compacted store, so open count is paid per read while this
@@ -883,14 +893,15 @@ def compact_dedup_index(spark: SparkSession, index_dir: str, upto: int) -> int:
 
 def read_dedup_corpus(spark: SparkSession, index_dir: str) -> DataFrame:
     """The landed corpus (docs + kept verdicts) across every live batch and
-    compaction dir — the reader face of start_dedup_ingest's store."""
-    df = _read_index_dirs(
-        spark,
-        _index_dirs(os.path.join(index_dir, "corpus")),
-        cols=["*"],
-    )
-    if df is None:
+    compaction dir — the reader face of start_dedup_ingest's store. Every
+    dir of the store shares one schema, read from one footer, so building
+    the frame launches no Spark job."""
+    dirs = _index_dirs(os.path.join(index_dir, "corpus"))
+    if not dirs:
         raise ValueError(f"dedup index {index_dir} has no landed corpus")
+    df = _read_index_dirs(
+        spark, dirs, cols=["*"], schema=parquet_store_schema(dirs[0])
+    )
     return df.drop("idb")
 
 

@@ -597,8 +597,10 @@ def build_records(
     # truncated the line). So the line carries as many entries as fit the
     # byte budget, slowest first — the queries that move the headline and
     # whose regressions matter — with "queries_omitted" naming the count
-    # that only BENCH_FULL.json holds. Additions-only: every pre-existing
-    # key of the compact record is unchanged.
+    # that only BENCH_FULL.json holds. The fill stops at the first entry
+    # that does not fit, so the map is a strict slowest-first prefix (a
+    # shorter, faster name after it never jumps the queue). Additions-only:
+    # every pre-existing key of the compact record is unchanged.
     compact["queries"] = {}
     compact["queries_omitted"] = len(results)  # worst-case width reserved
     base_len = len(json.dumps(compact))
@@ -608,9 +610,10 @@ def build_records(
         # an added entry costs exactly its inner '"name": v' plus ", ":
         # len(json.dumps({...})) = inner + 2 braces = inner + separator
         entry = len(json.dumps({name: results[name]}))
-        if used + entry <= budget:
-            compact["queries"][name] = results[name]
-            used += entry
+        if used + entry > budget:
+            break
+        compact["queries"][name] = results[name]
+        used += entry
     compact["queries_omitted"] = len(results) - len(compact["queries"])
     return full, compact
 

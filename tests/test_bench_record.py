@@ -19,10 +19,13 @@ COMPACT_BUDGET = 1900    # leave slack for the trailing newline
 
 
 def _synthetic_inputs(n_queries: int):
-    # worst-case realistic shapes: long registry names, 4-decimal floats,
-    # double-digit seconds on the slow end
+    # worst-case realistic shapes: long registry names of varied length
+    # (so a shorter, faster name could fit where a longer, slower one did
+    # not), 4-decimal floats, double-digit seconds on the slow end
     results = {
-        f"g{i:02d}_some_long_query_name_{i}": round(10.0 + i / 7.0, 4)
+        f"g{i:02d}_{'some_long_query_name_' * (1 + i % 3)}{i}": round(
+            10.0 + i / 7.0, 4
+        )
         for i in range(n_queries)
     }
     spread = {
@@ -78,11 +81,12 @@ def test_compact_line_fits_the_driver_tail_cap():
     for name, v in back["queries"].items():
         assert v == results[name]
     assert back["queries_omitted"] == 80 - len(back["queries"])
-    # slowest-first fill: every carried entry is >= every omitted one
-    if back["queries_omitted"]:
-        carried_min = min(back["queries"].values())
-        omitted = {n: v for n, v in results.items() if n not in back["queries"]}
-        assert carried_min >= max(omitted.values())
+    # slowest-first fill: every carried entry is >= every omitted one,
+    # also when a later, shorter name would still fit the budget
+    assert back["queries_omitted"]
+    carried_min = min(back["queries"].values())
+    omitted = {n: v for n, v in results.items() if n not in back["queries"]}
+    assert carried_min >= max(omitted.values())
 
 
 def test_compact_queries_map_covers_todays_headline():

@@ -82,6 +82,25 @@ def test_ann_recall_vs_bruteforce(spark):
     assert recall >= 0.5, f"ANN recall too low: {recall:.2f}"
 
 
+def test_ann_recall_check_ignores_a_duplicated_ann_row(spark):
+    """The recall self-check counts each (query_id, neighbor_id) hit once:
+    a repeated ANN row must change neither the exact-pair count nor the
+    verdict. Here the true recall is 2/4, under the 0.6 floor; counted
+    twice, the repeated hit would read as 3/5 and pass."""
+    from aws_kinesis_spark.plans.ext_queries import _ann_recall_check
+
+    schema = "query_id int, neighbor_id int"
+    exact = spark.createDataFrame([(0, n) for n in range(1, 5)], schema)
+    ann = spark.createDataFrame([(0, 1), (0, 2), (0, 9)], schema)
+    repeated = ann.unionByName(spark.createDataFrame([(0, 1)], schema))
+
+    def check(hits):
+        return [tuple(r) for r in _ann_recall_check(hits, exact, 0.6).collect()]
+
+    assert check(ann) == [(4, False)]
+    assert check(repeated) == check(ann)
+
+
 def test_lsh_geometry_probe_skips_nulls_and_is_optional(spark):
     """Round-12 review: the geometry probe sampled corpus.first() — a NULL
     vector in the first row skipped the tables*bits<=dim check entirely,

@@ -871,6 +871,44 @@ def test_empty_delta_reads_return_empty_not_error(spark, envelope, tmp_path):
     assert set(empty_batch.columns) == set(delta.columns)
 
 
+def test_store_schema_from_one_footer_matches_spark_inference(spark, envelope, tmp_path):
+    """The manifest and warehouse readers take their schema from one footer
+    on the driver (parquet_store_schema) instead of Spark's inference job.
+    Both must agree exactly — types, order, nullability — on a lake
+    manifest batch (decimal sequence numbers, timestamps, Spark's footer
+    metadata) and on a committed warehouse version."""
+    from pyspark.sql import types as T
+
+    from aws_kinesis_spark.sources.lake import parquet_store_schema
+    from aws_kinesis_spark.streaming.pipeline import (
+        WAREHOUSE_SCHEMA,
+        _commit_table_version,
+        _version_dir,
+    )
+
+    lake = str(tmp_path / "lake")
+    run_lake_batch(envelope, lake, batch_id=0, raw_backup=False)
+    files = [e["url"] for e in read_manifest(lake, 0)["entries"]]
+    lake_schema = spark.read.parquet(*files).schema
+    assert lake_schema["sequence_number"].dataType == T.DecimalType(38, 0)
+    assert isinstance(
+        lake_schema["arrival_ts"].dataType, (T.TimestampType, T.TimestampNTZType)
+    )
+    assert parquet_store_schema(files[0]) == lake_schema
+    assert read_via_manifest(spark, lake, 0).schema == lake_schema
+
+    wh = str(tmp_path / "wh")
+    os.makedirs(wh)
+    _commit_table_version(
+        spark.createDataFrame([(1, "open", None)], WAREHOUSE_SCHEMA), wh, 0
+    )
+    vdir = _version_dir(wh, 0)
+    assert parquet_store_schema(vdir) == spark.read.parquet(vdir).schema
+    # a directory with no data file has no schema to offer
+    (tmp_path / "empty").mkdir()
+    assert parquet_store_schema(str(tmp_path / "empty")) is None
+
+
 def test_pooled_sweep_many_leaves_single_remap_pass(spark, envelope, tmp_path):
     """Whole-lake maintenance fans leaf rewrites out on a thread pool and
     remaps every owning manifest in ONE pass: after a 3-batch sweep plus a

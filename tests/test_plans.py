@@ -628,6 +628,41 @@ def test_setsim_prefix_join_shuffles_prefix_only(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+def test_setsim_prefix_join_materialize_caches_then_checkpoints(spark, monkeypatch):
+    """G32, the shipped materialize=True path: the prefix table is CACHED
+    (one cache feeds both self-join sides), the verified pairs are eagerly
+    local-checkpointed, and the cache is released before returning — so
+    the returned plan is a scan of the checkpoint (lineage cut, no cached
+    relation left behind) and the answer equals the lazy form's."""
+    from aws_kinesis_spark.operators.dedup import setsim_prefix_join
+
+    docs = load(spark, SF, "documents")
+    frame = type(docs)  # the session's concrete DataFrame class
+    cached, checkpoints = [], []
+    real_cache, real_checkpoint = frame.cache, frame.localCheckpoint
+
+    def cache(self):
+        cached.append(real_cache(self))
+        return cached[-1]
+
+    def local_checkpoint(self, eager=True, *args, **kwargs):
+        checkpoints.append(eager)
+        return real_checkpoint(self, eager, *args, **kwargs)
+
+    monkeypatch.setattr(frame, "cache", cache)
+    monkeypatch.setattr(frame, "localCheckpoint", local_checkpoint)
+    df = setsim_prefix_join(docs, threshold=0.7)
+    monkeypatch.undo()
+    assert len(cached) == 1, f"{len(cached)} cache calls"
+    assert not cached[0].storageLevel.useMemory, "prefix cache outlived the call"
+    assert checkpoints[-1] is True, checkpoints
+    plan = _plan(df, "simple")
+    assert "ExistingRDD" in plan, plan
+    assert "InMemory" not in plan and "row_number" not in plan, plan
+    lazy = setsim_prefix_join(docs, threshold=0.7, materialize=False)
+    assert sorted(df.collect()) == sorted(lazy.collect())
+
+
 def test_histogram_bounds_fold_in_as_broadcast(spark):
     """D33: the min/max bounds must reach the bucket expression through a
     broadcast (no driver round-trip, no second scan pass materialized by

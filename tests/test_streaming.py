@@ -1538,9 +1538,11 @@ def test_compact_spark_and_driver_folds_produce_identical_stores(spark, tmp_path
     produce the SAME committed store — rows, hive layout, and readability
     through _read_index_dirs — or the dial would silently change results
     at the size boundary. The Spark path would otherwise be untested (all
-    fixtures fit under the dial)."""
+    fixtures fit under the dial). Either fold's footer also gives the
+    schema Spark's own inference reads (parquet_store_schema)."""
     import os
 
+    from aws_kinesis_spark.sources.lake import parquet_store_schema
     from aws_kinesis_spark.streaming.pipeline import (
         _compact_store,
         _index_dirs,
@@ -1569,6 +1571,8 @@ def test_compact_spark_and_driver_folds_produce_identical_stores(spark, tmp_path
         # hive layout: one bucket=V subdir per value, parquet inside
         sub = {d for d in os.listdir(os.path.join(root, "compact=2")) if "=" in d}
         assert sub == {f"bucket={v}" for v in range(4)}, (variant, sub)
+        folded = os.path.join(root, "compact=2")
+        assert parquet_store_schema(folded) == spark.read.parquet(folded).schema
         df = _read_index_dirs(spark, _index_dirs(root), cols=["doc_id", "bucket"])
         roots[variant] = {(r.doc_id, r.bucket) for r in df.collect()}
     assert roots["driver"] == roots["spark"]
@@ -2177,9 +2181,11 @@ def test_driver_side_store_write_matches_spark_layout(spark, tmp_path):
     Spark partitioned-write job. The layout contract is that READERS
     cannot tell the two writers apart: same hive partition dirs, same
     rows under both the schema-pinned per-trigger read and the
-    inference read the corpus reader uses."""
+    inference read, and the same schema from one footer
+    (parquet_store_schema, which the corpus reader passes to Spark)."""
     from pyspark.sql import functions as F
 
+    from aws_kinesis_spark.sources.lake import parquet_store_schema
     from aws_kinesis_spark.streaming.pipeline import _write_hive_driver_side
 
     df = spark.range(0, 500).select(
@@ -2205,8 +2211,101 @@ def test_driver_side_store_write_matches_spark_layout(spark, tmp_path):
     )
     a = spark.read.parquet(d_driver)
     b = spark.read.parquet(d_spark)
+    assert parquet_store_schema(d_driver) == a.schema
+    assert parquet_store_schema(d_spark) == b.schema
     cols = ["doc_id", "text", "kept", "idb"]
     assert sorted(a.select(cols).collect()) == sorted(b.select(cols).collect())
     # replay idempotency: rewriting the same dir converges, no stale files
     _write_hive_driver_side(df.filter(F.col("doc_id") < 100), d_driver, "idb")
     assert spark.read.parquet(d_driver).count() == 100
+
+
+def test_store_reads_plan_on_the_driver_without_spark_jobs(spark, tmp_path):
+    """Building a read of a store the engine wrote launches NO Spark job:
+    listing stays on the driver (the session's listing threshold sits above
+    every fan-out the engine produces, here 40 hash-bucket dirs where
+    Spark's default lists anything over 32 paths with a job) and the
+    schema comes from one footer (parquet_store_schema), never a
+    footer-inference job. Each such job is per-read scheduling with no
+    work behind it, paid on every trigger, restart and corpus read."""
+    from pyspark.sql import types as T
+
+    from aws_kinesis_spark.sources.lake import read_incremental, run_lake_batch
+    from aws_kinesis_spark.streaming.pipeline import (
+        _commit_table_version,
+        _index_dirs,
+        _read_index_dirs,
+        _write_hive_driver_side,
+        read_dedup_corpus,
+        read_warehouse_table,
+    )
+
+    n_buckets = 40
+    docs = spark.range(0, 200).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.lit("t"), F.col("id")).alias("text"),
+        (F.col("id") % 3 > 0).alias("kept"),
+        F.pmod("id", F.lit(n_buckets)).cast("int").alias("idb"),
+    )
+    index = str(tmp_path / "index")
+    corpus = os.path.join(index, "corpus")
+    # one driver-written and one Spark-written batch dir, as the trigger
+    # lays them out on either side of its byte gate
+    _write_hive_driver_side(docs, os.path.join(corpus, "batch=0"), "idb")
+    docs.write.partitionBy("idb").parquet(os.path.join(corpus, "batch=1"))
+    corpus_schema = T.StructType(
+        [
+            T.StructField("doc_id", T.LongType()),
+            T.StructField("text", T.StringType()),
+            T.StructField("kept", T.BooleanType()),
+            T.StructField("idb", T.IntegerType()),
+        ]
+    )
+    wh = str(tmp_path / "wh")
+    os.makedirs(wh)
+    _commit_table_version(
+        spark.sql(
+            "SELECT 1L AS id, 'open' AS status,"
+            " CAST(7 AS DECIMAL(38,0)) AS sequence_number"
+        ),
+        wh,
+        0,
+    )
+    lake = str(tmp_path / "lake")
+    orders = load(spark, SF, "orders").limit(200)
+    run_lake_batch(synthesize_envelope(orders), lake, batch_id=0, raw_backup=False)
+    run_lake_batch(
+        synthesize_envelope(orders, epoch=1), lake, batch_id=1, raw_backup=False
+    )
+
+    sc = spark.sparkContext
+
+    def jobs_to_build(build):
+        group = _uniq("plan-only")
+        sc.setJobGroup(group, "store read planning")
+        try:
+            df = build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group)), df
+
+    builds = {
+        "read_dedup_corpus": lambda: read_dedup_corpus(spark, index),
+        "_read_index_dirs": lambda: _read_index_dirs(
+            spark, _index_dirs(corpus), ["doc_id", "text", "idb"], corpus_schema
+        ),
+        "read_warehouse_table": lambda: read_warehouse_table(spark, wh),
+        "read_warehouse_table@v0": lambda: read_warehouse_table(spark, wh, 0),
+        "read_incremental": lambda: read_incremental(spark, lake, -1, 1),
+    }
+    rows = {}
+    for name, build in builds.items():
+        n_jobs, df = jobs_to_build(build)
+        assert n_jobs == 0, f"building {name} launched {n_jobs} Spark jobs"
+        rows[name] = df.count()
+    # the driver-planned frames still read every row
+    assert rows["read_dedup_corpus"] == rows["_read_index_dirs"] == 400
+    assert rows["read_warehouse_table"] == rows["read_warehouse_table@v0"] == 1
+    assert rows["read_incremental"] == sum(
+        read_manifest(lake, b)["recordCount"] for b in (0, 1)
+    )
