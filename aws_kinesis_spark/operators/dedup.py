@@ -239,7 +239,10 @@ def minhash_signatures(
 
 
 def _signature_array(
-    sets: DataFrame, id_col: str = "doc_id", num_hashes: int = 64
+    sets: DataFrame,
+    id_col: str = "doc_id",
+    num_hashes: int = 64,
+    cols: list[str] | None = None,
 ) -> DataFrame:
     """(id, __sig array<long>) minhash signatures from a precomputed
     (id, __sh shingle-array) frame — the array form, kept un-exploded for
@@ -247,18 +250,19 @@ def _signature_array(
     band hashes straight off ``__sig[i]`` in ONE selectExpr: per-trigger
     plan construction is driver-latency that a streaming flush pays every
     batch, and 64 element_at Column objects cost ~hundreds of py4j
-    round-trips vs one parsed SQL string)."""
+    round-trips vs one parsed SQL string). ``cols`` are the columns
+    carried beside ``__sig`` (default: the id alone)."""
     a_co, b_co = _minhash_coeffs(num_hashes)
 
     @F.pandas_udf("array<long>")
     def minhash_mins(hs: pd.Series) -> pd.Series:
         return _minhash_kernel(hs, a_co, b_co, num_hashes)
 
+    keep = [F.col(f"`{c}`") for c in (cols or [id_col])]
     hashed = sets.select(
-        F.col(id_col),
-        F.transform("__sh", lambda s: F.xxhash64(s)).alias("__hs"),
+        *keep, F.transform("__sh", lambda s: F.xxhash64(s)).alias("__hs")
     )
-    return hashed.select(F.col(id_col), minhash_mins("__hs").alias("__sig"))
+    return hashed.select(*keep, minhash_mins("__hs").alias("__sig"))
 
 
 def _signatures_from_shingle_sets(
@@ -1090,21 +1094,39 @@ def band_rows(
     consumes the shingles exactly once, so materializing them would be a
     pure extra job per micro-batch."""
     docs = docs.filter(F.size(F.split(F.col(text_col), " ")) >= shingle_n)
-    sets = docs.select(
-        F.col(id_col), shingles(F.col(text_col), shingle_n).alias("__sh")
-    )
-    sigs = _signature_array(sets, id_col, num_hashes)
+    return docs_with_band_hashes(
+        docs.select(id_col, text_col), text_col, id_col, num_hashes, bands, shingle_n
+    ).selectExpr(f"`{id_col}`", "posexplode(__bands) AS (band, bh)")
+
+
+def docs_with_band_hashes(
+    docs: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    num_hashes: int = 64,
+    bands: int = 16,
+    shingle_n: int = 3,
+) -> DataFrame:
+    """Every column of ``docs`` plus ``__bands``: the doc's ``bands`` band
+    hashes in band order, NULL for a doc shorter than one shingle — the
+    un-exploded band_rows (row ``i`` of ``__bands`` is band_rows'
+    ``(band=i, bh)``), for a caller that collects a batch once and needs
+    its texts beside its band rows. The band hashes are ONE parsed SQL
+    string instead of ~bands*(r+1) Column round-trips: a streaming flush
+    builds this per micro-batch trigger, where driver-side plan
+    construction is serial latency (values identical — xxhash64 over the
+    same longs in the same order as the exploded h{i} form)."""
     r = _check_banding(num_hashes, bands)
-    # one parsed SQL string instead of ~bands*(r+1) Column round-trips:
-    # this runs per micro-batch trigger in g35, where driver-side plan
-    # construction is serial latency (values identical — xxhash64 over the
-    # same longs in the same order as the exploded h{i} form)
     band_arr = ",".join(
         "xxhash64(" + ",".join(f"__sig[{b * r + j}]" for j in range(r)) + ")"
         for b in range(bands)
     )
+    sets = docs.select("*", shingles(F.col(text_col), shingle_n).alias("__sh"))
+    sigs = _signature_array(sets, id_col, num_hashes, cols=docs.columns)
     return sigs.selectExpr(
-        f"`{id_col}`", f"posexplode(array({band_arr})) AS (band, bh)"
+        *[f"`{c}`" for c in docs.columns],
+        f"CASE WHEN size(split(`{text_col}`, ' ')) >= {shingle_n}"
+        f" THEN array({band_arr}) END AS __bands",
     )
 
 
@@ -1162,6 +1184,59 @@ def verify_pairs_against_texts(
     return verified.filter(F.col("jaccard") >= threshold).select(
         "id_a", "id_b", F.round("jaccard", 4).alias("jaccard")
     )
+
+
+def shingle_set(text: str | None, shingle_n: int = 3) -> frozenset[str]:
+    """Driver twin of ``functions.text.shingles``: the distinct n-grams of
+    ``text.split(' ')`` (the ``split(text, ' ')`` tokenizer, empty tokens
+    kept), each joined by ``' '`` as ``concat_ws(' ', ...)`` joins them;
+    empty for a NULL text or one with fewer than ``shingle_n`` tokens."""
+    if text is None:
+        return frozenset()
+    t = text.split(" ")
+    return frozenset(
+        " ".join(t[i : i + shingle_n]) for i in range(len(t) - shingle_n + 1)
+    )
+
+
+def jaccard_of_sets(a: frozenset, b: frozenset) -> float:
+    """Driver twin of ``_exact_jaccard_on_pairs``' value:
+    ``size(array_intersect(a, b)) / (size(a) + size(b) - inter)`` in
+    double precision, 0.0 when the union is empty."""
+    inter = len(a & b)
+    union = len(a) + len(b) - inter
+    return inter / union if union > 0 else 0.0
+
+
+def verify_pairs_on_driver(
+    pairs,
+    texts: dict,
+    threshold: float = 0.7,
+    shingle_n: int = 3,
+) -> set:
+    """The ``id_b`` side of every candidate pair whose exact Jaccard is at
+    least ``threshold`` (unrounded), computed in Python: the driver twin
+    of ``verify_pairs_against_texts`` for a caller already holding the
+    pairs and their texts on the driver. ``pairs`` iterates (id_a, id_b);
+    ``texts`` maps an id to the list of its texts — an id landed more than
+    once joins every copy, as the Spark join does, and the pair passes if
+    any combination does. Each text is shingled once."""
+    sets: dict = {}
+
+    def shingled(i):
+        if i not in sets:
+            sets[i] = [shingle_set(t, shingle_n) for t in texts.get(i, ())]
+        return sets[i]
+
+    dropped = set()
+    for a, b in pairs:
+        if b not in dropped and any(
+            jaccard_of_sets(x, y) >= threshold
+            for x in shingled(a)
+            for y in shingled(b)
+        ):
+            dropped.add(b)
+    return dropped
 
 
 def _containment_candidates(

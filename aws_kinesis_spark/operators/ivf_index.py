@@ -187,7 +187,7 @@ def _write_cells_batch(assigned: DataFrame, cells_dir: str, batch_id: int) -> No
     shutil.rmtree(tmp, ignore_errors=True)
     est = _input_bytes_estimate(assigned)
     if est is not None and est <= _DRIVER_CELLS_WRITE_MAX_BYTES:
-        _write_hive_driver_side(assigned, tmp, "cell")
+        _write_hive_driver_side(assigned.toArrow(), tmp, "cell")
     else:
         (
             assigned.repartition(F.col("cell"))

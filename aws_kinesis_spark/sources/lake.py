@@ -455,8 +455,13 @@ def read_incremental(
 def register_lake_table(spark: SparkSession, name: str, lake_dir: str) -> None:
     """Catalog registration + partition discovery (README.md:121, 163,
     541-549): the crawler's job is a view over the partition-discovering
-    parquet read (README.md:446 — 'no Glue needed')."""
-    spark.read.parquet(os.path.join(lake_dir, "data")).createOrReplaceTempView(name)
+    parquet read (README.md:446 — 'no Glue needed'). The schema comes from
+    one footer (parquet_store_schema), so registering launches no Spark
+    job; Spark infers it only when no footer can answer."""
+    data = os.path.join(lake_dir, "data")
+    schema = parquet_store_schema(data)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    reader.parquet(data).createOrReplaceTempView(name)
 
 
 @dataclass

@@ -10,7 +10,6 @@ streaming queries with separate checkpoints on the same source.
 from __future__ import annotations
 
 import os
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -27,20 +26,6 @@ from aws_kinesis_spark.sources.lake import (
     with_partition_cols,
     write_manifest,
 )
-
-
-# Opt-in per-trigger phase profiler (scripts/profile_g35.py): when a list
-# is installed here, start_dedup_ingest's flush appends
-# (batch_id, phase, seconds) rows so a profiling run can attribute the
-# trigger's wall time to its serial steps (guide §1 / VERDICT r14 #2 —
-# the 9 s g35 floor needs a stage-level breakdown, not a hypothesis).
-# None in production: the hook costs one attribute check per phase.
-_PROFILE_SINK: list | None = None
-
-
-def _prof(batch_id: int, phase: str, seconds: float) -> None:
-    if _PROFILE_SINK is not None:
-        _PROFILE_SINK.append((batch_id, phase, round(seconds, 4)))
 
 
 def _file_stream(
@@ -746,6 +731,12 @@ def _sweep_superseded_dirs(root: str, upto: int) -> None:
             shutil.rmtree(os.path.join(root, d), ignore_errors=True)
 
 
+# Input bytes per task for the store folds and the dedup trigger's
+# signing and shuffles: partition counts scale with the data they carry,
+# never with a constant tuned for local mode or for the cluster.
+_TASK_INPUT_BYTES = 256 << 10
+
+
 def _compact_store(
     spark: SparkSession,
     root: str,
@@ -802,10 +793,17 @@ def _compact_store(
         # cluster on the partition value before writing: one file per
         # bucket instead of files x source-dirs — every later reader opens
         # the compacted store, so open count is paid per read while this
-        # shuffle is paid once per compaction
-        merged.repartition(F.col(part_col)).write.partitionBy(part_col).mode(
-            "overwrite"
-        ).parquet(tmp)
+        # shuffle is paid once per compaction. The fold's own task count,
+        # never the session's: one per _TASK_INPUT_BYTES of input, capped
+        # at the partition values on disk, past which a hash-clustered
+        # write only adds empty tasks
+        values = {
+            d for s in srcs for d in os.listdir(s) if d.startswith(part_col + "=")
+        }
+        n_tasks = max(1, min(len(values), total_bytes // _TASK_INPUT_BYTES))
+        merged.repartition(n_tasks, F.col(part_col)).write.partitionBy(
+            part_col
+        ).mode("overwrite").parquet(tmp)
     os.replace(tmp, final)
     _sweep_superseded_dirs(root, upto)
     return 1
@@ -835,31 +833,39 @@ def _fold_store_driver_side(srcs: list[str], tmp: str, part_col: str) -> None:
     )
 
 
-# Upper bound on a micro-batch's INPUT bytes for the driver-side store
-# write (the _fold_store_driver_side / centroid-IO reasoning): below it,
-# the per-trigger bands/corpus dirs are laid out with pyarrow from one
-# bounded Arrow collect — no Spark write job, no shuffle, no
-# dynamic-partition commit on the trigger's critical path. Above it the
+
+
+# Upper bound on a micro-batch's INPUT bytes for the driver side of a
+# per-trigger store write (the _fold_store_driver_side / centroid-IO
+# reasoning): below it, the per-trigger bands/corpus dirs are laid out with
+# pyarrow from one bounded Arrow collect — no Spark write job, no shuffle,
+# no dynamic-partition commit on the trigger's critical path. Above it the
 # write stays a clustered Spark job (real data work belongs on the
 # cluster). The gate measures the batch's compressed input; the collect
-# holds the decoded rows once in driver memory — same headroom argument
-# as _compact_store's driver_fold_max_bytes.
+# holds the decoded rows once in driver memory — same headroom argument as
+# _compact_store's driver_fold_max_bytes. start_dedup_ingest also gates
+# its driver-side probe of the standing band index on it.
 _DRIVER_WRITE_MAX_BYTES = 32 << 20
 
+# Upper bound on the rows of a per-trigger side the dedup trigger treats
+# as small: broadcast on the Spark shape, held and joined on the driver
+# shape (batch band rows, candidate pairs).
+_SMALL_SIDE_MAX_ROWS = 2_000_000
 
-def _write_hive_driver_side(df: DataFrame, out_dir: str, part_col: str) -> None:
-    """KB/MB-scale per-trigger store write without a Spark write job:
-    collect the frame as ONE Arrow table (the caller byte-gates this) and
-    lay out the same hive-partitioned snappy parquet dirs the Spark
-    writer produces (the _fold_store_driver_side layout contract —
-    readers cannot tell which path wrote the store). Replay-idempotent
-    like mode("overwrite"): the dir is wiped and rewritten."""
+
+def _write_hive_driver_side(tbl, out_dir: str, part_col: str) -> None:
+    """KB/MB-scale per-trigger store write without a Spark write job: lay
+    out an Arrow table the caller already holds (and byte-gates) as the
+    same hive-partitioned snappy parquet dirs the Spark writer produces
+    (the _fold_store_driver_side layout contract — readers cannot tell
+    which path wrote the store). Replay-idempotent like mode("overwrite"):
+    the dir is wiped and rewritten, and it exists afterwards even for an
+    empty table, as the Spark writer's does."""
     import shutil
 
     import pyarrow as pa
     import pyarrow.dataset as pds
 
-    tbl = df.toArrow()
     shutil.rmtree(out_dir, ignore_errors=True)
     pds.write_dataset(
         tbl,
@@ -870,6 +876,7 @@ def _write_hive_driver_side(df: DataFrame, out_dir: str, part_col: str) -> None:
         ),
         existing_data_behavior="overwrite_or_ignore",
     )
+    os.makedirs(out_dir, exist_ok=True)
 
 
 def compact_dedup_index(spark: SparkSession, index_dir: str, upto: int) -> int:
@@ -891,18 +898,38 @@ def compact_dedup_index(spark: SparkSession, index_dir: str, upto: int) -> int:
         return sum(f.result() for f in futs)
 
 
+def _files_in_partitions(dirs: list[str], part_col: str, values) -> list[str]:
+    """Data files under the ``<part_col>=<v>`` subdirs of a store's live
+    dirs, for ``v`` in ``values`` — a partition-pruned listing on the
+    driver."""
+    want = {f"{part_col}={v}" for v in values}
+    return [
+        f
+        for d in dirs
+        for f in _list_parquet_files(d)
+        if os.path.basename(os.path.dirname(f)) in want
+    ]
+
+
 def read_dedup_corpus(spark: SparkSession, index_dir: str) -> DataFrame:
     """The landed corpus (docs + kept verdicts) across every live batch and
     compaction dir — the reader face of start_dedup_ingest's store. Every
     dir of the store shares one schema, read from one footer, so building
-    the frame launches no Spark job."""
+    the frame launches no Spark job. The live dirs' data files are read as
+    ONE flat scan (file paths name no partition dirs, and the ``idb``
+    bucket is not a reader column), not a union of per-dir scans: one scan
+    node to plan and one set of tasks to schedule, however many dirs the
+    store has between compactions."""
+    from pyspark.sql.types import StructType
+
     dirs = _index_dirs(os.path.join(index_dir, "corpus"))
     if not dirs:
         raise ValueError(f"dedup index {index_dir} has no landed corpus")
-    df = _read_index_dirs(
-        spark, dirs, cols=["*"], schema=parquet_store_schema(dirs[0])
-    )
-    return df.drop("idb")
+    schema = parquet_store_schema(dirs[0])
+    files = [f for d in dirs for f in _list_parquet_files(d)]
+    return spark.read.schema(
+        StructType([f for f in schema.fields if f.name != "idb"])
+    ).parquet(*files)
 
 
 def start_dedup_ingest(
@@ -922,33 +949,62 @@ def start_dedup_ingest(
     jaccard(i, j) >= threshold was ingested at or before i's batch.
 
     Per batch: band rows for the BATCH only (the standing corpus is never
-    re-signed) — the file source hands a micro-batch over as ONE input
-    partition, so the signing input is repartitioned to the cluster's
-    parallelism first (the Arrow kernel is per-partition; unspread it runs
-    on a single core). Candidates come from one equi-join of batch bands
-    against (standing ∪ batch) bands with the BATCH side broadcast — the
-    standing index never shuffles, the stream-static asymmetry that holds
-    at any corpus size. Exact-Jaccard verify re-shingles only the
-    candidate ids' texts — O(batch + candidates), never O(corpus).
+    re-signed, and signing always runs on Spark, so every band hash is
+    Spark's ``xxhash64`` whichever shape wrote it). Candidates are the
+    batch band rows joined on (band, bh) against standing ∪ batch band
+    rows: the distinct (id_a, id_b) with id_a < id_b, id_b in the batch. The
+    exact-Jaccard verify re-shingles only the candidate ids' texts: the
+    batch's own, plus the candidates' ``idb`` buckets of the landed corpus
+    — O(batch + candidates), never O(corpus).
+
+    Two shapes of one trigger, one gate (``_DRIVER_WRITE_MAX_BYTES``):
+
+    - DRIVER shape, when the batch's input bytes are known and under the
+      gate and the standing ``bands`` files in the batch's touched
+      ``bucket=`` dirs are too: one Spark collect signs the batch (its
+      docs come back beside their band hashes) and is the trigger's only
+      Spark work. The standing probe, candidate join, verify
+      (dedup.verify_pairs_on_driver), verdicts and both store writes run
+      on the driver with pyarrow and Python. Driver memory holds the
+      decoded batch (< 32 MB of input), its band rows (16 per doc), the
+      standing rows matching the batch's band hashes (read from < 32 MB
+      of band files), the candidate pairs and their texts. The candidate
+      join's row count is checked before it runs: above
+      ``_SMALL_SIDE_MAX_ROWS`` (2,000,000) the trigger takes the Spark
+      shape instead, so the pairs and their texts are bounded too.
+    - SPARK shape otherwise: sourceless batches (Kinesis: no byte
+      metadata), batches over the gate, standing stores too large to
+      probe on the driver and hot buckets past the pair bound. The batch
+      is cached and signed across the cluster; the candidate join
+      broadcasts the batch side (the standing index never shuffles); the
+      verify joins texts by id; the stores are written by a clustered
+      Spark write (or driver-side under the gate). Its shuffles run at a
+      trigger-scoped ``spark.sql.shuffle.partitions`` derived from the
+      batch bytes, restored when the trigger ends.
 
     Scale posture of the STATE (the part that outlives any batch):
     - ``bands/…/bucket=<bh%K>`` hash-bucketed layout: the standing-band
       read is partition-pruned to the bucket values the batch actually
       emits, so a small micro-batch scans a fraction of the index instead
-      of all of it; the bucket list is collected driver-side, bounded by
-      ``n_buckets`` ints.
+      of all of it.
     - ``corpus/…/idb=<doc_id%K>``: verify texts are fetched by the
-      CANDIDATES' id-buckets only (pruned at planning), never by unioning
-      the whole landed corpus.
+      CANDIDATES' id-buckets only, never by reading the whole landed
+      corpus.
     - every ``compact_every`` batches the per-batch dirs fold into one
       ``compact=M`` dir (compact_dedup_index, run at trigger start for
       prior batches only, so a replayed trigger re-runs it idempotently)
       — listing/open cost stays O(compact_every), not O(stream lifetime).
     All stores stay overwrite-idempotent per batch id, so a replayed
     micro-batch converges to the same verdicts."""
+    import numpy as np
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     from aws_kinesis_spark.operators.dedup import (
         band_rows,
+        docs_with_band_hashes,
         verify_pairs_against_texts,
+        verify_pairs_on_driver,
     )
 
     bands_dir = os.path.join(index_dir, "bands")
@@ -958,8 +1014,6 @@ def start_dedup_ingest(
 
     # both index stores have schemas known at stream start — pass them to
     # every per-trigger read so no trigger pays a footer-inference job
-    from pyspark.sql import types as T
-
     id_type = doc_stream.schema["doc_id"].dataType
     bands_schema = T.StructType(
         [
@@ -976,6 +1030,7 @@ def start_dedup_ingest(
             T.StructField("idb", T.IntegerType()),
         ]
     )
+    bands_arrow = to_arrow_schema(bands_schema)
 
     # runtime-adaptive trigger shape: the fraction of buckets the PREVIOUS
     # trigger touched. Steady-state streams have stable batch shapes, so
@@ -985,91 +1040,175 @@ def start_dedup_ingest(
     # conservative write-first shape on restart.
     _coverage = {"frac": 0.0}
 
-    def flush(batch_df: DataFrame, batch_id: int) -> None:
-        # Per-trigger latency here is job-count bound (a micro-batch is
-        # small; every barrier costs more than its work), so the trigger
-        # keeps its serial Spark actions to candidate-bucket collect +
-        # corpus write (plus, on trickle batches only, the bounded
-        # bucket-collect that feeds the standing read's pruning — bulk
-        # batches skip it, see `bulk` below), with the bands write and
-        # compaction overlapped on threads (compaction only touches dirs
-        # < batch_id - 1, which nothing in this trigger reads until the
-        # standing-band listing — joined before that point). Reused
-        # frames are CACHED, not checkpointed
-        # (localCheckpoint plans physically at build time — ~0.2 s of
-        # serial driver latency per call that a per-trigger path pays
-        # every batch; cache registration is free and the first job that
-        # touches the frame materializes it). The finally block
-        # unpersists, so trigger frames never accumulate in the cache
-        # across a long stream.
-        from concurrent.futures import ThreadPoolExecutor
+    def on_driver(batch_df, batch_id, in_bytes, compact_f, pool) -> bool:
+        """The driver shape; False (nothing written) when the standing
+        probe or the candidate join is over its bound."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.dataset as pds
 
+        # one signing task per _TASK_INPUT_BYTES of input, as on the Spark
+        # shape; a trickle batch signs in the partitions it arrived in
+        n_sign = min(
+            batch_df.sparkSession.sparkContext.defaultParallelism,
+            in_bytes // _TASK_INPUT_BYTES,
+        )
+        src = batch_df.repartition(n_sign) if n_sign > 1 else batch_df
+        signed = docs_with_band_hashes(src).toArrow()
+        docs = signed.drop_columns(["__bands"])
+        # explode to band rows: element i of a doc's __bands is band i
+        lists = signed.column("__bands").combine_chunks()
+        lens = pc.list_value_length(lists).fill_null(0).to_numpy()
+        bh = pc.list_flatten(lists).to_numpy()
+        band = np.arange(len(bh)) - np.repeat(np.cumsum(lens) - lens, lens)
+        bucket = np.mod(bh, n_buckets).astype(np.int32)
+        batch_bands = pa.Table.from_arrays(
+            [
+                pc.take(
+                    docs.column("doc_id").combine_chunks(),
+                    pc.list_parent_indices(lists),
+                ),
+                pa.array(band.astype(np.int32)),
+                pa.array(bh, pa.int64()),
+                pa.array(bucket),
+            ],
+            schema=bands_arrow,
+        )
+        touched = np.unique(bucket)
+        if compact_f is not None:
+            compact_f.result()  # dir layout must be stable before listing
+        standing_files = _files_in_partitions(
+            _index_dirs(bands_dir, upto_exclusive=batch_id), "bucket", touched
+        )
+        standing_bytes = sum(os.path.getsize(f) for f in standing_files)
+        if standing_bytes >= _DRIVER_WRITE_MAX_BYTES:
+            return False
+        # the standing rows the batch's band hashes can meet, then the
+        # candidate join's size before it is built
+        n_side = batch_bands.drop_columns(["bucket"])
+        standing = pds.dataset(
+            standing_files, schema=n_side.schema, format="parquet"
+        ).to_table(filter=pc.field("bh").isin(pa.array(np.unique(bh))))
+        m_side = pa.concat_tables([standing, n_side]).rename_columns(
+            ["id_a", "band", "bh"]
+        )
+        per_key = m_side.group_by(["band", "bh"]).aggregate([("id_a", "count")])
+        joined = n_side.join(per_key, ["band", "bh"]).column("id_a_count")
+        if (pc.sum(joined).as_py() or 0) > _SMALL_SIDE_MAX_ROWS:
+            return False
+        pairs = (
+            n_side.join(m_side, ["band", "bh"])
+            .filter(pc.field("id_a") < pc.field("doc_id"))
+            .group_by(["id_a", "doc_id"])
+            .aggregate([])
+        )
+        id_a = pairs.column("id_a").to_pylist()
+        id_b = pairs.column("doc_id").to_pylist()
+        texts: dict = {}
+
+        def add_texts(tbl) -> None:
+            cols = (tbl.column(c).to_pylist() for c in ("doc_id", "text"))
+            for i, t in zip(*cols):
+                texts.setdefault(i, []).append(t)
+
+        if id_a:
+            need = pa.array(
+                list(set(id_a) | set(id_b)), docs.schema.field("doc_id").type
+            )
+            text_cols = docs.select(["doc_id", "text"])
+            add_texts(text_cols.filter(pc.is_in(text_cols.column("doc_id"), need)))
+            corpus_files = _files_in_partitions(
+                _index_dirs(corpus_dir, upto_exclusive=batch_id),
+                "idb",
+                {i % n_buckets for i in id_a},
+            )
+            add_texts(
+                pds.dataset(
+                    corpus_files, schema=text_cols.schema, format="parquet"
+                ).to_table(filter=pc.field("doc_id").isin(need))
+            )
+        dropped = verify_pairs_on_driver(zip(id_a, id_b), texts, threshold)
+        bands_f = pool.submit(
+            _write_hive_driver_side,
+            batch_bands,
+            os.path.join(bands_dir, f"batch={batch_id}"),
+            "bucket",
+        )
+        ids = docs.column("doc_id")
+        # the Spark shape's using-join column order: doc_id first
+        out = docs.select(
+            ["doc_id"] + [c for c in docs.column_names if c != "doc_id"]
+        )
+        out = out.append_column(
+            "kept", pc.invert(pc.is_in(ids, pa.array(list(dropped), ids.type)))
+        ).append_column(
+            "idb", pa.array(np.mod(ids.to_numpy(), n_buckets).astype(np.int32))
+        )
+        _write_hive_driver_side(
+            out, os.path.join(corpus_dir, f"batch={batch_id}"), "idb"
+        )
+        bands_f.result()
+        _coverage["frac"] = len(touched) / max(n_buckets, 1)
+        return True
+
+    def on_spark(batch_df, batch_id, in_bytes, has_standing, compact_f, pool) -> None:
+        """The Spark shape. Per-trigger latency here is job-count bound (a
+        micro-batch is small; every barrier costs more than its work), so
+        the serial Spark actions are the candidate-bucket collect + corpus
+        write (plus, on trickle batches only, the bounded bucket-collect
+        that feeds the standing read's pruning — bulk batches skip it),
+        with the bands write and compaction overlapped on threads
+        (compaction only touches dirs < batch_id - 1, which nothing in
+        this trigger reads until the standing-band listing — joined before
+        that point). Reused frames are CACHED, not checkpointed
+        (localCheckpoint plans physically at build time — serial driver
+        latency per trigger; cache registration is free and the first job
+        that touches the frame materializes it), and unpersisted when the
+        trigger ends."""
         spark = batch_df.sparkSession
-        pool = ThreadPoolExecutor(max_workers=2)
         cached: list[DataFrame] = []
-        t_flush0 = time.perf_counter()
         prev_parts: str | None = None  # set iff the trigger narrows the conf
 
         def keep(df: DataFrame) -> DataFrame:
             # caching the batch/bands beats recompute decisively even for
-            # KB-scale batches (interleaved A/B r11: 7.98 vs 9.90 s min —
-            # without it the Arrow signing runs once per consumer)
+            # KB-scale batches (without it the Arrow signing runs once per
+            # consumer)
             cached.append(df.cache())
             return df
 
         try:
-            # probe the standing store BEFORE submitting the concurrent
-            # compaction: the probe is one listdir, but a listdir racing
-            # the compaction thread's rename+sweep can capture pre-rename
-            # dir names whose parquet walk then reads empty — transiently
-            # misclassifying a trickle trigger as bulk and losing the
-            # bucket pruning that branch exists for (round-13 review).
-            # Sequenced before the submit it is race-free, and compaction
-            # never changes store EMPTINESS, only its dir layout.
-            has_standing = bool(_index_dirs(bands_dir, upto_exclusive=batch_id))
-            compact_f = None
-            if compact_every and batch_id and batch_id % compact_every == 0:
-                compact_f = pool.submit(
-                    compact_dedup_index, spark, index_dir, upto=batch_id - 1
-                )
             docs = keep(batch_df)
             # the file source delivers the batch as one partition per input
             # file — spread the Arrow signing kernel across the executors
             # (a 2 KB/doc shuffle buys a parallelism-times-faster UDF pass).
-            # The spread is BYTE-PROPORTIONAL (~256 KB of input per signing
-            # task, floor 4): an explicit repartition(N) is pinned —
-            # AQE cannot coalesce REPARTITION_BY_NUM — so sizing it to the
-            # cluster for a KB-scale trickle batch would pin dozens of
-            # near-empty tasks into every downstream stage of the trigger.
-            # A GB-scale batch still fans to the full parallelism.
+            # The spread is BYTE-PROPORTIONAL (one signing task per
+            # _TASK_INPUT_BYTES of input, floor 4): an explicit
+            # repartition(N) is pinned — AQE cannot coalesce
+            # REPARTITION_BY_NUM — so sizing it to the cluster for a
+            # KB-scale batch would pin dozens of near-empty tasks into
+            # every downstream stage of the trigger. A GB-scale batch
+            # still fans to the full parallelism.
             par = spark.sparkContext.defaultParallelism
-            in_bytes = _batch_input_bytes(checkpoint_dir, batch_id)
             sign_par = (
                 par
                 if in_bytes is None
-                else min(par, max(4, in_bytes // (256 << 10)))
+                else min(par, max(4, in_bytes // _TASK_INPUT_BYTES))
             )
             # Trigger-scoped SHUFFLE partition count, derived from the
-            # batch's input bytes exactly like sign_par (guide §2.2/§2.5:
-            # partition counts must scale with the data, not sit at a
-            # constant tuned for either local mode or the cluster). Every
-            # shuffle stage inside the trigger carries O(batch+candidates)
-            # rows — the standing index only ever enters through broadcast
-            # or pruned scans — so a KB-scale trickle batch at the
-            # session-wide count pays tens of near-empty tasks per stage,
-            # pure scheduling latency at trigger rate. Interleaved A/B at
-            # sf0.1 (145 KB quarters, min-of-3 per arm, one process):
-            # 13.55 s at 32 partitions vs 9.89 s at 8 vs 10.05 s at 4 —
-            # the floor of the byte formula. A GB-scale catch-up batch
-            # derives the session value unchanged (min with it), so the
-            # dial never CAPS real work. Restored in the finally block;
-            # like the partitionOverwriteMode note in pipeline_queries,
-            # this is a session-conf write from the micro-batch thread —
+            # batch's input bytes exactly like sign_par (partition counts
+            # must scale with the data). Every shuffle stage inside the
+            # trigger carries O(batch+candidates) rows — the standing index
+            # only ever enters through broadcast or pruned scans — so a
+            # small batch at the session-wide count pays tens of near-empty
+            # tasks per stage. A GB-scale catch-up batch derives the
+            # session value unchanged (min with it), so the dial never
+            # CAPS real work. Restored in the finally block; this is a
+            # session-conf write from the micro-batch thread —
             # single-stream-per-session posture (the foreachBatch worker
             # and its two pool threads all want the trigger's value).
             if in_bytes is not None:
                 cur = spark.conf.get("spark.sql.shuffle.partitions")
-                trig = min(int(cur), max(4, in_bytes // (256 << 10)))
+                trig = min(int(cur), max(4, in_bytes // _TASK_INPUT_BYTES))
                 if trig < int(cur):
                     prev_parts = cur
                     spark.conf.set("spark.sql.shuffle.partitions", str(trig))
@@ -1078,46 +1217,36 @@ def start_dedup_ingest(
                     "bucket", F.pmod("bh", F.lit(n_buckets)).cast("int")
                 )
             )
-            # The bands write is clustered by bucket so each batch lands
-            # ~one file per bucket (the signing repartition would
-            # otherwise fan every bucket across sign_par files and bloat
-            # the standing index's listing/open cost).
             batch_bands_dir = os.path.join(bands_dir, f"batch={batch_id}")
-            # KB/MB-scale batches write both stores driver-side (one Arrow
-            # collect each, pyarrow hive layout — no Spark write job, no
-            # per-trigger dynamic-partition commit); see
-            # _write_hive_driver_side. Byte-gated: a GB-scale catch-up
-            # batch keeps the clustered Spark write.
+            # batches under the byte gate write both stores driver-side
+            # (one Arrow collect each, pyarrow hive layout — no Spark write
+            # job, no per-trigger dynamic-partition commit)
             driver_write = (
                 in_bytes is not None and in_bytes <= _DRIVER_WRITE_MAX_BYTES
             )
 
             def _write_bands() -> None:
-                t0 = time.perf_counter()
                 if driver_write:
-                    _write_hive_driver_side(bb, batch_bands_dir, "bucket")
+                    _write_hive_driver_side(bb.toArrow(), batch_bands_dir, "bucket")
                 else:
+                    # clustered by bucket so each batch lands ~one file per
+                    # bucket (the signing repartition would otherwise fan
+                    # every bucket across sign_par files)
                     (
                         bb.repartition(F.col("bucket"))
                         .write.partitionBy("bucket")
                         .mode("overwrite")
                         .parquet(batch_bands_dir)
                     )
-                _prof(batch_id, "bands_write_thread", time.perf_counter() - t0)
 
-            # Trigger shape from DRIVER METADATA only (no Spark job): the
-            # micro-batch's input bytes via the file source's WAL for this
-            # batch (see _batch_input_bytes — inputFiles() is empty for
-            # streaming file sources). A batch carrying >= 64 KB of
-            # documents per bucket on average touches ~every bucket, so
-            # bucket-pruning the standing read buys nothing there. A
-            # sourceless batch (no WAL -> None) always takes the trickle
-            # branch, whose row-count gate bounds the broadcast.
-            # an EMPTY standing index (first trigger, or restart before
-            # anything landed) makes both trickle collects pure waste:
-            # there is no standing read to prune and no prior corpus to
-            # fetch — run it as one action (has_standing was probed above,
-            # before the compaction submit, so the listdir cannot race it).
+            # A batch carrying >= 64 KB of documents per bucket on average
+            # touches ~every bucket, so bucket-pruning the standing read
+            # buys nothing there. A sourceless batch (no WAL -> None)
+            # always takes the trickle branch, whose row-count gate bounds
+            # the broadcast. An EMPTY standing index (first trigger, or
+            # restart before anything landed) makes both trickle collects
+            # pure waste: there is no standing read to prune and no prior
+            # corpus to fetch.
             bulk = not has_standing or (
                 in_bytes is not None
                 and (in_bytes >= n_buckets * (64 << 10) or _coverage["frac"] >= 0.75)
@@ -1130,8 +1259,7 @@ def start_dedup_ingest(
             if bulk:
                 # BULK batch: it will touch ~every bucket, so the
                 # bucket-collect job AND the standing-read pruning are
-                # both useless — skip them; serial chain = candidates +
-                # corpus write only
+                # both useless — skip them
                 batch_buckets = None  # standing read stays unpruned
                 # no byte metadata (sourceless first trigger) -> no forced
                 # broadcast; AQE decides from runtime stats
@@ -1139,20 +1267,16 @@ def start_dedup_ingest(
             else:
                 # TRICKLE batch (or a non-file source with no byte
                 # metadata): one bounded collect (<= n_buckets rows,
-                # overlapping the threaded write — both scan the cached
-                # band rows) yields the partition-pruning key list and
-                # the batch size: the scale win when the standing index
-                # dwarfs the batch
-                t0 = time.perf_counter()
+                # overlapping the threaded write) yields the
+                # partition-pruning key list and the batch size
                 bucket_counts = bb.groupBy("bucket").count().collect()
-                _prof(batch_id, "bucket_collect", time.perf_counter() - t0)
                 batch_buckets = [r[0] for r in bucket_counts]
-                batch_is_small = sum(r[1] for r in bucket_counts) <= 2_000_000
+                batch_is_small = (
+                    sum(r[1] for r in bucket_counts) <= _SMALL_SIDE_MAX_ROWS
+                )
                 _coverage["frac"] = len(batch_buckets) / max(n_buckets, 1)
             if compact_f is not None:
-                t0 = time.perf_counter()
                 compact_f.result()  # dir layout must be stable before listing
-                _prof(batch_id, "compact_wait", time.perf_counter() - t0)
             standing = _read_index_dirs(
                 spark,
                 _index_dirs(bands_dir, upto_exclusive=batch_id),
@@ -1170,11 +1294,9 @@ def start_dedup_ingest(
             # broadcast the BATCH bands: the standing index (the side that
             # grows with the corpus) never shuffles — stream-static
             # asymmetry. The hint is gated on batch size: a catch-up
-            # trigger (file source with no maxFilesPerTrigger cap) folds
-            # the whole backlog into ONE batch, and force-broadcasting
-            # that would blow the driver where an AQE-decided shuffle
-            # join degrades gracefully. The size gate came free with the
-            # input-bytes metadata / bands-dir listing — no extra job.
+            # trigger folds the whole backlog into ONE batch, and
+            # force-broadcasting that would blow the driver where an
+            # AQE-decided shuffle join degrades gracefully.
             n = (F.broadcast(bb) if batch_is_small else bb).alias("n")
             m = all_bands.alias("m")
             cand = (
@@ -1194,33 +1316,25 @@ def start_dedup_ingest(
             # corpus — on trickle triggers fetch exactly its id-buckets
             # (<= n_buckets ints, one bounded collect). On BULK triggers
             # candidates span ~every id-bucket, so the bucket prune would
-            # remove no IO (the verify's exact semi-join on candidate ids
-            # still cuts the rows) and its collect is pure serial latency
-            # — skip it: the whole trigger then runs as ONE Spark action.
+            # remove no IO and its collect is pure serial latency.
             if bulk:
                 cand_buckets = None
                 # bytes bound the BATCH, not the candidate-pair count (hot
                 # LSH buckets can explode pairs regardless of batch size)
                 # — the bulk path has no free pair count, so never force
-                # the pairs broadcast there; AQE sizes that join from
-                # runtime stats
+                # the pairs broadcast there
                 pairs_small = False
             else:
-                t0 = time.perf_counter()
                 cand_idb = cand.select(
                     F.pmod("id_a", F.lit(n_buckets)).cast("int").alias("idb")
                 )
                 cand_buckets_n = cand_idb.groupBy("idb").count().collect()
-                _prof(batch_id, "cand_bucket_collect", time.perf_counter() - t0)
                 cand_buckets = [r["idb"] for r in cand_buckets_n]
-                # the same bounded collect now also yields the TRUE pair
-                # count, so the verify broadcast is gated on the thing
-                # that actually rides it (round-11 review): a small batch
-                # of boilerplate-heavy docs against a hot standing bucket
-                # can emit pairs way beyond the batch-size gate
+                # the same bounded collect yields the TRUE pair count, so
+                # the verify broadcast is gated on the thing that rides it
                 pairs_small = (
                     batch_is_small
-                    and sum(r["count"] for r in cand_buckets_n) <= 2_000_000
+                    and sum(r["count"] for r in cand_buckets_n) <= _SMALL_SIDE_MAX_ROWS
                 )
             texts = docs.select("doc_id", "text")
             prior_corpus = _read_index_dirs(
@@ -1248,9 +1362,8 @@ def start_dedup_ingest(
             )
             # one left join decides the verdict (kept = no smaller-id dup);
             # dropped is candidate-sized (<= batch ids) — broadcast it so
-            # the batch never shuffles, under the same catch-up-batch size
-            # gate as the band join, and cluster the landing write by
-            # id-bucket
+            # the batch never shuffles, under the same size gate as the
+            # band join, and cluster the landing write by id-bucket
             out = (
                 docs.join(
                     F.broadcast(dropped) if batch_is_small else dropped,
@@ -1261,18 +1374,14 @@ def start_dedup_ingest(
                 .drop("__dup")
                 .withColumn("idb", F.pmod("doc_id", F.lit(n_buckets)).cast("int"))
             )
-            t0 = time.perf_counter()
             corpus_batch_dir = os.path.join(corpus_dir, f"batch={batch_id}")
             if driver_write:
-                _write_hive_driver_side(out, corpus_batch_dir, "idb")
+                _write_hive_driver_side(out.toArrow(), corpus_batch_dir, "idb")
             else:
                 out.repartition(F.col("idb")).write.partitionBy("idb").mode(
                     "overwrite"
                 ).parquet(corpus_batch_dir)
-            _prof(batch_id, "landing_write", time.perf_counter() - t0)
-            t0 = time.perf_counter()
             bands_write_f.result()
-            _prof(batch_id, "bands_wait", time.perf_counter() - t0)
             if bulk:
                 # refresh the coverage stat from the landed layout (one
                 # driver listing) so a shrinking stream falls back to the
@@ -1283,12 +1392,43 @@ def start_dedup_ingest(
                 )
                 _coverage["frac"] = touched / max(n_buckets, 1)
         finally:
-            pool.shutdown(wait=True)
             if prev_parts is not None:
                 spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
             for df in cached:
                 df.unpersist()
-            _prof(batch_id, "flush_total", time.perf_counter() - t_flush0)
+
+    def flush(batch_df: DataFrame, batch_id: int) -> None:
+        from concurrent.futures import ThreadPoolExecutor
+
+        pool = ThreadPoolExecutor(max_workers=2)
+        try:
+            # probe the standing store BEFORE submitting the concurrent
+            # compaction: a listdir racing the compaction thread's
+            # rename+sweep can capture pre-rename dir names whose parquet
+            # walk then reads empty. Sequenced before the submit it is
+            # race-free, and compaction never changes store EMPTINESS,
+            # only its dir layout.
+            has_standing = bool(_index_dirs(bands_dir, upto_exclusive=batch_id))
+            compact_f = None
+            if compact_every and batch_id and batch_id % compact_every == 0:
+                compact_f = pool.submit(
+                    compact_dedup_index,
+                    batch_df.sparkSession,
+                    index_dir,
+                    upto=batch_id - 1,
+                )
+            # the trigger's shape from DRIVER METADATA only (no Spark job):
+            # the micro-batch's input bytes via the file source's WAL
+            in_bytes = _batch_input_bytes(checkpoint_dir, batch_id)
+            if (
+                in_bytes is not None
+                and in_bytes <= _DRIVER_WRITE_MAX_BYTES
+                and on_driver(batch_df, batch_id, in_bytes, compact_f, pool)
+            ):
+                return
+            on_spark(batch_df, batch_id, in_bytes, has_standing, compact_f, pool)
+        finally:
+            pool.shutdown(wait=True)
 
     return (
         doc_stream.writeStream.foreachBatch(flush)

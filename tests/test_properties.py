@@ -1007,3 +1007,51 @@ def test_cap_per_key_checkpoint_pins_nondeterministic_input(spark_session):
         per_key[r.k] = per_key.get(r.k, 0) + 1
     # ~200 survivors per key >> 5, so every key fills its cap exactly
     assert per_key == {f"k{j}": 5 for j in range(4)}
+
+
+# space-joined texts over a tiny vocabulary (overlaps are likely), with
+# empty tokens from doubled spaces, leading/trailing spaces, docs of fewer
+# than 3 tokens and non-ASCII tokens
+_jaccard_tokens = st.sampled_from(["a", "b", "ab", "é", "日本", "", "Ω z"])
+_jaccard_texts = st.lists(
+    st.lists(_jaccard_tokens, max_size=7).map(" ".join),
+    min_size=2,
+    max_size=8,
+)
+
+
+@settings(max_examples=15, deadline=None, suppress_health_check=list(HealthCheck))
+@given(texts=_jaccard_texts)
+def test_driver_jaccard_equals_spark_shingles_jaccard(spark_session, texts):
+    """The driver twin of the dedup verify (shingle_set + jaccard_of_sets)
+    equals Spark's shingles + _exact_jaccard_on_pairs exactly, pair by
+    pair — the dedup trigger's driver shape compares it unrounded against
+    the same threshold."""
+    from aws_kinesis_spark.functions.text import shingles
+    from aws_kinesis_spark.operators.dedup import (
+        _exact_jaccard_on_pairs,
+        jaccard_of_sets,
+        shingle_set,
+    )
+
+    docs = spark_session.createDataFrame(
+        list(enumerate(texts)), "doc_id LONG, text STRING"
+    )
+    sets = docs.select("doc_id", shingles(F.col("text")).alias("__sh"))
+    assert {r["doc_id"]: set(r["__sh"]) for r in sets.collect()} == {
+        i: set(shingle_set(t)) for i, t in enumerate(texts)
+    }
+    pairs = spark_session.createDataFrame(
+        [(a, b) for a in range(len(texts)) for b in range(a + 1, len(texts))],
+        "id_a LONG, id_b LONG",
+    )
+    got = {
+        (r.id_a, r.id_b): r.jaccard
+        for r in _exact_jaccard_on_pairs(pairs, sets, "doc_id").collect()
+    }
+    want = {
+        (a, b): jaccard_of_sets(shingle_set(texts[a]), shingle_set(texts[b]))
+        for a in range(len(texts))
+        for b in range(a + 1, len(texts))
+    }
+    assert got == want

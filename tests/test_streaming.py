@@ -2196,7 +2196,7 @@ def test_driver_side_store_write_matches_spark_layout(spark, tmp_path):
     )
     d_driver = str(tmp_path / "driver")
     d_spark = str(tmp_path / "sparkw")
-    _write_hive_driver_side(df, d_driver, "idb")
+    _write_hive_driver_side(df.toArrow(), d_driver, "idb")
     df.repartition(F.col("idb")).write.partitionBy("idb").mode(
         "overwrite"
     ).parquet(d_spark)
@@ -2216,7 +2216,9 @@ def test_driver_side_store_write_matches_spark_layout(spark, tmp_path):
     cols = ["doc_id", "text", "kept", "idb"]
     assert sorted(a.select(cols).collect()) == sorted(b.select(cols).collect())
     # replay idempotency: rewriting the same dir converges, no stale files
-    _write_hive_driver_side(df.filter(F.col("doc_id") < 100), d_driver, "idb")
+    _write_hive_driver_side(
+        df.filter(F.col("doc_id") < 100).toArrow(), d_driver, "idb"
+    )
     assert spark.read.parquet(d_driver).count() == 100
 
 
@@ -2230,7 +2232,11 @@ def test_store_reads_plan_on_the_driver_without_spark_jobs(spark, tmp_path):
     work behind it, paid on every trigger, restart and corpus read."""
     from pyspark.sql import types as T
 
-    from aws_kinesis_spark.sources.lake import read_incremental, run_lake_batch
+    from aws_kinesis_spark.sources.lake import (
+        read_incremental,
+        register_lake_table,
+        run_lake_batch,
+    )
     from aws_kinesis_spark.streaming.pipeline import (
         _commit_table_version,
         _index_dirs,
@@ -2251,7 +2257,7 @@ def test_store_reads_plan_on_the_driver_without_spark_jobs(spark, tmp_path):
     corpus = os.path.join(index, "corpus")
     # one driver-written and one Spark-written batch dir, as the trigger
     # lays them out on either side of its byte gate
-    _write_hive_driver_side(docs, os.path.join(corpus, "batch=0"), "idb")
+    _write_hive_driver_side(docs.toArrow(), os.path.join(corpus, "batch=0"), "idb")
     docs.write.partitionBy("idb").parquet(os.path.join(corpus, "batch=1"))
     corpus_schema = T.StructType(
         [
@@ -2297,6 +2303,10 @@ def test_store_reads_plan_on_the_driver_without_spark_jobs(spark, tmp_path):
         "read_warehouse_table": lambda: read_warehouse_table(spark, wh),
         "read_warehouse_table@v0": lambda: read_warehouse_table(spark, wh, 0),
         "read_incremental": lambda: read_incremental(spark, lake, -1, 1),
+        "register_lake_table": lambda: (
+            register_lake_table(spark, "plan_only_lake", lake),
+            spark.table("plan_only_lake"),
+        )[1],
     }
     rows = {}
     for name, build in builds.items():
@@ -2309,3 +2319,259 @@ def test_store_reads_plan_on_the_driver_without_spark_jobs(spark, tmp_path):
     assert rows["read_incremental"] == sum(
         read_manifest(lake, b)["recordCount"] for b in (0, 1)
     )
+    inferred = spark.read.parquet(os.path.join(lake, "data"))
+    assert rows["register_lake_table"] == inferred.count()
+    assert spark.table("plan_only_lake").schema == inferred.schema
+
+
+def _dedup_input(spark, root: str):
+    """sf0.001 documents as four id-range files, then one file whose docs
+    all have fewer than 3 tokens and one zero-row file, arriving in that
+    order (one file per trigger)."""
+    d = load(spark, SF, "documents")
+    inp = os.path.join(root, "input")
+    hi = d.agg(F.max("doc_id")).first()[0] + 1
+    bounds = [0, hi // 4, hi // 2, 3 * hi // 4, hi]
+    parts = [
+        d.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < up))
+        for lo, up in zip(bounds, bounds[1:])
+    ]
+    texts = F.array(*[F.lit(t) for t in ("one two", "", " solo ", "ü ß")])
+    short = (
+        d.orderBy("doc_id")
+        .limit(6)
+        .withColumn("doc_id", F.col("doc_id") + hi)
+        .withColumn("text", F.element_at(texts, (F.col("doc_id") % 4 + 1).cast("int")))
+    )
+    parts += [short, d.limit(0)]
+    for i, part in enumerate(parts):
+        part.repartition(1).write.mode("append").parquet(inp)
+        for f in sorted(os.listdir(inp)):
+            path = os.path.join(inp, f)
+            if f.endswith(".parquet") and os.path.getmtime(path) > i * 1000:
+                os.utime(path, (i * 1000, i * 1000))
+    return d, inp
+
+
+def test_dedup_ingest_driver_and_spark_shapes_land_identical_stores(
+    spark, tmp_path, monkeypatch
+):
+    """start_dedup_ingest runs a trigger on the driver (one signing collect,
+    probe/verify/writes in pyarrow and Python) under _DRIVER_WRITE_MAX_BYTES
+    and on Spark above it. With the gate at 0 every trigger takes the Spark
+    shape; both runs must land the same band rows, corpus rows and
+    verdicts in the same hive layout with the same footer schema —
+    including a trigger of sub-shingle docs and a zero-row trigger, and
+    across two compactions."""
+    import pyspark.sql.types as T
+
+    import aws_kinesis_spark.streaming.pipeline as P
+    from aws_kinesis_spark.operators.dedup import ngram_jaccard_dedup
+    from aws_kinesis_spark.sources.lake import parquet_store_schema
+
+    d, inp = _dedup_input(spark, str(tmp_path))
+    runs = {}
+    for shape, gate in (("driver", P._DRIVER_WRITE_MAX_BYTES), ("spark", 0)):
+        monkeypatch.setattr(P, "_DRIVER_WRITE_MAX_BYTES", gate)
+        idx = str(tmp_path / shape / "index")
+        stream = (
+            spark.readStream.schema(d.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(inp)
+        )
+        q = P.start_dedup_ingest(
+            stream, idx, str(tmp_path / shape / "ckpt"), n_buckets=8, compact_every=2
+        )
+        q.awaitTermination(300)
+        assert q.exception() is None
+        layout = sorted(
+            os.path.relpath(dp, idx)
+            for dp, _dirs, fs in os.walk(idx)
+            if any(f.endswith(".parquet") for f in fs)
+        )
+        stores = {}
+        for sub in ("bands", "corpus"):
+            dirs = P._index_dirs(os.path.join(idx, sub))
+            schemas = {parquet_store_schema(x) for x in dirs}
+            assert len(schemas) == 1, (shape, sub, schemas)
+            df = P._read_index_dirs(spark, dirs, ["*"], schemas.pop())
+            stores[sub] = (df.schema, sorted(df.collect()))
+        runs[shape] = (layout, stores)
+
+    assert runs["driver"] == runs["spark"]
+    layout, stores = runs["driver"]
+    assert "corpus/compact=3/idb=0" in layout and "bands/compact=3/bucket=0" in layout
+    corpus_schema, corpus = stores["corpus"]
+    assert isinstance(corpus_schema["idb"].dataType, T.IntegerType)
+    # verdicts: first-occurrence-wins truth; every sub-shingle doc kept
+    hi = d.agg(F.max("doc_id")).first()[0] + 1
+    dropped_truth = {r.id_b for r in ngram_jaccard_dedup(d, threshold=0.7).collect()}
+    assert {r.doc_id for r in corpus if not r.kept} == dropped_truth
+    assert sorted(r.doc_id for r in corpus if r.doc_id >= hi) == [
+        r.doc_id + hi for r in d.orderBy("doc_id").limit(6).collect()
+    ]
+
+
+def _ingest_one_trigger(spark, docs, inp: str, idx: str, ckpt: str) -> int:
+    """Land ``docs`` as one more input file and run start_dedup_ingest
+    until it has drained it — exactly one trigger, since each start of the
+    query gets its own run id and so its own job group. Returns the
+    number of Spark jobs that trigger ran."""
+    from aws_kinesis_spark.streaming.pipeline import start_dedup_ingest
+
+    docs.repartition(1).write.mode("append").parquet(inp)
+    stream = spark.readStream.schema(docs.schema).parquet(inp)
+    q = start_dedup_ingest(stream, idx, ckpt, n_buckets=8, compact_every=2)
+    q.awaitTermination(300)
+    assert q.exception() is None
+    return len(spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId)))
+
+
+def _trickle_cuts(d) -> tuple[list[int], list[int]]:
+    """doc ids in order, and cut points: a seed batch of half the docs,
+    then 15-doc trickle batches."""
+    ids = sorted(r.doc_id for r in d.select("doc_id").collect())
+    return ids, [0, len(ids) // 2] + [len(ids) // 2 + 15 * k for k in range(1, 5)]
+
+
+def test_dedup_trickle_trigger_runs_at_most_three_spark_jobs(spark, tmp_path):
+    """A trickle trigger under the byte gate does its only Spark work in the
+    signing collect: at most 3 jobs in the query's job group, compaction
+    triggers included."""
+    d = load(spark, SF, "documents").cache()
+    ids, cuts = _trickle_cuts(d)
+    paths = [str(tmp_path / n) for n in ("input", "index", "ckpt")]
+    per_trigger = [
+        _ingest_one_trigger(
+            spark, d.filter(F.col("doc_id").isin(ids[lo:up])), *paths
+        )
+        for lo, up in zip(cuts, cuts[1:])
+    ]
+    d.unpersist()
+    assert os.path.isdir(os.path.join(paths[1], "bands", "compact=3"))
+    assert max(per_trigger[1:]) <= 3, per_trigger
+
+
+def test_dedup_driver_shape_falls_back_past_its_memory_bounds(
+    spark, tmp_path, monkeypatch
+):
+    """The driver shape holds the batch, its band rows, the standing rows
+    matching them, the candidate pairs and their texts. Past either bound
+    — standing band files in the touched buckets at or over
+    _DRIVER_WRITE_MAX_BYTES, or a candidate join of more than
+    _SMALL_SIDE_MAX_ROWS rows — the trigger takes the Spark shape (which
+    runs more than 3 jobs) and lands the same verdicts."""
+    import aws_kinesis_spark.streaming.pipeline as P
+    from aws_kinesis_spark.operators.dedup import ngram_jaccard_dedup
+
+    d = load(spark, SF, "documents").cache()
+    ids, cuts = _trickle_cuts(d)
+    inp, idx, ckpt = (str(tmp_path / n) for n in ("input", "index", "ckpt"))
+    batches = [
+        d.filter(F.col("doc_id").isin(ids[lo:up]))
+        for lo, up in zip(cuts, cuts[1:4])
+    ]
+    assert _ingest_one_trigger(spark, batches[0], inp, idx, ckpt) <= 3
+    # the batch under the byte gate, the standing band files over it (a
+    # 15-doc batch has 240 band rows, so it touches all 8 buckets)
+    gate = sum(
+        os.path.getsize(f)
+        for x in P._index_dirs(os.path.join(idx, "bands"))
+        for f in P._list_parquet_files(x)
+    )
+    monkeypatch.setattr(P, "_DRIVER_WRITE_MAX_BYTES", gate)
+    assert _ingest_one_trigger(spark, batches[1], inp, idx, ckpt) > 3
+    monkeypatch.undo()
+    newest = max(P._list_parquet_files(inp), key=os.path.getmtime)
+    assert os.path.getsize(newest) <= gate
+
+    # the candidate join over its row bound
+    monkeypatch.setattr(P, "_SMALL_SIDE_MAX_ROWS", 0)
+    assert _ingest_one_trigger(spark, batches[2], inp, idx, ckpt) > 3
+    monkeypatch.undo()
+
+    ingested = d.filter(F.col("doc_id").isin(ids[: cuts[3]]))
+    dropped_truth = {
+        r.id_b for r in ngram_jaccard_dedup(ingested, threshold=0.7).collect()
+    }
+    corpus = P.read_dedup_corpus(spark, idx).collect()
+    d.unpersist()
+    assert sorted(r.doc_id for r in corpus) == ids[: cuts[3]]
+    assert {r.doc_id for r in corpus if not r.kept} == dropped_truth
+
+
+def test_read_dedup_corpus_is_one_flat_scan(spark, tmp_path):
+    """read_dedup_corpus reads the live dirs' files as ONE file scan, not a
+    union of per-dir scans, with the same rows as the per-dir union read."""
+    from aws_kinesis_spark.streaming.pipeline import (
+        _index_dirs,
+        _read_index_dirs,
+        _write_hive_driver_side,
+        read_dedup_corpus,
+    )
+
+    docs = spark.range(0, 300).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.lit("t"), F.col("id")).alias("text"),
+        (F.col("id") % 3 > 0).alias("kept"),
+        F.pmod("id", F.lit(8)).cast("int").alias("idb"),
+    )
+    index = str(tmp_path / "index")
+    corpus = os.path.join(index, "corpus")
+    for b in range(3):
+        part = docs.filter(F.col("doc_id") % 3 == b)
+        if b == 1:
+            part.write.partitionBy("idb").parquet(os.path.join(corpus, "compact=1"))
+        else:
+            _write_hive_driver_side(
+                part.toArrow(), os.path.join(corpus, f"batch={b + 2}"), "idb"
+            )
+    dirs = _index_dirs(corpus)
+    assert len(dirs) == 3
+    df = read_dedup_corpus(spark, index)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan") == 1, plan
+    union = _read_index_dirs(spark, dirs, ["*"]).drop("idb")
+    assert df.columns == union.columns == ["doc_id", "text", "kept"]
+    assert sorted(df.collect()) == sorted(union.collect())
+    assert df.count() == 300
+
+
+def test_compact_spark_fold_uses_its_own_task_count(spark, tmp_path):
+    """_compact_store's Spark fold clusters on the partition column with a
+    task count derived from the fold's bytes (capped at the partition
+    values on disk), so a narrowed session shuffle count cannot shrink a
+    corpus-scale fold to one task."""
+    from aws_kinesis_spark.streaming.pipeline import _compact_store
+
+    root = str(tmp_path / "bands")
+    for b in range(3):
+        spark.range(0, 4000).select(
+            (F.col("id") + b * 4000).alias("doc_id"),
+            F.sha2(F.concat(F.lit(str(b)), F.col("id").cast("string")), 512).alias(
+                "pad"
+            ),
+            (F.col("id") % 4).cast("int").alias("bucket"),
+        ).write.partitionBy("bucket").parquet(os.path.join(root, f"batch={b}"))
+    total = sum(
+        os.path.getsize(os.path.join(dp, f))
+        for dp, _d, fs in os.walk(root)
+        for f in fs
+        if f.endswith(".parquet")
+    )
+    assert total >= 4 * (256 << 10), total
+    sc = spark.sparkContext
+    group = _uniq("fold")
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    sc.setJobGroup(group, "spark fold")
+    try:
+        assert _compact_store(spark, root, "bucket", upto=2, driver_fold_max_bytes=0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    tracker = sc.statusTracker()
+    write_job = tracker.getJobInfo(max(tracker.getJobIdsForGroup(group)))
+    write_stage = tracker.getStageInfo(max(write_job.stageIds))
+    assert write_stage.numTasks == 4
+    assert spark.read.parquet(os.path.join(root, "compact=2")).count() == 12000
