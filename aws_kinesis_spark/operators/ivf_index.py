@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from aws_kinesis_spark import store
 from aws_kinesis_spark.operators.similarity import (
     cosine_topk_from_candidates,
     nearest_cell_udf,
@@ -51,7 +52,6 @@ from aws_kinesis_spark.operators.similarity import (
     probe_top_cells,
     train_ivf_centroids,
 )
-from aws_kinesis_spark.streaming.pipeline import _index_dirs, _read_index_dirs
 
 _META = "_meta.json"
 _CENTROIDS = "_centroids"
@@ -109,25 +109,6 @@ def _load_centroids(index_dir: str, nlist: int) -> np.ndarray:
     return np.array([c for _, c in rows], dtype=np.float64)
 
 
-def _newest_dir_num(path: str, prefixes: tuple[str, ...]) -> int:
-    """Newest committed ``<prefix>=N`` dir number under ``path`` (-1 if
-    none). THE one place that encodes the dir-visibility convention
-    (``.tmp``-suffixed dirs — including ``.prev.tmp`` swap leftovers —
-    are invisible; non-numeric names are ignored, not fatal): the same
-    rule previously lived copy-pasted in three writers' replay guards,
-    where one drifting copy would silently desynchronize them from the
-    readers' dir selection (round-13 review)."""
-    nums = []
-    for d in os.listdir(path) if os.path.isdir(path) else []:
-        head, _, tail = d.partition("=")
-        if head in prefixes and tail and not d.endswith(".tmp"):
-            try:
-                nums.append(int(tail))
-            except ValueError:
-                continue
-    return max(nums, default=-1)
-
-
 def _cells_schema(meta: dict) -> T.StructType:
     """Row schema of the cells store incl. the ``cell`` partition column —
     passed to every read so no probe pays a footer-inference job."""
@@ -159,64 +140,23 @@ def _input_bytes_estimate(df: DataFrame, max_files: int = 256) -> int | None:
     return total
 
 
-# Same dial as streaming.pipeline's trickle-batch store writes: below it
-# a cells batch is laid out driver-side with pyarrow (one bounded Arrow
-# collect, no Spark write job / dynamic-partition commit); above it (or
-# when the input size is unknowable) the clustered Spark write runs.
-_DRIVER_CELLS_WRITE_MAX_BYTES = 32 << 20
-
-
 def _write_cells_batch(assigned: DataFrame, cells_dir: str, batch_id: int) -> None:
     """One batch dir, committed ATOMICALLY (write to ``batch=N.tmp``, one
     rename): a crash mid-append must not leave a torn batch visible under
     a committed meta — unlike the g35 stores, an update_ivf_index caller
     has no streaming checkpoint forcing a replay that would overwrite it.
-    ``.tmp``-suffixed dirs are invisible to _index_dirs and to the
+    ``.tmp``-suffixed dirs are invisible to store.index_dirs and to the
     auto-numbering listdir, and a stale one is reclaimed by the next write
     of the same batch id. Clustered by cell so each batch lands ~one file
     per cell (a probe's open cost is O(probed cells), not
-    O(writer parallelism x cells)). MB-scale inputs (estimated from the
-    scan's own file sizes) skip the Spark write job entirely and lay the
-    same hive dirs out driver-side — the per-trigger-store reasoning of
-    streaming.pipeline._write_hive_driver_side; the commit protocol
-    (tmp + _swap_in) is identical on both paths."""
-    from aws_kinesis_spark.streaming.pipeline import _write_hive_driver_side
-
+    O(writer parallelism x cells)); MB-scale inputs (estimated from the
+    scan's own file sizes) are laid out on the driver
+    (store.write_partitioned)."""
     final = os.path.join(cells_dir, f"batch={batch_id}")
     tmp = final + ".tmp"
     shutil.rmtree(tmp, ignore_errors=True)
-    est = _input_bytes_estimate(assigned)
-    if est is not None and est <= _DRIVER_CELLS_WRITE_MAX_BYTES:
-        _write_hive_driver_side(assigned.toArrow(), tmp, "cell")
-    else:
-        (
-            assigned.repartition(F.col("cell"))
-            .write.partitionBy("cell")
-            .mode("overwrite")
-            .parquet(tmp)
-        )
-    _swap_in(tmp, final)
-
-
-def _swap_in(tmp: str, final: str) -> None:
-    """Install ``tmp`` as ``final`` without a long delete-then-rename
-    window: the old rmtree(final)+replace left the COMMITTED data gone
-    for the full rmtree duration — a crash there silently deleted a
-    previously committed batch/tombstone while meta stayed committed
-    (round-13 review). Now the old dir is moved aside in one atomic
-    rename (the ``.prev.tmp`` suffix keeps it invisible to every
-    reader), the new dir lands in a second rename, and only then is the
-    old copy reclaimed. The crash window shrinks to the instant between
-    two renames, and even there the committed data still exists on disk
-    as ``<final>.prev.tmp`` — the replay that caused the overwrite
-    rewrites the batch and reclaims it (single-writer posture, as
-    documented on update_ivf_index)."""
-    prev = final + ".prev.tmp"
-    shutil.rmtree(prev, ignore_errors=True)
-    if os.path.exists(final):
-        os.replace(final, prev)
-    os.replace(tmp, final)
-    shutil.rmtree(prev, ignore_errors=True)
+    store.write_partitioned(assigned, tmp, "cell", _input_bytes_estimate(assigned))
+    store.swap_in(tmp, final)
 
 
 def build_ivf_index(
@@ -280,7 +220,7 @@ def update_ivf_index(
     meta = _load_meta(index_dir)
     cent = _load_centroids(index_dir, meta["nlist"])
     cells_dir = os.path.join(index_dir, _CELLS)
-    # compact=M supersedes batches <= M, and _index_dirs only reads batch
+    # compact=M supersedes batches <= M, and store.index_dirs only reads batch
     # dirs ABOVE the newest compaction — an append numbered at or below it
     # would land INVISIBLE (written, never searchable, then swept by the
     # next compaction's cleanup: silent data loss, round-12 review). The
@@ -290,9 +230,9 @@ def update_ivf_index(
     # and _write_cells_batch's rename could still supersede the in-flight
     # append. The store's posture is one maintainer process (same as the
     # dedup-ingest index); concurrent writers need external coordination.
-    newest_compact = _newest_dir_num(cells_dir, ("compact",))
+    newest_compact = store.newest_dir_num(cells_dir, ("compact",))
     if batch_id is None:
-        batch_id = _newest_dir_num(cells_dir, ("batch", "compact")) + 1
+        batch_id = store.newest_dir_num(cells_dir, ("batch", "compact")) + 1
     elif batch_id <= newest_compact:
         raise ValueError(
             f"batch_id={batch_id} is at or below the newest compaction "
@@ -316,7 +256,7 @@ def update_ivf_index(
 
 def _newest_committed_cells(cells_dir: str) -> int:
     """Newest committed cells number (batch= or compact=), -1 if none."""
-    return _newest_dir_num(cells_dir, ("batch", "compact"))
+    return store.newest_dir_num(cells_dir, ("batch", "compact"))
 
 
 def _tomb_batches(index_dir: str) -> list[tuple[int, str, int]]:
@@ -324,7 +264,8 @@ def _tomb_batches(index_dir: str) -> list[tuple[int, str, int]]:
     root = os.path.join(index_dir, _TOMBS)
     out: list[tuple[int, str, int]] = []
     for d in os.listdir(root) if os.path.isdir(root) else []:
-        if not d.startswith("batch=") or d.endswith(".tmp"):
+        n = store.dir_num(d, ("batch",))
+        if n is None:
             continue
         path = os.path.join(root, d)
         meta_path = os.path.join(path, _TOMB_META)
@@ -332,7 +273,7 @@ def _tomb_batches(index_dir: str) -> list[tuple[int, str, int]]:
             continue  # torn dir (no committed meta) — invisible
         with open(meta_path) as f:
             horizon = json.load(f)["horizon"]
-        out.append((int(d.split("=")[1]), path, int(horizon)))
+        out.append((n, path, int(horizon)))
     return sorted(out)
 
 
@@ -430,7 +371,7 @@ def delete_from_ivf_index(
     )
     with open(os.path.join(tmp, _TOMB_META), "w") as f:
         json.dump({"horizon": horizon}, f)
-    _swap_in(tmp, final)  # replay overwrites; old copy survives the swap
+    store.swap_in(tmp, final)  # replay overwrites; old copy survives the swap
     return batch_id
 
 
@@ -536,7 +477,7 @@ def _read_cells_src_tagged(
     cols = [meta["id_col"], meta["vec_col"], "cell"]
     parts = []
     for s in dirs:
-        n = int(os.path.basename(s).split("=")[1])
+        n = store.dir_num(os.path.basename(s), ("batch", "compact"))
         parts.append(
             spark.read.schema(schema).parquet(s).select(*cols)
             .withColumn("__src", F.lit(n).cast("int"))
@@ -565,7 +506,7 @@ def compact_ivf_index(spark: SparkSession, index_dir: str, upto: int) -> int:
     """Fold the cells store's per-batch dirs at or below ``upto`` into one
     ``compact=<upto>`` dir (one file per cell), bounding a probe's
     listing/open cost to O(appends since last compaction) instead of
-    O(index lifetime) — the same _compact_store commit (tmp + atomic
+    O(index lifetime) — the same store.compact_store commit (tmp + atomic
     rename, idempotent, crash-sweep) the dedup-ingest index uses.
     Centroids are untouched.
 
@@ -597,8 +538,6 @@ def compact_ivf_index(spark: SparkSession, index_dir: str, upto: int) -> int:
     tomb_batches = _tomb_batches(index_dir)
     final = os.path.join(cells_dir, f"compact={upto}")
 
-    from aws_kinesis_spark.streaming.pipeline import _sweep_superseded_dirs
-
     def _clear_applied(applied_ids: list[int]) -> None:
         # hwm FIRST, dirs second: once the bump lands, auto-numbering and
         # the explicit-id check skip the cleared ids even while their dirs
@@ -615,7 +554,7 @@ def compact_ivf_index(spark: SparkSession, index_dir: str, upto: int) -> int:
         # crash-recovery / replay: finish the sweeps. Clear ONLY the
         # tombstones the committed fold says it applied — never the ones
         # that arrived after it.
-        _sweep_superseded_dirs(cells_dir, upto)
+        store.sweep_superseded_dirs(cells_dir, upto)
         manifest = os.path.join(final, _APPLIED_TOMBS)
         if os.path.exists(manifest):
             with open(manifest) as f:
@@ -623,17 +562,15 @@ def compact_ivf_index(spark: SparkSession, index_dir: str, upto: int) -> int:
         return 0
     # stale replay guard: a request at or below an existing NEWER
     # compaction would rewrite that compaction's data into a dir
-    # _index_dirs never reads (the clean path no-ops on this via its
+    # store.index_dirs never reads (the clean path no-ops on this via its
     # len(srcs) check)
-    newest_compact = _newest_dir_num(cells_dir, ("compact",))
+    newest_compact = store.newest_dir_num(cells_dir, ("compact",))
     if upto <= newest_compact:
         return 0
     if not tomb_batches:
-        from aws_kinesis_spark.streaming.pipeline import _compact_store
+        return store.compact_store(spark, cells_dir, "cell", upto)
 
-        return _compact_store(spark, cells_dir, "cell", upto)
-
-    srcs = _index_dirs(cells_dir, upto_exclusive=upto + 1)
+    srcs = store.index_dirs(cells_dir, upto_exclusive=upto + 1)
     if not srcs:
         return 0
     meta = _load_meta(index_dir)
@@ -643,19 +580,14 @@ def compact_ivf_index(spark: SparkSession, index_dir: str, upto: int) -> int:
     live = _anti_join_tombstones(merged, tombs, meta["id_col"])
     tmp = final + ".tmp"
     shutil.rmtree(tmp, ignore_errors=True)
-    (
-        live.repartition(F.col("cell"))
-        .write.partitionBy("cell")
-        .mode("overwrite")
-        .parquet(tmp)
-    )
+    store.write_partitioned(live, tmp, "cell", None)
     # the manifest commits WITH the fold: exactly the fully-applied
     # tombstone batches (horizon inside the folded range) this fold pays
     applied = [b for b, _, horizon in tomb_batches if horizon <= upto]
     with open(os.path.join(tmp, _APPLIED_TOMBS), "w") as f:
         json.dump({"applied": applied}, f)
     os.replace(tmp, final)
-    _sweep_superseded_dirs(cells_dir, upto)
+    store.sweep_superseded_dirs(cells_dir, upto)
     _clear_applied(applied)
     return 1
 
@@ -682,7 +614,7 @@ def read_ivf_cells(
     cols = [meta["id_col"], meta["vec_col"], "cell"]
     schema = _cells_schema(meta)
     cells_dir = os.path.join(index_dir, _CELLS)
-    dirs = _index_dirs(cells_dir)
+    dirs = store.index_dirs(cells_dir)
     if not dirs:
         # distinguish "never committed" (refuse) from "committed but
         # physically empty" — a fold whose every row was tombstoned
@@ -693,7 +625,7 @@ def read_ivf_cells(
         raise ValueError(f"IVF index {index_dir} has no committed cells")
     tombs = None if include_deleted else read_ivf_tombstones(spark, index_dir)
     if tombs is None:
-        df = _read_index_dirs(spark, dirs, cols=cols, schema=schema)
+        df = store.read_index_dirs(spark, dirs, cols=cols, schema=schema)
         if cells is not None:
             df = df.filter(F.col("cell").isin(cells))
         return df

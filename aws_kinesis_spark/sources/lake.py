@@ -22,9 +22,9 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from aws_kinesis_spark.sources.envelope import decode_envelope
+from aws_kinesis_spark.store import list_parquet_files, parquet_store_schema
 
 PARTITION_COLS = ["year", "month", "day", "hour"]
 
@@ -84,86 +84,6 @@ def purge_batch(lake_dir: str, batch_id: int) -> None:
         shutil.rmtree(
             os.path.join(lake_dir, sub, f"batch={batch_id}"), ignore_errors=True
         )
-
-
-def _list_parquet_files(root: str) -> list[str]:
-    out: list[str] = []
-    for dirpath, _dirs, files in os.walk(root):
-        for f in files:
-            if f.endswith(".parquet"):
-                out.append(os.path.join(dirpath, f))
-    return sorted(out)
-
-
-_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
-
-
-def _as_nullable(node):
-    # Spark reads every file-source column as nullable; mirror that on the
-    # JSON form of a schema (struct fields, array elements, map values)
-    if isinstance(node, dict):
-        return {
-            k: True if k in ("nullable", "containsNull", "valueContainsNull")
-            else _as_nullable(v)
-            for k, v in node.items()
-        }
-    if isinstance(node, list):
-        return [_as_nullable(v) for v in node]
-    return node
-
-
-def parquet_store_schema(path: str) -> StructType | None:
-    """The schema ``spark.read.parquet(path)`` would infer, from ONE footer
-    read on the driver with pyarrow — no Spark job. Spark infers a parquet
-    schema with a distributed footer-read job, which in a micro-batch
-    engine is scheduling with almost no work behind it; every store the
-    engine wrote has one schema per store, so one footer is the answer.
-
-    ``path`` is a data file or a store directory. Spark-written files
-    carry their Spark schema in the footer metadata; pyarrow-written ones
-    (the driver-side dedup stores) convert from the Arrow schema. The
-    hive ``key=value`` dirs between a directory ``path`` and its first
-    file append as partition columns, typed as Spark infers integers.
-    Returns None when there is nothing to take a schema from (no data
-    file, or a partition value that is not an integer): the caller then
-    lets Spark infer."""
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import from_arrow_schema
-
-    if os.path.isdir(path):
-        first = None
-        for dirpath, dirs, files in os.walk(path):
-            dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
-            data = sorted(
-                f for f in files
-                if f.endswith(".parquet") and not f.startswith(("_", "."))
-            )
-            if data:
-                first = os.path.join(dirpath, data[0])
-                break
-        if first is None:
-            return None
-        rel = os.path.relpath(os.path.dirname(first), path)
-        part_dirs = [] if rel == "." else rel.split(os.sep)
-    else:
-        first, part_dirs = path, []
-    partition_fields = []
-    for d in part_dirs:
-        key, eq, value = d.partition("=")
-        if not eq or not value.lstrip("-").isdigit():
-            return None
-        n = int(value)
-        partition_fields.append(
-            StructField(key, IntegerType() if -(2**31) <= n < 2**31 else LongType())
-        )
-    footer = pq.read_schema(first)
-    spark_json = (footer.metadata or {}).get(_SPARK_ROW_METADATA)
-    if spark_json is not None:
-        data_schema = StructType.fromJson(json.loads(spark_json))
-    else:
-        data_schema = from_arrow_schema(footer, prefer_timestamp_ntz=True)
-    schema = StructType(list(data_schema.fields) + partition_fields)
-    return StructType.fromJson(_as_nullable(schema.jsonValue()))
 
 
 def write_manifest(
@@ -334,7 +254,7 @@ def run_lake_batch(
                 .parquet(data_dir)
             )
             batch_root = os.path.join(data_dir, f"batch={batch_id}")
-            files = _list_parquet_files(batch_root)
+            files = list_parquet_files(batch_root)
             # an all-error or empty flush writes no data files: commit an empty
             # manifest (the batch HAPPENED, with zero ok records) instead of
             # crashing on the missing batch dir. The count comes from the
@@ -517,7 +437,7 @@ def vacuum_orphans(lake_dir: str, older_than_seconds: float = 3600.0) -> VacuumS
             referenced.update(os.path.realpath(e["url"]) for e in payload["entries"])
     data_dir = os.path.join(lake_dir, "data")
     n_orphans = n_bytes = n_kept = 0
-    for f in _list_parquet_files(data_dir):
+    for f in list_parquet_files(data_dir):
         if os.path.realpath(f) in referenced:
             n_kept += 1
             continue
@@ -832,7 +752,7 @@ def _rewrite_leaf(
     transform drops rows)."""
     recover_compaction(lake_dir, partition_subdir)
     part_dir = os.path.join(lake_dir, partition_subdir)
-    files = _list_parquet_files(part_dir)
+    files = list_parquet_files(part_dir)
     if not files:
         return (0, 0, [])
     total = sum(os.path.getsize(f) for f in files)
@@ -860,7 +780,7 @@ def _rewrite_leaf(
     os.replace(part_dir, trash)
     os.replace(tmp, part_dir)
     shutil.rmtree(trash, ignore_errors=True)
-    new_files = _list_parquet_files(part_dir)
+    new_files = list_parquet_files(part_dir)
     return (len(files), len(new_files), new_files)
 
 
@@ -1152,13 +1072,13 @@ def update_zone_maps(spark: SparkSession, lake_dir: str, cols: list[str]) -> int
     final = os.path.join(lake_dir, "_zonemaps")
     if not os.path.isdir(final):
         build_zone_maps(spark, lake_dir, cols)
-        return len(_list_parquet_files(data_dir))
+        return len(list_parquet_files(data_dir))
 
     def _local(path: str) -> str:
         return os.path.realpath(unquote(urlparse(path).path)) if "://" in path else os.path.realpath(path)
 
     prior = spark.read.parquet(final)
-    live = {_local(f): f for f in _list_parquet_files(data_dir)}
+    live = {_local(f): f for f in list_parquet_files(data_dir)}
     # per-file stats rows: the same O(files) metadata a planner holds
     prior_names = [r[0] for r in prior.select("__file").collect()]
     covered = {_local(n) for n in prior_names}
@@ -1274,7 +1194,7 @@ def read_zone_pruned(spark: SparkSession, lake_dir: str, col: str, lo, hi) -> Da
     )
     lo_c = _coerce_zone_bound(lo, sample, col)
     hi_c = _coerce_zone_bound(hi, sample, col)
-    live = {_local(f): f for f in _list_parquet_files(data_dir)}
+    live = {_local(f): f for f in list_parquet_files(data_dir)}
     # stale stats rows (files a later compaction/vacuum removed) are
     # dropped, not scheduled — scheduling a dead path fails the scan;
     # None min/max = file is all-NULL for col; BETWEEN never matches NULL

@@ -15,12 +15,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from aws_kinesis_spark import store
 from aws_kinesis_spark.session import configure
 from aws_kinesis_spark.sources.envelope import ENVELOPE_SCHEMA, decode_envelope
 from aws_kinesis_spark.sources.lake import (
     PARTITION_COLS,
-    _list_parquet_files,
-    parquet_store_schema,
     purge_batch,
     split_errors,
     with_partition_cols,
@@ -133,7 +132,7 @@ def start_lake_path(
                 .parquet(data_dir)
             )
             batch_root = os.path.join(data_dir, f"batch={batch_id}")
-            files = _list_parquet_files(batch_root)
+            files = store.list_parquet_files(batch_root)
             import pyarrow.parquet as pq
 
             n_ok = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
@@ -210,116 +209,12 @@ def start_stream_dedup(
     return _triggered(writer, available_now, trigger_seconds).start()
 
 
-_VDIR_RE = None  # compiled lazily (module imports stay cheap)
-
-
-def _vdir_match(name: str):
-    global _VDIR_RE
-    if _VDIR_RE is None:
-        import re
-
-        _VDIR_RE = re.compile(r"^v(\d+)(?:_(\d+))?$")
-    return _VDIR_RE.match(name)
-
-
-def _committed_versions(table_dir: str) -> dict[int, str]:
-    """batch_id -> its last-committed dir NAME, for every version of a
-    pointer-swap store. Attempt dirs (``v{N}_{k}``) are written
-    complete-then-renamed, so the HIGHEST attempt present for a batch id
-    is its newest committed state; ``.tmp`` staging dirs never match the
-    name regex. THE one resolve pass shared by the warehouse/SCD2 readers
-    and streaming/rollup.py (round-13 review: rollup carried a drifted
-    twin of this scan — partition/isdigit parsing plus a dead ``.old``
-    check — and every protocol change had to land twice)."""
-    best: dict[int, tuple[int, str]] = {}
-    for d in os.listdir(table_dir) if os.path.isdir(table_dir) else []:
-        m = _vdir_match(d)
-        if not m:
-            continue
-        key, attempt = int(m.group(1)), int(m.group(2) or 0)
-        if key not in best or attempt > best[key][0]:
-            best[key] = (attempt, d)
-    return {k: v[1] for k, v in best.items()}
-
-
-def _pointer_dir(table_dir: str) -> str | None:
-    """Resolve the ``_CURRENT`` pointer to a version dir NAME (None before
-    the first commit). Replay-attempt pointers carry an explicit ``dir``;
-    older pointers carry only ``version`` and resolve by number."""
-    import json as _json
-
-    ptr = os.path.join(table_dir, "_CURRENT")
-    if not os.path.exists(ptr):
-        return None
-    with open(ptr) as fh:
-        payload = _json.load(fh)
-    return payload.get("dir") or f"v{payload['version']}"
-
-
-def _version_dir(table_dir: str, version: int) -> str | None:
-    """Resolve one committed version number to its dir: the highest
-    attempt of ``v{version}`` (``v{N}`` then ``v{N}_1``, ``v{N}_2`` …).
-    Every committed attempt of a version holds identical content — the
-    merge is deterministic and attempts only exist from replays of the
-    same batch — so any complete attempt serves; the highest is simply
-    the most recently committed."""
-    d = _committed_versions(table_dir).get(version)
-    return os.path.join(table_dir, d) if d else None
-
-
-def _latest_version_dir_below(table_dir: str, batch_id: int) -> str | None:
-    """The newest committed version dir OLDER than ``batch_id`` — the
-    replay-safe merge base (a replayed batch must never merge on top of
-    its own prior attempt)."""
-    versions = _committed_versions(table_dir)
-    prev = [b for b in versions if b < batch_id]
-    return os.path.join(table_dir, versions[max(prev)]) if prev else None
-
-
 def _read_version(spark: SparkSession, vdir: str) -> DataFrame:
     """One committed version dir, planned on the driver: the schema comes
     from one footer (parquet_store_schema), so building the frame launches
     no Spark job — the merge base of every versioned-store trigger and
     every reader of the store."""
-    return spark.read.schema(parquet_store_schema(vdir)).parquet(vdir)
-
-
-def _commit_table_version(
-    merged: DataFrame, table_dir: str, batch_id: int, write=None
-) -> None:
-    """Pointer-swap commit of one table version — THE shared protocol body
-    for every versioned-dirs + ``_CURRENT`` store (warehouse upsert, SCD2
-    dimension, and streaming/rollup.py's rollup — one copy, after the
-    round-13 review found the warehouse/SCD2 flushes overwriting
-    ``v{batch_id}`` IN PLACE: a replayed batch destroyed the exact dir
-    ``_CURRENT`` pointed at for the whole rewrite — concurrent readers
-    saw a torn or missing version, and a crash mid-rewrite left the
-    pointer at a torn dir until the replay finally succeeded). A replayed
-    batch writes under a FRESH name (``v{N}_{attempt}``), staged through
-    ``.tmp`` + one atomic rename, and ``_CURRENT`` flips to it — the live
-    dir is never renamed away or rewritten, so readers always resolve a
-    complete version. ``write(df, vtmp)`` customizes the physical write
-    (the rollup's day-partitioned layout); default is a plain parquet
-    write."""
-    import json as _json
-    import shutil as _shutil
-
-    vdir = os.path.join(table_dir, f"v{batch_id}")
-    attempt = 0
-    while os.path.exists(vdir):
-        attempt += 1
-        vdir = os.path.join(table_dir, f"v{batch_id}_{attempt}")
-    vtmp = vdir + ".tmp"
-    _shutil.rmtree(vtmp, ignore_errors=True)
-    if write is None:
-        merged.write.mode("overwrite").parquet(vtmp)
-    else:
-        write(merged, vtmp)
-    os.replace(vtmp, vdir)
-    tmp = os.path.join(table_dir, f"._CURRENT.{batch_id}")
-    with open(tmp, "w") as fh:
-        _json.dump({"version": batch_id, "dir": os.path.basename(vdir)}, fh)
-    os.replace(tmp, os.path.join(table_dir, "_CURRENT"))
+    return spark.read.schema(store.parquet_store_schema(vdir)).parquet(vdir)
 
 
 # DDL schemas of the two versioned stores — shared by the writers and by
@@ -385,7 +280,7 @@ def start_warehouse_upsert(
             "id", "status", "sequence_number"
         )
         deletes = collapsed.filter(F.col("op") == "D").select("id")
-        base = _latest_version_dir_below(table_dir, batch_id)
+        base = store.latest_version_dir_below(table_dir, batch_id)
         if base:
             current = _read_version(spark, base)
         else:
@@ -393,7 +288,7 @@ def start_warehouse_upsert(
         merged = staging_upsert(current, latest, ["id"]).join(
             deletes, ["id"], "left_anti"
         )
-        _commit_table_version(merged, table_dir, batch_id)
+        store.commit_table_version(merged, table_dir, batch_id)
 
     return (
         env_stream.writeStream.foreachBatch(flush)
@@ -422,12 +317,12 @@ def read_warehouse_table(
     if version is None:
         # the pointer names its dir directly (pointer-swap protocol);
         # "version"-only pointers predate it and resolve by number
-        name = _pointer_dir(table_dir)
+        name = store.pointer_dir(table_dir)
         if name is None:
             return spark.createDataFrame([], empty_schema or WAREHOUSE_SCHEMA)
         vdir = os.path.join(table_dir, name)
     else:
-        vdir = _version_dir(table_dir, version)
+        vdir = store.version_dir(table_dir, version)
         if vdir is None:
             raise ValueError(f"no committed version {version} in {table_dir}")
     return _read_version(spark, vdir)
@@ -598,10 +493,10 @@ def start_scd2_maintenance(
             .filter(~F.col("_corrupt"))
             .select("id", "status", "op", "sequence_number")
         )
-        base = _latest_version_dir_below(table_dir, batch_id)
+        base = store.latest_version_dir_below(table_dir, batch_id)
         versions = _read_version(spark, base) if base else None
         merged = scd2_merge_increment(versions, decoded, ["id"], "sequence_number")
-        _commit_table_version(merged, table_dir, batch_id)
+        store.commit_table_version(merged, table_dir, batch_id)
 
     return (
         env_stream.writeStream.foreachBatch(flush)
@@ -665,224 +560,16 @@ def _batch_input_bytes(checkpoint_dir: str, batch_id: int) -> int | None:
         return None
 
 
-def _index_dirs(root: str, upto_exclusive: int | None = None) -> list[str]:
-    """Live directories of a standing index store: the newest ``compact=M``
-    plus every ``batch=N`` with N > M (and N < upto_exclusive when given).
-    Batch dirs at or below a completed compaction are superseded — ignoring
-    them makes a crash between the compaction rename and the source-dir
-    deletion harmless (no double counting)."""
-    names = os.listdir(root) if os.path.isdir(root) else []
-    compacts = [
-        int(d.split("=")[1])
-        for d in names
-        if d.startswith("compact=") and not d.endswith(".tmp")
-    ]
-    base = max(compacts) if compacts else -1
-    out = [os.path.join(root, f"compact={base}")] if base >= 0 else []
-    for d in names:
-        # ".tmp"-suffixed dirs are in-flight atomic writes (IVF cell
-        # appends) — invisible until their commit rename
-        if not d.startswith("batch=") or d.endswith(".tmp"):
-            continue
-        n = int(d.split("=")[1])
-        if n > base and (upto_exclusive is None or n < upto_exclusive):
-            out.append(os.path.join(root, d))
-    # an empty micro-batch commits a dir with no data files (just _SUCCESS)
-    # — unreadable and contentless, skip it
-    return sorted(d for d in out if _list_parquet_files(d))
-
-
-def _read_index_dirs(
-    spark: SparkSession, dirs: list[str], cols: list[str], schema=None
-) -> DataFrame | None:
-    """Union the per-dir reads of a bucketed index store. Each dir is read
-    on its own so its hash-bucket subdirs infer as a partition column
-    (mixing batch=/compact= names under one basePath would not); a bucket
-    filter applied to the union pushes into every child scan's partition
-    pruning. Passing ``schema`` (incl. the partition column) skips the
-    per-dir footer-read inference job — on the per-trigger hot path that
-    is one driver round-trip per store per dir, pure fixed cost."""
-    if not dirs:
-        return None
-    reader = spark.read.schema(schema) if schema is not None else spark.read
-    parts = [reader.parquet(d).select(*cols) for d in dirs]
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p)
-    return df
-
-
-def _sweep_superseded_dirs(root: str, upto: int) -> None:
-    """Once compact=<upto> is committed, EVERY compact=<k<upto> and
-    batch=<n<=upto> dir is provably folded into it (older batches fed the
-    older compaction that fed this one) — delete them all, not just one
-    call's srcs list, so a crash between the rename and the rmtree loop
-    cannot strand dirs forever (the retry used to hit the final-exists
-    path and skip cleanup permanently)."""
-    import shutil
-
-    for d in os.listdir(root):
-        kind, _, num = d.partition("=")
-        if not num or d.endswith(".tmp"):
-            continue
-        if (kind == "compact" and int(num) < upto) or (
-            kind == "batch" and int(num) <= upto
-        ):
-            shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-
-
-# Input bytes per task for the store folds and the dedup trigger's
-# signing and shuffles: partition counts scale with the data they carry,
-# never with a constant tuned for local mode or for the cluster.
-_TASK_INPUT_BYTES = 256 << 10
-
-
-def _compact_store(
-    spark: SparkSession,
-    root: str,
-    part_col: str,
-    upto: int,
-    driver_fold_max_bytes: int = 32 << 20,
-) -> int:
-    """Fold one standing store's per-batch directories at or below
-    ``upto`` (plus any older compaction) into ``compact=<upto>``, keeping
-    the hash-partition layout. Bounds the per-read listing/open cost to
-    O(batches since last compaction) instead of O(store lifetime). Same
-    write-to-tmp + atomic-rename commit as every lake object; idempotent
-    (a replayed request against an existing compaction only finishes the
-    sweep). Shared by the dedup-ingest index (bands/corpus) and the
-    persistent IVF index (cells).
-
-    Compaction is a SMALL-FILES problem: the dirs being folded are
-    ``compact_every`` micro-batches of metadata-scale rows, and it runs
-    INSIDE a live trigger (g35 overlaps it, but awaits the result before
-    the standing listing — its wall time is trigger latency). When the
-    fold's total ON-DISK bytes fit under ``driver_fold_max_bytes`` the
-    fold runs driver-side via pyarrow (zero Spark jobs — the same
-    centroid-IO reasoning as the IVF store); above the dial it stays a
-    clustered Spark rewrite, which is the right tool once folds carry
-    real data. The dial measures COMPRESSED parquet, but the fold holds
-    the decompressed Arrow table (transiently twice, across concat) in
-    driver memory — the 32 MB default leaves ~10-20x decompression
-    headroom so the peak stays in the low hundreds of MB; size it to your
-    driver, not to what Spark could shuffle."""
-    import shutil
-
-    srcs = _index_dirs(root, upto_exclusive=upto + 1)
-    final = os.path.join(root, f"compact={upto}")
-    if os.path.exists(final):
-        _sweep_superseded_dirs(root, upto)  # crash-recovery: finish cleanup
-        return 0
-    if len(srcs) <= 1:
-        return 0
-    tmp = final + ".tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    total_bytes = sum(
-        os.path.getsize(os.path.join(dp, f))
-        for s in srcs
-        for dp, _dirs, fs in os.walk(s)
-        for f in fs
-        if f.endswith(".parquet")
-    )
-    if total_bytes <= driver_fold_max_bytes:
-        _fold_store_driver_side(srcs, tmp, part_col)
-    else:
-        schema = parquet_store_schema(srcs[0])
-        cols = [c for c in schema.fieldNames() if c != part_col] + [part_col]
-        merged = _read_index_dirs(spark, srcs, cols, schema)
-        # cluster on the partition value before writing: one file per
-        # bucket instead of files x source-dirs — every later reader opens
-        # the compacted store, so open count is paid per read while this
-        # shuffle is paid once per compaction. The fold's own task count,
-        # never the session's: one per _TASK_INPUT_BYTES of input, capped
-        # at the partition values on disk, past which a hash-clustered
-        # write only adds empty tasks
-        values = {
-            d for s in srcs for d in os.listdir(s) if d.startswith(part_col + "=")
-        }
-        n_tasks = max(1, min(len(values), total_bytes // _TASK_INPUT_BYTES))
-        merged.repartition(n_tasks, F.col(part_col)).write.partitionBy(
-            part_col
-        ).mode("overwrite").parquet(tmp)
-    os.replace(tmp, final)
-    _sweep_superseded_dirs(root, upto)
-    return 1
-
-
-def _fold_store_driver_side(srcs: list[str], tmp: str, part_col: str) -> None:
-    """Metadata-scale fold: read the hive-partitioned source dirs and
-    rewrite them as ONE hive-partitioned dir with pyarrow — no Spark jobs
-    on the trigger's critical path. Produces the same layout the Spark
-    rewrite does (one file per partition value, snappy parquet, hive dir
-    names) so readers cannot tell which path folded the store."""
-    import pyarrow as pa
-    import pyarrow.dataset as pds
-
-    tables = [
-        pds.dataset(s, format="parquet", partitioning="hive").to_table()
-        for s in srcs
-    ]
-    table = pa.concat_tables(tables, promote_options="permissive")
-    part_field = table.schema.field(part_col)
-    pds.write_dataset(
-        table,
-        tmp,
-        format="parquet",
-        partitioning=pds.partitioning(pa.schema([part_field]), flavor="hive"),
-        existing_data_behavior="overwrite_or_ignore",
-    )
-
-
-
-
-# Upper bound on a micro-batch's INPUT bytes for the driver side of a
-# per-trigger store write (the _fold_store_driver_side / centroid-IO
-# reasoning): below it, the per-trigger bands/corpus dirs are laid out with
-# pyarrow from one bounded Arrow collect — no Spark write job, no shuffle,
-# no dynamic-partition commit on the trigger's critical path. Above it the
-# write stays a clustered Spark job (real data work belongs on the
-# cluster). The gate measures the batch's compressed input; the collect
-# holds the decoded rows once in driver memory — same headroom argument as
-# _compact_store's driver_fold_max_bytes. start_dedup_ingest also gates
-# its driver-side probe of the standing band index on it.
-_DRIVER_WRITE_MAX_BYTES = 32 << 20
-
 # Upper bound on the rows of a per-trigger side the dedup trigger treats
 # as small: broadcast on the Spark shape, held and joined on the driver
 # shape (batch band rows, candidate pairs).
 _SMALL_SIDE_MAX_ROWS = 2_000_000
 
 
-def _write_hive_driver_side(tbl, out_dir: str, part_col: str) -> None:
-    """KB/MB-scale per-trigger store write without a Spark write job: lay
-    out an Arrow table the caller already holds (and byte-gates) as the
-    same hive-partitioned snappy parquet dirs the Spark writer produces
-    (the _fold_store_driver_side layout contract — readers cannot tell
-    which path wrote the store). Replay-idempotent like mode("overwrite"):
-    the dir is wiped and rewritten, and it exists afterwards even for an
-    empty table, as the Spark writer's does."""
-    import shutil
-
-    import pyarrow as pa
-    import pyarrow.dataset as pds
-
-    shutil.rmtree(out_dir, ignore_errors=True)
-    pds.write_dataset(
-        tbl,
-        out_dir,
-        format="parquet",
-        partitioning=pds.partitioning(
-            pa.schema([tbl.schema.field(part_col)]), flavor="hive"
-        ),
-        existing_data_behavior="overwrite_or_ignore",
-    )
-    os.makedirs(out_dir, exist_ok=True)
-
-
 def compact_dedup_index(spark: SparkSession, index_dir: str, upto: int) -> int:
     """Fold a dedup-ingest index's per-batch directories at or below
     ``upto`` into one ``compact=<upto>`` dir per store (see
-    _compact_store). Returns stores compacted."""
+    store.compact_store). Returns stores compacted."""
     # the two stores are independent — compact them as concurrent Spark
     # jobs (local threads): compaction runs inside a live trigger (g35
     # overlaps it with batch signing), so its wall time is trigger latency
@@ -891,7 +578,7 @@ def compact_dedup_index(spark: SparkSession, index_dir: str, upto: int) -> int:
     with ThreadPoolExecutor(max_workers=2) as pool:
         futs = [
             pool.submit(
-                _compact_store, spark, os.path.join(index_dir, sub), part_col, upto
+                store.compact_store, spark, os.path.join(index_dir, sub), part_col, upto
             )
             for sub, part_col in (("bands", "bucket"), ("corpus", "idb"))
         ]
@@ -906,7 +593,7 @@ def _files_in_partitions(dirs: list[str], part_col: str, values) -> list[str]:
     return [
         f
         for d in dirs
-        for f in _list_parquet_files(d)
+        for f in store.list_parquet_files(d)
         if os.path.basename(os.path.dirname(f)) in want
     ]
 
@@ -922,11 +609,11 @@ def read_dedup_corpus(spark: SparkSession, index_dir: str) -> DataFrame:
     store has between compactions."""
     from pyspark.sql.types import StructType
 
-    dirs = _index_dirs(os.path.join(index_dir, "corpus"))
+    dirs = store.index_dirs(os.path.join(index_dir, "corpus"))
     if not dirs:
         raise ValueError(f"dedup index {index_dir} has no landed corpus")
-    schema = parquet_store_schema(dirs[0])
-    files = [f for d in dirs for f in _list_parquet_files(d)]
+    schema = store.parquet_store_schema(dirs[0])
+    files = [f for d in dirs for f in store.list_parquet_files(d)]
     return spark.read.schema(
         StructType([f for f in schema.fields if f.name != "idb"])
     ).parquet(*files)
@@ -957,7 +644,7 @@ def start_dedup_ingest(
     batch's own, plus the candidates' ``idb`` buckets of the landed corpus
     — O(batch + candidates), never O(corpus).
 
-    Two shapes of one trigger, one gate (``_DRIVER_WRITE_MAX_BYTES``):
+    Two shapes of one trigger, one gate (``store.DRIVER_MAX_BYTES``):
 
     - DRIVER shape, when the batch's input bytes are known and under the
       gate and the standing ``bands`` files in the batch's touched
@@ -1047,11 +734,11 @@ def start_dedup_ingest(
         import pyarrow.compute as pc
         import pyarrow.dataset as pds
 
-        # one signing task per _TASK_INPUT_BYTES of input, as on the Spark
+        # one signing task per TASK_INPUT_BYTES of input, as on the Spark
         # shape; a trickle batch signs in the partitions it arrived in
         n_sign = min(
             batch_df.sparkSession.sparkContext.defaultParallelism,
-            in_bytes // _TASK_INPUT_BYTES,
+            in_bytes // store.TASK_INPUT_BYTES,
         )
         src = batch_df.repartition(n_sign) if n_sign > 1 else batch_df
         signed = docs_with_band_hashes(src).toArrow()
@@ -1078,10 +765,10 @@ def start_dedup_ingest(
         if compact_f is not None:
             compact_f.result()  # dir layout must be stable before listing
         standing_files = _files_in_partitions(
-            _index_dirs(bands_dir, upto_exclusive=batch_id), "bucket", touched
+            store.index_dirs(bands_dir, upto_exclusive=batch_id), "bucket", touched
         )
         standing_bytes = sum(os.path.getsize(f) for f in standing_files)
-        if standing_bytes >= _DRIVER_WRITE_MAX_BYTES:
+        if standing_bytes >= store.DRIVER_MAX_BYTES:
             return False
         # the standing rows the batch's band hashes can meet, then the
         # candidate join's size before it is built
@@ -1118,7 +805,7 @@ def start_dedup_ingest(
             text_cols = docs.select(["doc_id", "text"])
             add_texts(text_cols.filter(pc.is_in(text_cols.column("doc_id"), need)))
             corpus_files = _files_in_partitions(
-                _index_dirs(corpus_dir, upto_exclusive=batch_id),
+                store.index_dirs(corpus_dir, upto_exclusive=batch_id),
                 "idb",
                 {i % n_buckets for i in id_a},
             )
@@ -1129,7 +816,7 @@ def start_dedup_ingest(
             )
         dropped = verify_pairs_on_driver(zip(id_a, id_b), texts, threshold)
         bands_f = pool.submit(
-            _write_hive_driver_side,
+            store.write_hive_arrow,
             batch_bands,
             os.path.join(bands_dir, f"batch={batch_id}"),
             "bucket",
@@ -1144,7 +831,7 @@ def start_dedup_ingest(
         ).append_column(
             "idb", pa.array(np.mod(ids.to_numpy(), n_buckets).astype(np.int32))
         )
-        _write_hive_driver_side(
+        store.write_hive_arrow(
             out, os.path.join(corpus_dir, f"batch={batch_id}"), "idb"
         )
         bands_f.result()
@@ -1182,7 +869,7 @@ def start_dedup_ingest(
             # file — spread the Arrow signing kernel across the executors
             # (a 2 KB/doc shuffle buys a parallelism-times-faster UDF pass).
             # The spread is BYTE-PROPORTIONAL (one signing task per
-            # _TASK_INPUT_BYTES of input, floor 4): an explicit
+            # TASK_INPUT_BYTES of input, floor 4): an explicit
             # repartition(N) is pinned — AQE cannot coalesce
             # REPARTITION_BY_NUM — so sizing it to the cluster for a
             # KB-scale batch would pin dozens of near-empty tasks into
@@ -1192,7 +879,7 @@ def start_dedup_ingest(
             sign_par = (
                 par
                 if in_bytes is None
-                else min(par, max(4, in_bytes // _TASK_INPUT_BYTES))
+                else min(par, max(4, in_bytes // store.TASK_INPUT_BYTES))
             )
             # Trigger-scoped SHUFFLE partition count, derived from the
             # batch's input bytes exactly like sign_par (partition counts
@@ -1208,7 +895,7 @@ def start_dedup_ingest(
             # and its two pool threads all want the trigger's value).
             if in_bytes is not None:
                 cur = spark.conf.get("spark.sql.shuffle.partitions")
-                trig = min(int(cur), max(4, in_bytes // _TASK_INPUT_BYTES))
+                trig = min(int(cur), max(4, in_bytes // store.TASK_INPUT_BYTES))
                 if trig < int(cur):
                     prev_parts = cur
                     spark.conf.set("spark.sql.shuffle.partitions", str(trig))
@@ -1218,27 +905,6 @@ def start_dedup_ingest(
                 )
             )
             batch_bands_dir = os.path.join(bands_dir, f"batch={batch_id}")
-            # batches under the byte gate write both stores driver-side
-            # (one Arrow collect each, pyarrow hive layout — no Spark write
-            # job, no per-trigger dynamic-partition commit)
-            driver_write = (
-                in_bytes is not None and in_bytes <= _DRIVER_WRITE_MAX_BYTES
-            )
-
-            def _write_bands() -> None:
-                if driver_write:
-                    _write_hive_driver_side(bb.toArrow(), batch_bands_dir, "bucket")
-                else:
-                    # clustered by bucket so each batch lands ~one file per
-                    # bucket (the signing repartition would otherwise fan
-                    # every bucket across sign_par files)
-                    (
-                        bb.repartition(F.col("bucket"))
-                        .write.partitionBy("bucket")
-                        .mode("overwrite")
-                        .parquet(batch_bands_dir)
-                    )
-
             # A batch carrying >= 64 KB of documents per bucket on average
             # touches ~every bucket, so bucket-pruning the standing read
             # buys nothing there. A sourceless batch (no WAL -> None)
@@ -1254,8 +920,11 @@ def start_dedup_ingest(
             # the bands write ALWAYS overlaps the candidate/verify chain
             # (nothing in this trigger reads this batch's bands dir; the
             # trigger returns only after .result(), so a crash replays
-            # both idempotent writes together)
-            bands_write_f = pool.submit(_write_bands)
+            # both idempotent writes together). Both store writes are
+            # driver-side under the byte gate (store.write_partitioned)
+            bands_write_f = pool.submit(
+                store.write_partitioned, bb, batch_bands_dir, "bucket", in_bytes
+            )
             if bulk:
                 # BULK batch: it will touch ~every bucket, so the
                 # bucket-collect job AND the standing-read pruning are
@@ -1277,9 +946,9 @@ def start_dedup_ingest(
                 _coverage["frac"] = len(batch_buckets) / max(n_buckets, 1)
             if compact_f is not None:
                 compact_f.result()  # dir layout must be stable before listing
-            standing = _read_index_dirs(
+            standing = store.read_index_dirs(
                 spark,
-                _index_dirs(bands_dir, upto_exclusive=batch_id),
+                store.index_dirs(bands_dir, upto_exclusive=batch_id),
                 cols=["doc_id", "band", "bh", "bucket"],
                 schema=bands_schema,
             )
@@ -1337,9 +1006,9 @@ def start_dedup_ingest(
                     and sum(r["count"] for r in cand_buckets_n) <= _SMALL_SIDE_MAX_ROWS
                 )
             texts = docs.select("doc_id", "text")
-            prior_corpus = _read_index_dirs(
+            prior_corpus = store.read_index_dirs(
                 spark,
-                _index_dirs(corpus_dir, upto_exclusive=batch_id),
+                store.index_dirs(corpus_dir, upto_exclusive=batch_id),
                 cols=["doc_id", "text", "idb"],
                 schema=corpus_schema,
             )
@@ -1375,12 +1044,7 @@ def start_dedup_ingest(
                 .withColumn("idb", F.pmod("doc_id", F.lit(n_buckets)).cast("int"))
             )
             corpus_batch_dir = os.path.join(corpus_dir, f"batch={batch_id}")
-            if driver_write:
-                _write_hive_driver_side(out.toArrow(), corpus_batch_dir, "idb")
-            else:
-                out.repartition(F.col("idb")).write.partitionBy("idb").mode(
-                    "overwrite"
-                ).parquet(corpus_batch_dir)
+            store.write_partitioned(out, corpus_batch_dir, "idb", in_bytes)
             bands_write_f.result()
             if bulk:
                 # refresh the coverage stat from the landed layout (one
@@ -1408,7 +1072,7 @@ def start_dedup_ingest(
             # walk then reads empty. Sequenced before the submit it is
             # race-free, and compaction never changes store EMPTINESS,
             # only its dir layout.
-            has_standing = bool(_index_dirs(bands_dir, upto_exclusive=batch_id))
+            has_standing = bool(store.index_dirs(bands_dir, upto_exclusive=batch_id))
             compact_f = None
             if compact_every and batch_id and batch_id % compact_every == 0:
                 compact_f = pool.submit(
@@ -1422,7 +1086,7 @@ def start_dedup_ingest(
             in_bytes = _batch_input_bytes(checkpoint_dir, batch_id)
             if (
                 in_bytes is not None
-                and in_bytes <= _DRIVER_WRITE_MAX_BYTES
+                and in_bytes <= store.DRIVER_MAX_BYTES
                 and on_driver(batch_df, batch_id, in_bytes, compact_f, pool)
             ):
                 return

@@ -24,27 +24,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from aws_kinesis_spark import store
+
 ROLLUP_SCHEMA = (
     "hour_start TIMESTAMP, event_type STRING, n_events BIGINT, sum_value DOUBLE"
 )
-
-
-def _current_dir(rollup_dir: str) -> str | None:
-    """Resolve the _CURRENT pointer to a version dir NAME — the shared
-    pointer-swap resolver (round-13 review: this module carried a drifted
-    twin of pipeline.py's pointer parse and version scan; one copy now).
-    Local import so rollup loads without pulling the pipeline module."""
-    from aws_kinesis_spark.streaming.pipeline import _pointer_dir
-
-    return _pointer_dir(rollup_dir)
-
-
-def _committed_version_dirs(rollup_dir: str) -> dict[int, str]:
-    """batch_id -> committed dir name (shared resolve pass, see
-    _current_dir)."""
-    from aws_kinesis_spark.streaming.pipeline import _committed_versions
-
-    return _committed_versions(rollup_dir)
 
 
 def _read_version(spark: SparkSession, rollup_dir: str, name: str) -> DataFrame:
@@ -64,7 +48,7 @@ def _read_version(spark: SparkSession, rollup_dir: str, name: str) -> DataFrame:
 def read_rollup(spark: SparkSession, rollup_dir: str) -> DataFrame:
     """Read the current committed rollup version (empty frame before the
     first commit)."""
-    d = _current_dir(rollup_dir)
+    d = store.pointer_dir(rollup_dir)
     if d is None:
         return spark.createDataFrame([], ROLLUP_SCHEMA)
     return _read_version(spark, rollup_dir, d)
@@ -77,22 +61,19 @@ def _retire_and_merge_base(
     replay-sweep interaction is unit-testable — the round-13 truncation
     defect below lived exactly here). Retires unreachable version dirs,
     then returns the frame this batch combines against."""
-    ptr_dir = _current_dir(rollup_dir)
-    committed = _committed_version_dirs(rollup_dir)
+    ptr_dir = store.pointer_dir(rollup_dir)
+    ptr = store.version_of_dir(ptr_dir) if ptr_dir is not None else None
+    committed = store.committed_versions(rollup_dir)
     keep_bids = set(sorted(b for b in committed if b <= batch_id)[-2:])
     for d in os.listdir(rollup_dir):
-        if not d.startswith("v") or d.endswith(".tmp"):
+        parsed = store.version_of_dir(d)
+        if parsed is None:
             continue
-        stem, _, att = d[1:].partition("_")
-        if not stem.isdigit() or (att and not att.isdigit()):
-            continue
-        bid = int(stem)
+        bid = parsed[0]
         if d == ptr_dir:
             continue  # the live dir is never swept, whatever its age
         keep_dir = committed.get(bid)
-        if ptr_dir is not None and (
-            ptr_dir == f"v{bid}" or ptr_dir.startswith(f"v{bid}_")
-        ):
+        if ptr is not None and ptr[0] == bid:
             # attempt names recycle after sweeps, so "highest attempt"
             # alone could evict the live dir — the pointer wins
             keep_dir = ptr_dir
@@ -102,7 +83,7 @@ def _retire_and_merge_base(
     # combine against the newest version OLDER than this batch — not the
     # pointer: if batch N committed its version but the checkpoint write
     # failed, the replayed batch N would otherwise double-count itself
-    committed = _committed_version_dirs(rollup_dir)
+    committed = store.committed_versions(rollup_dir)
     prev = [b for b in committed if b < batch_id]
     if prev:
         # explicit schema (see _read_version) and the day partition
@@ -183,16 +164,9 @@ def start_continuous_rollup(
         # (repartition(1) would serialize every version through one task)
         # and readers prune to the days they query.
         #
-        # REPLAY via POINTER SWAP: the shared _commit_table_version
-        # protocol body (one fresh v{N}_{attempt} dir, .tmp stage, one
-        # rename, pointer flip — this module pioneered it in round 12;
-        # round 13 extracted the single shared copy after the
-        # warehouse/SCD2 stores were found carrying a diverged older
-        # protocol). Local import: rollup loads without pulling the whole
-        # pipeline module at import time.
-        from aws_kinesis_spark.streaming.pipeline import _commit_table_version
-
-        _commit_table_version(
+        # REPLAY via POINTER SWAP: store.commit_table_version (one fresh
+        # v{N}_{attempt} dir, .tmp stage, one rename, pointer flip)
+        store.commit_table_version(
             combined,
             rollup_dir,
             batch_id,

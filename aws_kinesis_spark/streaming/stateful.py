@@ -129,124 +129,3 @@ def start_buffer_accounting(
         .start()
     )
 
-
-# --- transformWithState (Spark 4.x successor API) ---------------------------
-
-import threading
-
-# serializes the session-global state-store-provider swap below
-_PROVIDER_SWAP_LOCK = threading.Lock()
-
-RUNNING_COUNT_SCHEMA = "user_id BIGINT, event_id BIGINT, seq BIGINT"
-
-
-def _make_running_count_processor():
-    """Build the StatefulProcessor class lazily: the import lives here so
-    environments running an older Spark (no transformWithState) can still
-    import this module for the applyInPandasWithState operator above."""
-    from pyspark.sql.streaming import StatefulProcessor
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    class RunningCountProcessor(StatefulProcessor):
-        """E6 on the modern API: per-user running event sequence in a
-        ValueState, the 'last processed position per key' bookkeeping the
-        reference keeps per shard (README.md:305-309) — here keyed state
-        survives micro-batches in the RocksDB state store."""
-
-        def init(self, handle) -> None:
-            self._cnt = handle.getValueState(
-                "cnt", StructType([StructField("n", LongType())])
-            )
-
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            chunks = list(rows)
-            if not chunks:
-                return
-            batch = (
-                pd.concat(chunks)
-                .sort_values(["ts", "event_id"])
-                .reset_index(drop=True)
-            )
-            base = self._cnt.get()[0] if self._cnt.exists() else 0
-            self._cnt.update((base + len(batch),))
-            yield pd.DataFrame(
-                {
-                    "user_id": batch["user_id"],
-                    "event_id": batch["event_id"],
-                    "seq": base + pd.RangeIndex(1, len(batch) + 1),
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return RunningCountProcessor()
-
-
-def run_running_count(
-    ev_stream: DataFrame, checkpoint_dir: str, sink_table: str, timeout_s: int = 300
-) -> None:
-    """E6 (transformWithState flavor): per-user running event count.
-    Raises TimeoutError if the backlog does not drain within ``timeout_s``
-    (the query is stopped first) — silently returning on timeout left an
-    orphaned query running against a half-filled memory sink with no
-    handle to stop it (round-12 review).
-
-    transformWithState requires the RocksDB state store (the provider conf is
-    swapped in for this query and restored after) AND a working
-    ``google.protobuf`` install for its driver-side state server — gate
-    callers with ``pytest.importorskip("google.protobuf.descriptor")`` or
-    equivalent; ``applyInPandasWithState`` (above) is the dependency-free E6
-    path and the one the registry exposes.
-
-    The provider conf is SESSION-GLOBAL: a module lock serializes
-    concurrent run_running_count calls (interleaved swap/restore otherwise
-    leaked RocksDB into the session permanently — round-13 review), but a
-    DIFFERENT stateful query started elsewhere on the session during this
-    call still plans on RocksDB; don't start other stateful streams
-    concurrently with this helper."""
-    spark = ev_stream.sparkSession
-    key = "spark.sql.streaming.stateStore.providerClass"
-    with _PROVIDER_SWAP_LOCK:
-        prev = spark.conf.get(key, None)
-        spark.conf.set(
-            key,
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
-        _run_running_count_locked(spark, ev_stream, checkpoint_dir, sink_table,
-                                  timeout_s, key, prev)
-
-
-def _run_running_count_locked(
-    spark, ev_stream, checkpoint_dir, sink_table, timeout_s, key, prev
-) -> None:
-    try:
-        out = (
-            ev_stream.select("user_id", "event_id", "ts")
-            .groupBy("user_id")
-            .transformWithStateInPandas(
-                statefulProcessor=_make_running_count_processor(),
-                outputStructType=RUNNING_COUNT_SCHEMA,
-                outputMode="append",
-                timeMode="none",
-            )
-        )
-        q = (
-            out.writeStream.format("memory")
-            .queryName(sink_table)
-            .outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout_s):
-            q.stop()
-            raise TimeoutError(
-                f"running-count stream did not drain in {timeout_s}s; "
-                f"sink table {sink_table!r} holds a partial result"
-            )
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)

@@ -299,7 +299,7 @@ def test_full_probe_equals_bruteforce_exactly(spark, em, index):
 
 def test_update_rejects_batch_id_at_or_below_compaction(spark, em, tmp_path):
     """An explicit batch_id at or below the newest compaction would write a
-    batch dir _index_dirs treats as superseded — appended vectors would be
+    batch dir store.index_dirs treats as superseded — appended vectors would be
     invisible to every probe and swept by the next compaction. The update
     must refuse loudly instead."""
     import pytest as _pytest

@@ -817,9 +817,9 @@ def test_vacuum_age_guard_spares_inflight_commits(spark, envelope, tmp_path):
 
     aged = vacuum_orphans(lake, older_than_seconds=0)
     assert aged.n_orphans > 0
-    from aws_kinesis_spark.sources.lake import _list_parquet_files
+    from aws_kinesis_spark.store import list_parquet_files
 
-    assert not _list_parquet_files(os.path.join(lake, "data", "batch=1"))
+    assert not list_parquet_files(os.path.join(lake, "data", "batch=1"))
     assert read_via_manifest(spark, lake, 0).count() == envelope.count()
 
 
@@ -879,12 +879,12 @@ def test_store_schema_from_one_footer_matches_spark_inference(spark, envelope, t
     metadata) and on a committed warehouse version."""
     from pyspark.sql import types as T
 
-    from aws_kinesis_spark.sources.lake import parquet_store_schema
-    from aws_kinesis_spark.streaming.pipeline import (
-        WAREHOUSE_SCHEMA,
-        _commit_table_version,
-        _version_dir,
+    from aws_kinesis_spark.store import (
+        commit_table_version,
+        parquet_store_schema,
+        version_dir,
     )
+    from aws_kinesis_spark.streaming.pipeline import WAREHOUSE_SCHEMA
 
     lake = str(tmp_path / "lake")
     run_lake_batch(envelope, lake, batch_id=0, raw_backup=False)
@@ -899,10 +899,10 @@ def test_store_schema_from_one_footer_matches_spark_inference(spark, envelope, t
 
     wh = str(tmp_path / "wh")
     os.makedirs(wh)
-    _commit_table_version(
+    commit_table_version(
         spark.createDataFrame([(1, "open", None)], WAREHOUSE_SCHEMA), wh, 0
     )
-    vdir = _version_dir(wh, 0)
+    vdir = version_dir(wh, 0)
     assert parquet_store_schema(vdir) == spark.read.parquet(vdir).schema
     # a directory with no data file has no schema to offer
     (tmp_path / "empty").mkdir()
@@ -1167,7 +1167,7 @@ def test_replayed_batch_leaves_error_paths_identical(spark, envelope, tmp_path, 
     replay across every taint mix (clean, partly poisoned, all-poison)."""
     import hashlib
 
-    from aws_kinesis_spark.sources.lake import _list_parquet_files
+    from aws_kinesis_spark.store import list_parquet_files
 
     lake = str(tmp_path / "lake")
     if taint == "some":
@@ -1184,7 +1184,7 @@ def test_replayed_batch_leaves_error_paths_identical(spark, envelope, tmp_path, 
 
     def state(sub: str):
         root = os.path.join(lake, sub)
-        files = _list_parquet_files(root) if os.path.isdir(root) else []
+        files = list_parquet_files(root) if os.path.isdir(root) else []
         if not files:
             return (0, None)
         pdf = spark.read.parquet(root).toPandas()

@@ -749,38 +749,32 @@ def test_rename_sites_enumerated_against_s3_translation_table():
                                                         # swap (stats-table
                                                         # marker discipline,
                                                         # pyarrow-written)
-        ("operators/ivf_index.py", "_swap_in"),         # THE atomic install
+        ("store.py", "swap_in"),                        # THE atomic install
                                                         # body behind cell-
                                                         # batch appends AND
                                                         # tombstone appends
                                                         # (SCALE.md §7's
                                                         # _write_cells_batch
-                                                        # row documents it;
-                                                        # round-13: the two
-                                                        # call sites' inline
-                                                        # renames folded into
-                                                        # this one swap)
+                                                        # row documents it)
         ("operators/ivf_index.py", "build_ivf_index"),  # meta-last PUT flips
                                                         # the index readable
         ("operators/ivf_index.py", "compact_ivf_index"),  # tombstone-applying
                                                         # fold commit (same
                                                         # compact=<upto> key
                                                         # PUT as
-                                                        # _compact_store)
+                                                        # compact_store)
         ("operators/ivf_index.py", "_bump_tomb_hwm"),   # cleared-id
                                                         # high-water-mark
                                                         # swap (stats-table
                                                         # marker discipline)
-        ("streaming/pipeline.py", "_commit_table_version"),  # warehouse/SCD2
-                                                        # pointer-swap commit
-                                                        # (fresh version dir +
-                                                        # _CURRENT CAS — the
-                                                        # rollup protocol)
-        ("streaming/pipeline.py", "_compact_store"),    # batch-dir key PUT
-                                                        # (compact_dedup_index
-                                                        # per-store body)
-        # (rollup's flush now commits through pipeline.py's shared
-        # _commit_table_version — the round-13 consolidation)
+        ("store.py", "commit_table_version"),           # warehouse/SCD2/
+                                                        # rollup pointer-swap
+                                                        # commit (fresh
+                                                        # version dir +
+                                                        # _CURRENT CAS)
+        ("store.py", "compact_store"),                  # batch-dir key PUT
+                                                        # (dedup-index and
+                                                        # IVF cells folds)
     }
     found = set()
 
@@ -805,6 +799,55 @@ def test_rename_sites_enumerated_against_s3_translation_table():
     stale = documented - found
     assert not undocumented, f"rename sites missing a SCALE.md §7 row: {undocumented}"
     assert not stale, f"SCALE.md §7 rows with no surviving rename site: {stale}"
+
+
+def test_store_layering_has_no_cross_module_private_imports():
+    """The store layout lives in aws_kinesis_spark/store.py: the store and
+    the modules that use it (pipeline, rollup, ivf_index, lake) reach each
+    other's code only through public names — no ``_``-prefixed name
+    imported from, or read off, another aws_kinesis_spark module — and
+    store.py imports none of those four modules."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "aws_kinesis_spark"
+    users = {
+        "streaming/pipeline.py": "aws_kinesis_spark.streaming.pipeline",
+        "streaming/rollup.py": "aws_kinesis_spark.streaming.rollup",
+        "operators/ivf_index.py": "aws_kinesis_spark.operators.ivf_index",
+        "sources/lake.py": "aws_kinesis_spark.sources.lake",
+    }
+    private = []
+    for rel in ["store.py", *users]:
+        tree = ast.parse((pkg / rel).read_text())
+        imported = set()  # package modules and names this file imports
+        aliases = set()  # local names bound by those imports
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and (node.module or "").startswith(
+                "aws_kinesis_spark"
+            ):
+                imported.add(node.module)
+                for a in node.names:
+                    imported.add(f"{node.module}.{a.name}")
+                    aliases.add(a.asname or a.name)
+                    if a.name.startswith("_"):
+                        private.append((rel, f"{node.module}.{a.name}"))
+            elif isinstance(node, ast.Import):
+                for a in node.names:
+                    if a.name.startswith("aws_kinesis_spark"):
+                        imported.add(a.name)
+                        aliases.add(a.asname or a.name.split(".")[0])
+        private += [
+            (rel, f"{n.value.id}.{n.attr}")
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Attribute)
+            and isinstance(n.value, ast.Name)
+            and n.value.id in aliases
+            and n.attr.startswith("_")
+        ]
+        if rel == "store.py":
+            assert not imported & set(users.values()), imported
+    assert not private, f"cross-module private imports: {private}"
 
 
 def test_vocab_coverage_broadcasts_vocab_not_corpus(spark):

@@ -544,32 +544,6 @@ def test_stateful_buffer_byte_bound(spark, tmp_path):
         assert r.n_records > 1
 
 
-def test_transform_with_state_running_count(spark, tmp_path):
-    """E6 on the Spark 4 transformWithState API: per-user running sequence
-    equals the batch row_number answer. Skips where google.protobuf (required
-    by the TWS driver-side state server) is broken/absent."""
-    pytest.importorskip("google.protobuf.descriptor")
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    from aws_kinesis_spark.streaming.pipeline import event_stream
-    from aws_kinesis_spark.streaming.stateful import run_running_count
-    from aws_kinesis_spark.tables import load
-
-    ev = load(spark, "/root/testdata/sf0.001", "events")
-    inp = str(tmp_path / "events")
-    ev.repartition(3).write.mode("overwrite").parquet(inp)
-
-    tbl = _uniq("e10")
-    run_running_count(event_stream(spark, inp), str(tmp_path / "ckpt"), tbl)
-    got = spark.table(tbl)
-
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    want = ev.select("user_id", "event_id", F.row_number().over(w).alias("seq"))
-    assert got.count() == want.count()
-    assert got.exceptAll(want.selectExpr("user_id", "event_id", "CAST(seq AS BIGINT) seq")).count() == 0
-
-
 def test_lake_path_resume_processes_only_new_data(spark, tmp_path):
     """B6/B7 (README.md:305-309): after a restart from the same checkpoint,
     only records appended since the last processed offset flow through —
@@ -1393,9 +1367,8 @@ def test_dedup_ingest_bucketed_index_prunes_and_compacts(spark, tmp_path):
     import os
 
     from aws_kinesis_spark.operators.dedup import ngram_jaccard_dedup
+    from aws_kinesis_spark.store import index_dirs, read_index_dirs
     from aws_kinesis_spark.streaming.pipeline import (
-        _index_dirs,
-        _read_index_dirs,
         read_dedup_corpus,
         start_dedup_ingest,
     )
@@ -1457,8 +1430,8 @@ def test_dedup_ingest_bucketed_index_prunes_and_compacts(spark, tmp_path):
 
     # 3) bucket pruning: a standing-band read filtered to one bucket value
     # must only OPEN files under that bucket's directories
-    dirs = _index_dirs(os.path.join(idx, "bands"))
-    bands = _read_index_dirs(spark, dirs, ["doc_id", "band", "bh", "bucket"])
+    dirs = index_dirs(os.path.join(idx, "bands"))
+    bands = read_index_dirs(spark, dirs, ["doc_id", "band", "bh", "bucket"])
     b = bands.select("bucket").first()[0]
     opened = {
         r[0]
@@ -1469,8 +1442,8 @@ def test_dedup_ingest_bucketed_index_prunes_and_compacts(spark, tmp_path):
     }
     assert opened and all(f"bucket={b}/" in f for f in opened), opened
     # and the corpus-text fetch prunes by id-bucket the same way
-    cdirs = _index_dirs(os.path.join(idx, "corpus"))
-    corpus = _read_index_dirs(spark, cdirs, ["doc_id", "text", "idb"])
+    cdirs = index_dirs(os.path.join(idx, "corpus"))
+    corpus = read_index_dirs(spark, cdirs, ["doc_id", "text", "idb"])
     opened_c = {
         r[0]
         for r in corpus.filter(F.col("idb") == 3)
@@ -1532,21 +1505,24 @@ def test_kinesis_sim_options_map_to_public_connector_surface():
     assert set(CONSUMER_MODES) == {"polling", "efo"}
 
 
-def test_compact_spark_and_driver_folds_produce_identical_stores(spark, tmp_path):
-    """Round-12: compaction folds driver-side (pyarrow) under the byte
-    dial and via a clustered Spark rewrite above it. Both paths must
-    produce the SAME committed store — rows, hive layout, and readability
-    through _read_index_dirs — or the dial would silently change results
-    at the size boundary. The Spark path would otherwise be untested (all
-    fixtures fit under the dial). Either fold's footer also gives the
+def test_compact_spark_and_driver_folds_produce_identical_stores(
+    spark, tmp_path, monkeypatch
+):
+    """Compaction folds driver-side (pyarrow) under store.DRIVER_MAX_BYTES
+    and via a clustered Spark rewrite above it. Both paths must produce
+    the SAME committed store — rows, hive layout, and readability through
+    read_index_dirs — or the gate would silently change results at the
+    size boundary. The Spark path would otherwise be untested (all
+    fixtures fit under the gate). Either fold's footer also gives the
     schema Spark's own inference reads (parquet_store_schema)."""
     import os
 
-    from aws_kinesis_spark.sources.lake import parquet_store_schema
-    from aws_kinesis_spark.streaming.pipeline import (
-        _compact_store,
-        _index_dirs,
-        _read_index_dirs,
+    from aws_kinesis_spark import store
+    from aws_kinesis_spark.store import (
+        compact_store,
+        index_dirs,
+        parquet_store_schema,
+        read_index_dirs,
     )
 
     def build(root):
@@ -1559,13 +1535,11 @@ def test_compact_spark_and_driver_folds_produce_identical_stores(spark, tmp_path
             )
 
     roots = {}
-    for variant, dial in (("driver", 1 << 30), ("spark", 0)):
+    for variant, gate in (("driver", 1 << 30), ("spark", 0)):
+        monkeypatch.setattr(store, "DRIVER_MAX_BYTES", gate)
         root = str(tmp_path / variant)
         build(root)
-        assert (
-            _compact_store(spark, root, "bucket", upto=2, driver_fold_max_bytes=dial)
-            == 1
-        )
+        assert compact_store(spark, root, "bucket", upto=2) == 1
         names = {n for n in os.listdir(root) if "=" in n}
         assert names == {"compact=2"}, (variant, names)
         # hive layout: one bucket=V subdir per value, parquet inside
@@ -1573,7 +1547,7 @@ def test_compact_spark_and_driver_folds_produce_identical_stores(spark, tmp_path
         assert sub == {f"bucket={v}" for v in range(4)}, (variant, sub)
         folded = os.path.join(root, "compact=2")
         assert parquet_store_schema(folded) == spark.read.parquet(folded).schema
-        df = _read_index_dirs(spark, _index_dirs(root), cols=["doc_id", "bucket"])
+        df = read_index_dirs(spark, index_dirs(root), cols=["doc_id", "bucket"])
         roots[variant] = {(r.doc_id, r.bucket) for r in df.collect()}
     assert roots["driver"] == roots["spark"]
     assert len(roots["driver"]) == 24
@@ -1850,10 +1824,8 @@ def test_warehouse_replay_commits_fresh_dir_and_never_breaks_pointer(spark, tmp_
     rewrite)."""
     import json as _json
 
-    from aws_kinesis_spark.streaming.pipeline import (
-        _commit_table_version,
-        read_warehouse_table,
-    )
+    from aws_kinesis_spark.store import commit_table_version
+    from aws_kinesis_spark.streaming.pipeline import read_warehouse_table
 
     table = str(tmp_path / "wh")
     os.makedirs(table)
@@ -1863,13 +1835,13 @@ def test_warehouse_replay_commits_fresh_dir_and_never_breaks_pointer(spark, tmp_
         [(1, "A", Decimal(10)), (2, "B", Decimal(20))],
         "id LONG, status STRING, sequence_number DECIMAL(38,0)",
     )
-    _commit_table_version(df, table, 1)
+    commit_table_version(df, table, 1)
     ptr1 = _json.load(open(os.path.join(table, "_CURRENT")))
     assert ptr1 == {"version": 1, "dir": "v1"}
     live_before = sorted(os.listdir(os.path.join(table, "v1")))
     # replay of the SAME batch: fresh attempt dir, pointer flips, the
     # previously live dir is byte-untouched
-    _commit_table_version(df, table, 1)
+    commit_table_version(df, table, 1)
     ptr2 = _json.load(open(os.path.join(table, "_CURRENT")))
     assert ptr2 == {"version": 1, "dir": "v1_1"}
     assert sorted(os.listdir(os.path.join(table, "v1"))) == live_before
@@ -1891,11 +1863,8 @@ def test_rollup_retires_versions_beyond_the_replay_horizon(spark, tmp_path):
     replayed batch, and read_rollup resolves only _CURRENT) — after a
     multi-batch stream at most the two newest committed batch ids may
     remain on disk, and the answer is still the batch recompute."""
-    from aws_kinesis_spark.streaming.rollup import (
-        _committed_version_dirs,
-        read_rollup,
-        start_continuous_rollup,
-    )
+    from aws_kinesis_spark.store import committed_versions
+    from aws_kinesis_spark.streaming.rollup import read_rollup, start_continuous_rollup
 
     inp = str(tmp_path / "events")
     ev = load(spark, SF, "events")
@@ -1911,7 +1880,7 @@ def test_rollup_retires_versions_beyond_the_replay_horizon(spark, tmp_path):
     # the read grace), so the steady-state bound is the two kept ids plus
     # the just-committed one — constant in stream length, vs one copy per
     # micro-batch before the fix
-    committed = _committed_version_dirs(rollup)
+    committed = committed_versions(rollup)
     assert len(committed) <= 3, sorted(committed)
     want = {
         (r.hs, r.event_type): (r.n, round(r.sv, 4))
@@ -1972,7 +1941,7 @@ def test_warehouse_replay_attempts_commit_identical_content(spark, tmp_path):
     drifted payload) could collapse to DIFFERENT winners per attempt,
     committing a v{N}_attempt whose content diverges from v{N}. The flush
     now projects to the replay-stable columns first — every attempt of a
-    version must hold identical content (_version_dir's invariant)."""
+    version must hold identical content (store.version_dir's invariant)."""
     from aws_kinesis_spark.streaming.pipeline import start_warehouse_upsert
 
     orders = load(spark, SF, "orders").limit(40)
@@ -1988,7 +1957,7 @@ def test_warehouse_replay_attempts_commit_identical_content(spark, tmp_path):
     )
     q.awaitTermination(120)
     # replay attempt: a FRESH checkpoint re-runs batch 0 against the same
-    # table — _commit_table_version lands it as v0_1
+    # table — store.commit_table_version lands it as v0_1
     q2 = start_warehouse_upsert(
         envelope_stream(spark, inp), table, str(tmp_path / "ckpt2")
     )
@@ -2176,17 +2145,16 @@ def test_stream_source_file_kind_rejects_kinesis_mode_args(spark, tmp_path):
 
 
 def test_driver_side_store_write_matches_spark_layout(spark, tmp_path):
-    """r15 optimization: KB-scale micro-batches write their bands/corpus
-    dirs driver-side with pyarrow (_write_hive_driver_side) instead of a
-    Spark partitioned-write job. The layout contract is that READERS
-    cannot tell the two writers apart: same hive partition dirs, same
+    """store.write_partitioned writes a store dir driver-side with pyarrow
+    when the input bytes are known and under the gate, and with a Spark
+    partitioned-write job otherwise. The layout contract is that READERS
+    cannot tell the two branches apart: same hive partition dirs, same
     rows under both the schema-pinned per-trigger read and the
     inference read, and the same schema from one footer
     (parquet_store_schema, which the corpus reader passes to Spark)."""
     from pyspark.sql import functions as F
 
-    from aws_kinesis_spark.sources.lake import parquet_store_schema
-    from aws_kinesis_spark.streaming.pipeline import _write_hive_driver_side
+    from aws_kinesis_spark.store import parquet_store_schema, write_partitioned
 
     df = spark.range(0, 500).select(
         F.col("id").alias("doc_id"),
@@ -2196,10 +2164,8 @@ def test_driver_side_store_write_matches_spark_layout(spark, tmp_path):
     )
     d_driver = str(tmp_path / "driver")
     d_spark = str(tmp_path / "sparkw")
-    _write_hive_driver_side(df.toArrow(), d_driver, "idb")
-    df.repartition(F.col("idb")).write.partitionBy("idb").mode(
-        "overwrite"
-    ).parquet(d_spark)
+    write_partitioned(df, d_driver, "idb", 0)
+    write_partitioned(df, d_spark, "idb", None)
 
     import os
 
@@ -2216,9 +2182,7 @@ def test_driver_side_store_write_matches_spark_layout(spark, tmp_path):
     cols = ["doc_id", "text", "kept", "idb"]
     assert sorted(a.select(cols).collect()) == sorted(b.select(cols).collect())
     # replay idempotency: rewriting the same dir converges, no stale files
-    _write_hive_driver_side(
-        df.filter(F.col("doc_id") < 100).toArrow(), d_driver, "idb"
-    )
+    write_partitioned(df.filter(F.col("doc_id") < 100), d_driver, "idb", 0)
     assert spark.read.parquet(d_driver).count() == 100
 
 
@@ -2237,11 +2201,13 @@ def test_store_reads_plan_on_the_driver_without_spark_jobs(spark, tmp_path):
         register_lake_table,
         run_lake_batch,
     )
+    from aws_kinesis_spark.store import (
+        commit_table_version,
+        index_dirs,
+        read_index_dirs,
+        write_hive_arrow,
+    )
     from aws_kinesis_spark.streaming.pipeline import (
-        _commit_table_version,
-        _index_dirs,
-        _read_index_dirs,
-        _write_hive_driver_side,
         read_dedup_corpus,
         read_warehouse_table,
     )
@@ -2257,7 +2223,7 @@ def test_store_reads_plan_on_the_driver_without_spark_jobs(spark, tmp_path):
     corpus = os.path.join(index, "corpus")
     # one driver-written and one Spark-written batch dir, as the trigger
     # lays them out on either side of its byte gate
-    _write_hive_driver_side(docs.toArrow(), os.path.join(corpus, "batch=0"), "idb")
+    write_hive_arrow(docs.toArrow(), os.path.join(corpus, "batch=0"), "idb")
     docs.write.partitionBy("idb").parquet(os.path.join(corpus, "batch=1"))
     corpus_schema = T.StructType(
         [
@@ -2269,7 +2235,7 @@ def test_store_reads_plan_on_the_driver_without_spark_jobs(spark, tmp_path):
     )
     wh = str(tmp_path / "wh")
     os.makedirs(wh)
-    _commit_table_version(
+    commit_table_version(
         spark.sql(
             "SELECT 1L AS id, 'open' AS status,"
             " CAST(7 AS DECIMAL(38,0)) AS sequence_number"
@@ -2297,8 +2263,8 @@ def test_store_reads_plan_on_the_driver_without_spark_jobs(spark, tmp_path):
 
     builds = {
         "read_dedup_corpus": lambda: read_dedup_corpus(spark, index),
-        "_read_index_dirs": lambda: _read_index_dirs(
-            spark, _index_dirs(corpus), ["doc_id", "text", "idb"], corpus_schema
+        "read_index_dirs": lambda: read_index_dirs(
+            spark, index_dirs(corpus), ["doc_id", "text", "idb"], corpus_schema
         ),
         "read_warehouse_table": lambda: read_warehouse_table(spark, wh),
         "read_warehouse_table@v0": lambda: read_warehouse_table(spark, wh, 0),
@@ -2314,7 +2280,7 @@ def test_store_reads_plan_on_the_driver_without_spark_jobs(spark, tmp_path):
         assert n_jobs == 0, f"building {name} launched {n_jobs} Spark jobs"
         rows[name] = df.count()
     # the driver-planned frames still read every row
-    assert rows["read_dedup_corpus"] == rows["_read_index_dirs"] == 400
+    assert rows["read_dedup_corpus"] == rows["read_index_dirs"] == 400
     assert rows["read_warehouse_table"] == rows["read_warehouse_table@v0"] == 1
     assert rows["read_incremental"] == sum(
         read_manifest(lake, b)["recordCount"] for b in (0, 1)
@@ -2357,7 +2323,7 @@ def test_dedup_ingest_driver_and_spark_shapes_land_identical_stores(
     spark, tmp_path, monkeypatch
 ):
     """start_dedup_ingest runs a trigger on the driver (one signing collect,
-    probe/verify/writes in pyarrow and Python) under _DRIVER_WRITE_MAX_BYTES
+    probe/verify/writes in pyarrow and Python) under store.DRIVER_MAX_BYTES
     and on Spark above it. With the gate at 0 every trigger takes the Spark
     shape; both runs must land the same band rows, corpus rows and
     verdicts in the same hive layout with the same footer schema —
@@ -2366,13 +2332,13 @@ def test_dedup_ingest_driver_and_spark_shapes_land_identical_stores(
     import pyspark.sql.types as T
 
     import aws_kinesis_spark.streaming.pipeline as P
+    from aws_kinesis_spark import store
     from aws_kinesis_spark.operators.dedup import ngram_jaccard_dedup
-    from aws_kinesis_spark.sources.lake import parquet_store_schema
 
     d, inp = _dedup_input(spark, str(tmp_path))
     runs = {}
-    for shape, gate in (("driver", P._DRIVER_WRITE_MAX_BYTES), ("spark", 0)):
-        monkeypatch.setattr(P, "_DRIVER_WRITE_MAX_BYTES", gate)
+    for shape, gate in (("driver", store.DRIVER_MAX_BYTES), ("spark", 0)):
+        monkeypatch.setattr(store, "DRIVER_MAX_BYTES", gate)
         idx = str(tmp_path / shape / "index")
         stream = (
             spark.readStream.schema(d.schema)
@@ -2391,10 +2357,10 @@ def test_dedup_ingest_driver_and_spark_shapes_land_identical_stores(
         )
         stores = {}
         for sub in ("bands", "corpus"):
-            dirs = P._index_dirs(os.path.join(idx, sub))
-            schemas = {parquet_store_schema(x) for x in dirs}
+            dirs = store.index_dirs(os.path.join(idx, sub))
+            schemas = {store.parquet_store_schema(x) for x in dirs}
             assert len(schemas) == 1, (shape, sub, schemas)
-            df = P._read_index_dirs(spark, dirs, ["*"], schemas.pop())
+            df = store.read_index_dirs(spark, dirs, ["*"], schemas.pop())
             stores[sub] = (df.schema, sorted(df.collect()))
         runs[shape] = (layout, stores)
 
@@ -2458,10 +2424,11 @@ def test_dedup_driver_shape_falls_back_past_its_memory_bounds(
     """The driver shape holds the batch, its band rows, the standing rows
     matching them, the candidate pairs and their texts. Past either bound
     — standing band files in the touched buckets at or over
-    _DRIVER_WRITE_MAX_BYTES, or a candidate join of more than
+    store.DRIVER_MAX_BYTES, or a candidate join of more than
     _SMALL_SIDE_MAX_ROWS rows — the trigger takes the Spark shape (which
     runs more than 3 jobs) and lands the same verdicts."""
     import aws_kinesis_spark.streaming.pipeline as P
+    from aws_kinesis_spark import store
     from aws_kinesis_spark.operators.dedup import ngram_jaccard_dedup
 
     d = load(spark, SF, "documents").cache()
@@ -2476,13 +2443,13 @@ def test_dedup_driver_shape_falls_back_past_its_memory_bounds(
     # 15-doc batch has 240 band rows, so it touches all 8 buckets)
     gate = sum(
         os.path.getsize(f)
-        for x in P._index_dirs(os.path.join(idx, "bands"))
-        for f in P._list_parquet_files(x)
+        for x in store.index_dirs(os.path.join(idx, "bands"))
+        for f in store.list_parquet_files(x)
     )
-    monkeypatch.setattr(P, "_DRIVER_WRITE_MAX_BYTES", gate)
+    monkeypatch.setattr(store, "DRIVER_MAX_BYTES", gate)
     assert _ingest_one_trigger(spark, batches[1], inp, idx, ckpt) > 3
     monkeypatch.undo()
-    newest = max(P._list_parquet_files(inp), key=os.path.getmtime)
+    newest = max(store.list_parquet_files(inp), key=os.path.getmtime)
     assert os.path.getsize(newest) <= gate
 
     # the candidate join over its row bound
@@ -2503,12 +2470,8 @@ def test_dedup_driver_shape_falls_back_past_its_memory_bounds(
 def test_read_dedup_corpus_is_one_flat_scan(spark, tmp_path):
     """read_dedup_corpus reads the live dirs' files as ONE file scan, not a
     union of per-dir scans, with the same rows as the per-dir union read."""
-    from aws_kinesis_spark.streaming.pipeline import (
-        _index_dirs,
-        _read_index_dirs,
-        _write_hive_driver_side,
-        read_dedup_corpus,
-    )
+    from aws_kinesis_spark.store import index_dirs, read_index_dirs, write_hive_arrow
+    from aws_kinesis_spark.streaming.pipeline import read_dedup_corpus
 
     docs = spark.range(0, 300).select(
         F.col("id").alias("doc_id"),
@@ -2523,26 +2486,26 @@ def test_read_dedup_corpus_is_one_flat_scan(spark, tmp_path):
         if b == 1:
             part.write.partitionBy("idb").parquet(os.path.join(corpus, "compact=1"))
         else:
-            _write_hive_driver_side(
+            write_hive_arrow(
                 part.toArrow(), os.path.join(corpus, f"batch={b + 2}"), "idb"
             )
-    dirs = _index_dirs(corpus)
+    dirs = index_dirs(corpus)
     assert len(dirs) == 3
     df = read_dedup_corpus(spark, index)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("FileScan") == 1, plan
-    union = _read_index_dirs(spark, dirs, ["*"]).drop("idb")
+    union = read_index_dirs(spark, dirs, ["*"]).drop("idb")
     assert df.columns == union.columns == ["doc_id", "text", "kept"]
     assert sorted(df.collect()) == sorted(union.collect())
     assert df.count() == 300
 
 
-def test_compact_spark_fold_uses_its_own_task_count(spark, tmp_path):
-    """_compact_store's Spark fold clusters on the partition column with a
-    task count derived from the fold's bytes (capped at the partition
-    values on disk), so a narrowed session shuffle count cannot shrink a
-    corpus-scale fold to one task."""
-    from aws_kinesis_spark.streaming.pipeline import _compact_store
+def test_compact_spark_fold_uses_its_own_task_count(spark, tmp_path, monkeypatch):
+    """store.compact_store's Spark fold clusters on the partition column
+    with a task count derived from the fold's bytes (capped at the
+    partition values on disk), so a narrowed session shuffle count cannot
+    shrink a corpus-scale fold to one task."""
+    from aws_kinesis_spark import store
 
     root = str(tmp_path / "bands")
     for b in range(3):
@@ -2560,13 +2523,14 @@ def test_compact_spark_fold_uses_its_own_task_count(spark, tmp_path):
         if f.endswith(".parquet")
     )
     assert total >= 4 * (256 << 10), total
+    monkeypatch.setattr(store, "DRIVER_MAX_BYTES", 0)
     sc = spark.sparkContext
     group = _uniq("fold")
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "1")
     sc.setJobGroup(group, "spark fold")
     try:
-        assert _compact_store(spark, root, "bucket", upto=2, driver_fold_max_bytes=0)
+        assert store.compact_store(spark, root, "bucket", upto=2)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         spark.conf.set("spark.sql.shuffle.partitions", prev)
