@@ -6,11 +6,15 @@ matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
 order-insensitive value-hash → CORRECTNESS_r{N}.json).
 
 All real logic lives in ``aws_kinesis_spark``; this module only adapts the
-registry to the driver's shape.
+registry to the driver's shape. It is the one place that receives a
+session the engine did not build, so it applies the engine's session conf
+(``session.configure``: UTC, ``nanosAsLong``, AQE) to the driver's session
+before any query plans on it.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 import sys
 from collections.abc import Callable
@@ -20,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from aws_kinesis_spark import registry  # noqa: E402
+from aws_kinesis_spark.session import configure  # noqa: E402
 
 SF0001 = "/root/testdata/sf0.001"
 
@@ -33,7 +38,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
     from aws_kinesis_spark.tables import load
 
-    ev = load(spark, SF0001, "events")
+    ev = load(configure(spark), SF0001, "events")
     k = F.get_json_object("props", "$.k").cast("int")
     return (
         ev.withColumn("k", k)
@@ -49,9 +54,22 @@ def entry(spark: SparkSession) -> DataFrame:
     )
 
 
+def _on_configured_session(
+    fn: Callable[[SparkSession, str], DataFrame],
+) -> Callable[[SparkSession, str], DataFrame]:
+    @functools.wraps(fn)
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return fn(configure(spark), sf_dir)
+
+    return run
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
-    return registry.queries()
+    """One entry per implemented operator from SURVEY.md §2, each applying
+    the engine's session conf to the driver's session before it plans."""
+    return {
+        name: _on_configured_session(fn) for name, fn in registry.queries().items()
+    }
 
 
 def oracle_sql() -> dict[str, str]:

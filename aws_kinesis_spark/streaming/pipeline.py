@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from aws_kinesis_spark import store
-from aws_kinesis_spark.session import configure
 from aws_kinesis_spark.sources.envelope import ENVELOPE_SCHEMA, decode_envelope
 from aws_kinesis_spark.sources.lake import (
     PARTITION_COLS,
@@ -46,7 +45,6 @@ def _file_stream(
     micro-batch flushes ~one buffer's worth. ``recursive_file_lookup``
     reads files under hive-style subdirs WITHOUT partition inference
     (the arrival-ordered q=N fixture layout)."""
-    configure(spark)
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -665,9 +663,12 @@ def start_dedup_ingest(
       is cached and signed across the cluster; the candidate join
       broadcasts the batch side (the standing index never shuffles); the
       verify joins texts by id; the stores are written by a clustered
-      Spark write (or driver-side under the gate). Its shuffles run at a
-      trigger-scoped ``spark.sql.shuffle.partitions`` derived from the
-      batch bytes, restored when the trigger ends.
+      Spark write (or driver-side under the gate). The trigger writes no
+      session conf: its shuffles are planned at the session's
+      ``spark.sql.shuffle.partitions`` and AQE coalesces them to the
+      batch's size. The shapes AQE leaves alone are set explicitly from
+      the batch bytes: the signing spread (``repartition``) and the
+      partition count of each frame the trigger caches (``coalesce``).
 
     Scale posture of the STATE (the part that outlives any batch):
     - ``bands/…/bucket=<bh%K>`` hash-bucketed layout: the standing-band
@@ -854,12 +855,23 @@ def start_dedup_ingest(
         trigger ends."""
         spark = batch_df.sparkSession
         cached: list[DataFrame] = []
-        prev_parts: str | None = None  # set iff the trigger narrows the conf
+        # the trigger's task count: one task per TASK_INPUT_BYTES of input,
+        # floor 4 (None: no byte metadata)
+        n_tasks = (
+            None if in_bytes is None else max(4, in_bytes // store.TASK_INPUT_BYTES)
+        )
 
         def keep(df: DataFrame) -> DataFrame:
             # caching the batch/bands beats recompute decisively even for
             # KB-scale batches (without it the Arrow signing runs once per
-            # consumer)
+            # consumer). AQE coalesces every shuffle of the trigger except
+            # the last one of a cached plan (Spark keeps a cached plan's
+            # output partitioning), so a cached join or distinct would run
+            # each read at the session's shuffle partition count: coalesce
+            # it to the trigger's task count (a no-op when it has fewer
+            # partitions).
+            if n_tasks is not None:
+                df = df.coalesce(n_tasks)
             cached.append(df.cache())
             return df
 
@@ -868,37 +880,14 @@ def start_dedup_ingest(
             # the file source delivers the batch as one partition per input
             # file — spread the Arrow signing kernel across the executors
             # (a 2 KB/doc shuffle buys a parallelism-times-faster UDF pass).
-            # The spread is BYTE-PROPORTIONAL (one signing task per
-            # TASK_INPUT_BYTES of input, floor 4): an explicit
+            # The spread is BYTE-PROPORTIONAL (n_tasks): an explicit
             # repartition(N) is pinned — AQE cannot coalesce
             # REPARTITION_BY_NUM — so sizing it to the cluster for a
             # KB-scale batch would pin dozens of near-empty tasks into
             # every downstream stage of the trigger. A GB-scale batch
             # still fans to the full parallelism.
             par = spark.sparkContext.defaultParallelism
-            sign_par = (
-                par
-                if in_bytes is None
-                else min(par, max(4, in_bytes // store.TASK_INPUT_BYTES))
-            )
-            # Trigger-scoped SHUFFLE partition count, derived from the
-            # batch's input bytes exactly like sign_par (partition counts
-            # must scale with the data). Every shuffle stage inside the
-            # trigger carries O(batch+candidates) rows — the standing index
-            # only ever enters through broadcast or pruned scans — so a
-            # small batch at the session-wide count pays tens of near-empty
-            # tasks per stage. A GB-scale catch-up batch derives the
-            # session value unchanged (min with it), so the dial never
-            # CAPS real work. Restored in the finally block; this is a
-            # session-conf write from the micro-batch thread —
-            # single-stream-per-session posture (the foreachBatch worker
-            # and its two pool threads all want the trigger's value).
-            if in_bytes is not None:
-                cur = spark.conf.get("spark.sql.shuffle.partitions")
-                trig = min(int(cur), max(4, in_bytes // store.TASK_INPUT_BYTES))
-                if trig < int(cur):
-                    prev_parts = cur
-                    spark.conf.set("spark.sql.shuffle.partitions", str(trig))
+            sign_par = par if n_tasks is None else min(par, n_tasks)
             bb = keep(
                 band_rows(docs.repartition(sign_par)).withColumn(
                     "bucket", F.pmod("bh", F.lit(n_buckets)).cast("int")
@@ -1056,8 +1045,6 @@ def start_dedup_ingest(
                 )
                 _coverage["frac"] = touched / max(n_buckets, 1)
         finally:
-            if prev_parts is not None:
-                spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
             for df in cached:
                 df.unpersist()
 

@@ -4,8 +4,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from aws_kinesis_spark.session import configure
-
 TABLES = [
     "region",
     "nation",
@@ -28,8 +26,8 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
 
     Tables whose parquet file is ABSENT are skipped with a warning instead
     of failing the whole session: a query over orders must not die because
-    the fixture dir predates the embeddings table (round-11 review). The
-    view registration itself is lazy — load() only reads the footer."""
+    the fixture dir predates a newer table such as embeddings. The view
+    registration itself is lazy — load() only reads the footer."""
     import os
     import sys
 
@@ -45,12 +43,11 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
 
 
 # sf_dir whose views are CURRENTLY registered, per session — a temp view
-# survives for the session, so re-registering on every run_sql call paid
-# 10 parquet footer reads + a configure() round of fixed overhead per
-# invocation, landing inside bench's timed region for the subquery
-# queries (round-12 review). Keyed by the current dir (not a seen-set):
-# the view NAMES are session-global, so switching sf_dirs must
-# re-register — a seen-set would silently leave the other dir's views up.
+# survives for the session, so registering once keeps 10 parquet footer
+# reads per run_sql call out of every query's fixed cost. Keyed by the
+# current dir (not a seen-set): the view NAMES are session-global, so
+# switching sf_dirs must re-register — a seen-set would silently leave the
+# other dir's views up.
 _VIEWS_FOR_SESSION: dict[int, str] = {}
 
 
@@ -65,7 +62,8 @@ def run_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one fixture table; pins session semantics (UTC) first.
+    """Read one fixture table. Writes no session conf: the session carries
+    the engine's conf from when it entered the engine (session.configure).
 
     ``events.ts`` is stored as parquet TIMESTAMP(NANOS), which Spark cannot
     represent; with ``nanosAsLong`` it arrives as epoch-nanos LongType and is
@@ -74,7 +72,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     from pyspark.sql import functions as F
 
-    configure(spark)
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))

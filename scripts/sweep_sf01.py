@@ -15,9 +15,8 @@ import time
 
 sys.path.insert(0, ".")
 
-from pyspark.sql import SparkSession
-
 from aws_kinesis_spark import registry
+from aws_kinesis_spark.session import get_spark
 
 
 def main() -> None:
@@ -26,13 +25,7 @@ def main() -> None:
         sys.exit(2)
     start, end = int(sys.argv[1]), int(sys.argv[2])
     sf_dir = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.1"
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "16g")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
-    )
+    spark = get_spark("sweep-sf01", cpus="32")
     spark.sparkContext.setLogLevel("ERROR")
     registry._ensure_loaded()
     names = registry._ordered_names()

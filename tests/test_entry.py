@@ -12,6 +12,32 @@ def test_entry_returns_rows(spark):
     assert set(df.columns) == {"hour_start", "n_errors", "sum_value", "avg_k"}
 
 
+def test_driver_session_gets_the_engine_conf_at_entry(spark):
+    """__spark_entry__ is the one place a session the engine did not build
+    comes in: entry() and each queries() callable apply session.configure
+    to it. A driver session in another timezone and without nanosAsLong
+    returns the same rows as the engine's own session."""
+    import __spark_entry__ as e
+    from conftest import SF_CORRECTNESS as sf
+
+    # its hour bins go through unix_timestamp, which reads the session
+    # timezone: in America/Los_Angeles (DST) it returns other rows
+    name = "d29_interval_overlap_join"
+    want_entry = e.entry(spark).collect()
+    want_q = sorted(e.queries()[name](spark, sf).collect())
+
+    def driver_session():
+        s = spark.newSession()
+        s.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+        s.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+        assert s.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "false"
+        return s
+
+    assert want_entry and want_q
+    assert e.entry(driver_session()).collect() == want_entry
+    assert sorted(e.queries()[name](driver_session(), sf).collect()) == want_q
+
+
 def test_queries_and_oracles_aligned():
     import __spark_entry__ as e
 
@@ -39,7 +65,7 @@ def test_driver_window_covers_every_family():
     # mix shifts with them: d 6->11, c 2, b 2->1 (b02; the other B
     # queries all hold fresh r10+ rows), a 4->5, o 2->1 (o07; o05/o06
     # re-certified r13), e 6->2 (e01/e11 stay as family witnesses),
-    # f 3, g 25->24 — see the registry.py rotation log for every named
+    # f 3, g 25->24 — the git history of registry.py logs every named
     # witness.  The floor is >=1 per family: every §2 family must keep a
     # hard driver row each round.
     for prefix, minimum in [
@@ -83,7 +109,7 @@ def test_driver_window_covers_every_family():
     assert rotated_in <= set(window)
     # every rotated-out slot holds a green CORRECTNESS_r13 row (the
     # freshest possible) and keeps running in the differential suite;
-    # named witnesses in the registry.py round-14 rotation log
+    # named witnesses in the git history of registry.py
     rotated_out = {
         "d24_exists_subquery", "d36_approx_percentile_check",
         "d14d_pivot",

@@ -444,8 +444,9 @@ def test_shj_preference_respects_size_bounds(spark):
     pins the fallback: the same join must plan SortMergeJoin once the
     build side's estimate exceeds the bound. The residual risk at scale
     is a badly UNDERESTIMATED build side (post-filter stats) — that is an
-    estimate-quality problem the SPARK_GRAFT_SHJ_LOCAL_MAP_MAX /
-    preferSortMergeJoin escape hatches exist for (SCALE.md §0), while a
+    estimate-quality problem a deployment answers by setting
+    maxShuffledHashJoinLocalMapThreshold / preferSortMergeJoin on its own
+    session (SCALE.md §0), while a
     skewed build PARTITION is split by AQE's OptimizeSkewedJoin, which
     handles ShuffledHashJoinExec (test_aqe_splits_skewed_join runs under
     this session's SHJ preference and still sees skew=true)."""
@@ -848,6 +849,22 @@ def test_store_layering_has_no_cross_module_private_imports():
         if rel == "store.py":
             assert not imported & set(users.values()), imported
     assert not private, f"cross-module private imports: {private}"
+
+
+def test_no_session_conf_writes_outside_session_module():
+    """Session conf is applied once, at session entry, by session.py; no
+    other library module writes or unsets session conf, so library code can
+    share a SparkSession with other queries and threads."""
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "aws_kinesis_spark"
+    writers = [
+        str(f.relative_to(pkg))
+        for f in sorted(pkg.rglob("*.py"))
+        if f != pkg / "session.py"
+        and any(w in f.read_text() for w in ("spark.conf.set", "conf.unset"))
+    ]
+    assert writers == [], writers
 
 
 def test_vocab_coverage_broadcasts_vocab_not_corpus(spark):

@@ -2378,11 +2378,11 @@ def test_dedup_ingest_driver_and_spark_shapes_land_identical_stores(
     ]
 
 
-def _ingest_one_trigger(spark, docs, inp: str, idx: str, ckpt: str) -> int:
+def _ingest_one_trigger(spark, docs, inp: str, idx: str, ckpt: str) -> list[int]:
     """Land ``docs`` as one more input file and run start_dedup_ingest
     until it has drained it — exactly one trigger, since each start of the
-    query gets its own run id and so its own job group. Returns the
-    number of Spark jobs that trigger ran."""
+    query gets its own run id and so its own job group. Returns the ids of
+    the Spark jobs in that group."""
     from aws_kinesis_spark.streaming.pipeline import start_dedup_ingest
 
     docs.repartition(1).write.mode("append").parquet(inp)
@@ -2390,7 +2390,7 @@ def _ingest_one_trigger(spark, docs, inp: str, idx: str, ckpt: str) -> int:
     q = start_dedup_ingest(stream, idx, ckpt, n_buckets=8, compact_every=2)
     q.awaitTermination(300)
     assert q.exception() is None
-    return len(spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId)))
+    return list(spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId)))
 
 
 def _trickle_cuts(d) -> tuple[list[int], list[int]]:
@@ -2408,8 +2408,10 @@ def test_dedup_trickle_trigger_runs_at_most_three_spark_jobs(spark, tmp_path):
     ids, cuts = _trickle_cuts(d)
     paths = [str(tmp_path / n) for n in ("input", "index", "ckpt")]
     per_trigger = [
-        _ingest_one_trigger(
-            spark, d.filter(F.col("doc_id").isin(ids[lo:up])), *paths
+        len(
+            _ingest_one_trigger(
+                spark, d.filter(F.col("doc_id").isin(ids[lo:up])), *paths
+            )
         )
         for lo, up in zip(cuts, cuts[1:])
     ]
@@ -2438,7 +2440,7 @@ def test_dedup_driver_shape_falls_back_past_its_memory_bounds(
         d.filter(F.col("doc_id").isin(ids[lo:up]))
         for lo, up in zip(cuts, cuts[1:4])
     ]
-    assert _ingest_one_trigger(spark, batches[0], inp, idx, ckpt) <= 3
+    assert len(_ingest_one_trigger(spark, batches[0], inp, idx, ckpt)) <= 3
     # the batch under the byte gate, the standing band files over it (a
     # 15-doc batch has 240 band rows, so it touches all 8 buckets)
     gate = sum(
@@ -2447,14 +2449,14 @@ def test_dedup_driver_shape_falls_back_past_its_memory_bounds(
         for f in store.list_parquet_files(x)
     )
     monkeypatch.setattr(store, "DRIVER_MAX_BYTES", gate)
-    assert _ingest_one_trigger(spark, batches[1], inp, idx, ckpt) > 3
+    assert len(_ingest_one_trigger(spark, batches[1], inp, idx, ckpt)) > 3
     monkeypatch.undo()
     newest = max(store.list_parquet_files(inp), key=os.path.getmtime)
     assert os.path.getsize(newest) <= gate
 
     # the candidate join over its row bound
     monkeypatch.setattr(P, "_SMALL_SIDE_MAX_ROWS", 0)
-    assert _ingest_one_trigger(spark, batches[2], inp, idx, ckpt) > 3
+    assert len(_ingest_one_trigger(spark, batches[2], inp, idx, ckpt)) > 3
     monkeypatch.undo()
 
     ingested = d.filter(F.col("doc_id").isin(ids[: cuts[3]]))
@@ -2465,6 +2467,116 @@ def test_dedup_driver_shape_falls_back_past_its_memory_bounds(
     d.unpersist()
     assert sorted(r.doc_id for r in corpus) == ids[: cuts[3]]
     assert {r.doc_id for r in corpus if not r.kept} == dropped_truth
+
+
+@pytest.mark.parametrize("shape", ["gated", "spark"])
+def test_dedup_ingest_zero_row_batch_between_batches(
+    spark, tmp_path, monkeypatch, shape
+):
+    """A zero-row micro-batch (an empty input file) lands contentless batch
+    dirs that store.index_dirs skips, and leaves the next batch's verdicts
+    and the corpus read as a run without it — under the default byte gate
+    and with every trigger forced onto the Spark shape."""
+    from aws_kinesis_spark import store
+    from aws_kinesis_spark.streaming.pipeline import read_dedup_corpus
+
+    if shape == "spark":
+        monkeypatch.setattr(store, "DRIVER_MAX_BYTES", 0)
+    d = load(spark, SF, "documents").cache()
+    ids, cuts = _trickle_cuts(d)
+    seed, trickle = (
+        d.filter(F.col("doc_id").isin(ids[lo:up])) for lo, up in zip(cuts, cuts[1:3])
+    )
+    runs = {}
+    for run, batches in (
+        ("empty", [seed, d.limit(0), trickle]),
+        ("plain", [seed, trickle]),
+    ):
+        inp, idx, ckpt = (str(tmp_path / run / n) for n in ("input", "index", "ckpt"))
+        for batch_id, b in enumerate(batches):
+            _ingest_one_trigger(spark, b, inp, idx, ckpt)
+            if run == "empty" and batch_id == 1:
+                for sub in ("bands", "corpus"):
+                    empty_dir = os.path.join(idx, sub, "batch=1")
+                    assert os.path.isdir(empty_dir)
+                    assert store.list_parquet_files(empty_dir) == []
+                    live = store.index_dirs(os.path.join(idx, sub))
+                    assert live == [os.path.join(idx, sub, "batch=0")], live
+                assert read_dedup_corpus(spark, idx).count() == cuts[1]
+        verdicts = spark.read.parquet(
+            os.path.join(idx, "corpus", f"batch={batch_id}")
+        ).select("doc_id", "kept")
+        runs[run] = (
+            sorted(verdicts.collect()),
+            sorted(read_dedup_corpus(spark, idx).collect()),
+        )
+    d.unpersist()
+    assert runs["empty"] == runs["plain"]
+    verdicts, corpus = runs["plain"]
+    assert sorted(r.doc_id for r in verdicts) == ids[cuts[1] : cuts[2]]
+    assert sorted(r.doc_id for r in corpus) == ids[: cuts[2]]
+
+
+def test_dedup_ingest_leaves_the_session_conf_alone(spark, tmp_path, monkeypatch):
+    """Library code writes no session conf at query time: with a deployment's
+    own shuffle partition count on the session, loading a table, building a
+    stream and running a Spark-shape trickle trigger leave it as set — a
+    second thread polling it throughout only ever reads the deployment's
+    value. The trigger's shape needs no conf either: AQE coalesces its
+    shuffles and it coalesces the frames it caches, so no stage of it runs
+    at the session's shuffle partition count."""
+    import threading
+
+    from aws_kinesis_spark import store
+    from aws_kinesis_spark.streaming.pipeline import envelope_stream
+
+    key, value = "spark.sql.shuffle.partitions", "7"
+    d = load(spark, SF, "documents").cache()
+    ids, cuts = _trickle_cuts(d)
+    inp, idx, ckpt = (str(tmp_path / n) for n in ("input", "index", "ckpt"))
+    tracker = spark.sparkContext.statusTracker()
+    prev = spark.conf.get(key)
+    spark.conf.set(key, value)
+    seen: set[str] = set()
+    stop = threading.Event()
+
+    def poll() -> None:
+        while not stop.is_set():
+            seen.add(spark.conf.get(key))
+            stop.wait(0.002)
+
+    poller = threading.Thread(target=poll, daemon=True)
+    poller.start()
+    try:
+        seed_jobs = _ingest_one_trigger(
+            spark, d.filter(F.col("doc_id").isin(ids[: cuts[1]])), inp, idx, ckpt
+        )
+        load(spark, SF, "events")
+        os.makedirs(tmp_path / "env")
+        envelope_stream(spark, str(tmp_path / "env"))
+        # every job of the trickle trigger: its query's job group, plus the
+        # ungrouped jobs its pool threads launch
+        since = max(seed_jobs + list(tracker.getJobIdsForGroup(None)))
+        monkeypatch.setattr(store, "DRIVER_MAX_BYTES", 0)
+        trickle = d.filter(F.col("doc_id").isin(ids[cuts[1] : cuts[2]]))
+        jobs = _ingest_one_trigger(spark, trickle, inp, idx, ckpt)
+        jobs += [j for j in tracker.getJobIdsForGroup(None) if j > since]
+        after = spark.conf.get(key)
+    finally:
+        stop.set()
+        poller.join()
+        spark.conf.set(key, prev)
+        d.unpersist()
+    assert seen == {value} and after == value, (seen, after)
+    tasks = [
+        st.numTasks
+        for j in jobs
+        if (info := tracker.getJobInfo(j)) is not None
+        for s in info.stageIds
+        if (st := tracker.getStageInfo(s)) is not None
+    ]
+    assert len(jobs) > 3 and tasks, jobs  # the Spark shape ran
+    assert int(value) not in tasks, tasks
 
 
 def test_read_dedup_corpus_is_one_flat_scan(spark, tmp_path):
