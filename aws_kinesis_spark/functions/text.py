@@ -1,5 +1,6 @@
 """Text-analysis function surface (SURVEY.md §2.G G4): tokenization,
-language-ID heuristic, quality scoring, token counting, fingerprinting.
+stopword hits (g04's language-ID heuristic), quality scoring, token
+counting, fingerprinting.
 
 Everything is built from JVM-side expressions (split/filter/transform/
 regexp) so the ops vectorize inside whole-stage codegen — the 100 TB path
@@ -61,24 +62,6 @@ def stopword_hits(text: Column | str, lang: str, toks: Column | None = None) -> 
         return F.size(F.filter(toks, lambda x: x.isin(*words)))
     alts = "|".join(STOPWORDS[lang])
     return F.regexp_count(text, F.lit(f"(?:^|(?<= ))(?:{alts})(?= |$)"))
-
-
-def detect_language(text: Column | str, toks: Column | None = None) -> Column:
-    """Stopword-scoring language ID: the language with the most stopword
-    hits wins (ties broken by language code order); zero hits -> 'und'."""
-    scored = F.array(
-        *[
-            F.struct(
-                stopword_hits(text, lang, toks).alias("hits"),
-                F.lit(lang).alias("lang"),
-            )
-            for lang in sorted(STOPWORDS)
-        ]
-    )
-    best = F.array_max(F.filter(scored, lambda s: s["hits"] > 0))
-    # array_max on struct orders by (hits, lang); lang DESC on ties is fine
-    # as long as the oracle replicates the same rule.
-    return F.coalesce(best["lang"], F.lit("und"))
 
 
 def distinct_ratio(text: Column | str, toks: Column | None = None) -> Column:

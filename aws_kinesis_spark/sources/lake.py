@@ -27,6 +27,8 @@ from aws_kinesis_spark.sources.envelope import decode_envelope
 from aws_kinesis_spark.store import list_parquet_files, parquet_store_schema
 
 PARTITION_COLS = ["year", "month", "day", "hour"]
+# what the DLQ (errors/) keeps of a corrupt record: the raw envelope
+DLQ_COLS = ["data", "partition_key", "sequence_number", "arrival_ts"]
 
 
 def with_partition_cols(df: DataFrame, ts_col: str = "processed_at") -> DataFrame:
@@ -185,7 +187,7 @@ def run_lake_batch(
     # dominated the flush at sf0.1). Round-robin to CLUSTER parallelism —
     # NOT to files_per_partition, which dials output-file fan-out per hive
     # dir and would cap a 10 GB flush's decode at 2 cores when the caller
-    # set files_per_partition=2 to limit small files (round-12 review).
+    # set files_per_partition=2 to limit small files.
     # The extra batch-sized exchange is cheap next to a serial decode,
     # file CONTENTS stay deterministic because the landing layout is keyed
     # by (partition cols, salt) downstream, and the raw backup below
@@ -245,9 +247,9 @@ def run_lake_batch(
                 shaped.write.mode("overwrite")
                 .partitionBy("batch", *part_cols)
                 # dynamic overwrite as a PER-WRITE option, not session
-                # conf (ADVICE r14): a session-conf write from this flush
-                # raced any job planning concurrently on a pool thread
-                # (DV commits overlap this very write in a19), and STATIC
+                # conf: a session-conf write from this flush would race
+                # any job planning concurrently on a pool thread (DV
+                # commits overlap this very write in a19), and STATIC
                 # overwrite here would truncate every other batch's data
                 .option("partitionOverwriteMode", "dynamic")
                 .option("compression", "snappy")
@@ -272,7 +274,7 @@ def run_lake_batch(
             n_error = n_in_f.result() - n_ok
             if n_error:
                 (
-                    bad.select("data", "partition_key", "sequence_number", "arrival_ts")
+                    bad.select(*DLQ_COLS)
                     .write.mode("overwrite")
                     .parquet(os.path.join(lake_dir, "errors", f"batch={batch_id}"))
                 )

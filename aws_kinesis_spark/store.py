@@ -148,23 +148,25 @@ def parquet_store_schema(path: str) -> StructType | None:
 # -------------------------------------------------------------- writers
 
 
-def write_hive_arrow(tbl, out_dir: str, part_col: str) -> None:
+def write_hive_arrow(tbl, out_dir: str, part_cols: str | list[str]) -> None:
     """Lay out an Arrow table the driver already holds (and byte-gates) as
-    hive-partitioned snappy parquet under ``out_dir``: one file per
-    ``part_col`` value, the layout Spark's partitioned writer produces, so
-    readers cannot tell which side wrote a store. Replay-idempotent like
-    ``mode("overwrite")``: the dir is wiped and rewritten, and it exists
-    afterwards even for an empty table, as the Spark writer's does."""
+    hive-partitioned snappy parquet under ``out_dir``: one file per value
+    of ``part_cols`` (one column name, or a list nesting in that order),
+    the layout Spark's partitioned writer produces, so readers cannot tell
+    which side wrote a store. Replay-idempotent like ``mode("overwrite")``:
+    the dir is wiped and rewritten, and it exists afterwards even for an
+    empty table, as the Spark writer's does."""
     import pyarrow as pa
     import pyarrow.dataset as pds
 
+    cols = [part_cols] if isinstance(part_cols, str) else part_cols
     shutil.rmtree(out_dir, ignore_errors=True)
     pds.write_dataset(
         tbl,
         out_dir,
         format="parquet",
         partitioning=pds.partitioning(
-            pa.schema([tbl.schema.field(part_col)]), flavor="hive"
+            pa.schema([tbl.schema.field(c) for c in cols]), flavor="hive"
         ),
         existing_data_behavior="overwrite_or_ignore",
     )

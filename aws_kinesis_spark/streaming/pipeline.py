@@ -18,6 +18,7 @@ from pyspark.sql.streaming import StreamingQuery
 from aws_kinesis_spark import store
 from aws_kinesis_spark.sources.envelope import ENVELOPE_SCHEMA, decode_envelope
 from aws_kinesis_spark.sources.lake import (
+    DLQ_COLS,
     PARTITION_COLS,
     purge_batch,
     split_errors,
@@ -34,10 +35,9 @@ def _file_stream(
     max_bytes_per_trigger: int | None = None,
     recursive_file_lookup: bool = False,
 ) -> DataFrame:
-    """The ONE file-source reader body behind envelope_stream/event_stream
-    and the hive-dir fixture streams (they differed only in the schema
-    constant / one recursion option — copies of the backpressure-dial
-    logic meant every dial fix had to land twice; round-13 review).
+    """The one file-source reader body behind envelope_stream/event_stream
+    and the hive-dir fixture streams: they differ only in the schema and
+    one recursion option, so the backpressure dials live here once.
     Backpressure dials (B5/B9): ``maxFilesPerTrigger`` bounds batch count
     like the producer's 500-record PutRecords cap (README.md:46);
     ``maxBytesPerTrigger`` is the reference's SizeInMBs buffer bound
@@ -74,10 +74,9 @@ def envelope_stream(
 
 
 def _triggered(writer, available_now: bool, trigger_seconds: float):
-    """Shared trigger dial (round-13 review: the hot-path starters
-    documented a processingTime='0' low-latency mode but hardcoded
-    availableNow — the documented production mode was unreachable).
-    ``available_now=True`` drains-and-stops (tests, backfills);
+    """Shared trigger dial of the hot-path starters, so the continuous
+    low-latency mode is reachable from each of them, not only
+    availableNow. ``available_now=True`` drains-and-stops (tests, backfills);
     ``False`` runs continuously at ``trigger_seconds`` cadence — 0 means
     back-to-back micro-batches, the EFO-like low-latency mode."""
     if available_now:
@@ -103,13 +102,56 @@ def start_lake_path(
     prefixes are purged before rewrite (purge_batch): partition values derive
     from processing time, so a replay in a later hour would otherwise strand
     the first attempt's files in the earlier hour's subpartitions.
+
+    Two shapes of one flush, one gate (``store.DRIVER_MAX_BYTES``, the
+    dedup trigger's): a flush is KB to MB, so its cost is per-trigger
+    scheduling, not data.
+
+    - DRIVER shape, when the batch's input bytes are known (file source
+      WAL) and under the gate: one Spark action collects the decoded batch
+      with its partition values as Arrow (decode, ``processed_at`` and the
+      hour values stay Catalyst expressions, evaluated once). The driver
+      splits ok and corrupt rows, writes the ok rows one file per hour leaf
+      (store.write_hive_arrow), the corrupt rows as one DLQ file, and the
+      manifest. Driver memory holds the decoded table (3.5-4.5x the
+      compressed input bytes, see _lake_batch_for_driver) and, when the
+      batch has corrupt rows, a filtered copy of its ok rows: under the
+      32 MB gate the peak stays below ~300 MB.
+    - SPARK shape otherwise (no byte metadata, as on a Kinesis source, or
+      a batch over the gate): a clustered Spark write, one file per
+      (batch, hour) leaf, then the DLQ write when the counts say the batch
+      had corrupt records.
+
+    Both shapes land the same leaves, file schemas, DLQ rows and manifest.
     """
 
-    def flush(batch_df: DataFrame, batch_id: int) -> None:
+    def on_driver(batch_df: DataFrame, batch_id: int) -> tuple[list[str], int]:
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        tbl = _lake_batch_for_driver(batch_df).toArrow()
+        corrupt = tbl.column("_corrupt")
+        n_bad = pc.sum(corrupt).as_py() or 0
+        ok = tbl.filter(pc.invert(corrupt)) if n_bad else tbl
+        ok = ok.drop_columns(["_corrupt", "data"])
+        batch_root = os.path.join(lake_dir, "data", f"batch={batch_id}")
+        if ok.num_rows:
+            store.write_hive_arrow(ok, batch_root, PARTITION_COLS)
+        if n_bad:
+            bad = tbl.filter(corrupt)
+            err_dir = os.path.join(lake_dir, "errors", f"batch={batch_id}")
+            os.makedirs(err_dir, exist_ok=True)
+            pq.write_table(
+                bad.select(DLQ_COLS),
+                os.path.join(err_dir, "part-0.parquet"),
+                compression="snappy",
+            )
+        files = store.list_parquet_files(batch_root)
+        return files, _footer_rows(files)
+
+    def on_spark(batch_df: DataFrame, batch_id: int) -> tuple[list[str], int]:
         from concurrent.futures import ThreadPoolExecutor
 
-        spark = batch_df.sparkSession
-        purge_batch(lake_dir, batch_id)
         decoded = decode_envelope(batch_df)
         ok, bad = split_errors(decoded)
         ok = with_partition_cols(ok.drop("data")).withColumn("batch", F.lit(batch_id))
@@ -121,38 +163,59 @@ def start_lake_path(
                 ok.repartition(*PARTITION_COLS)
                 .write.mode("overwrite")
                 .partitionBy("batch", *PARTITION_COLS)
-                # per-write dynamic overwrite (ADVICE r14) — see
-                # run_lake_batch: session-conf writes from a trigger
-                # thread race concurrently planning jobs, and static
-                # overwrite would truncate the other batches' data
+                # dynamic overwrite as a per-write option (see
+                # run_lake_batch): a session-conf write would race jobs
+                # planning on other threads, and static overwrite would
+                # truncate the other batches' data
                 .option("partitionOverwriteMode", "dynamic")
                 .option("compression", "snappy")
                 .parquet(data_dir)
             )
-            batch_root = os.path.join(data_dir, f"batch={batch_id}")
-            files = store.list_parquet_files(batch_root)
-            import pyarrow.parquet as pq
-
-            n_ok = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-            # DLQ accounting by subtraction (run_lake_batch's discipline,
-            # round-11 review): probing `bad` directly re-ran the FULL
-            # base64+JSON decode over every record on each clean trigger —
-            # the common case — where input-count minus footer-count is
-            # two pieces of metadata the trigger already holds
+            files = store.list_parquet_files(os.path.join(data_dir, f"batch={batch_id}"))
+            n_ok = _footer_rows(files)
+            # DLQ by subtraction: input count minus the written footers'
+            # count is metadata the flush already holds, where probing
+            # `bad` would re-run the whole decode on every clean batch
             if n_in_f.result() - n_ok:
                 (
-                    bad.select("data", "partition_key", "sequence_number", "arrival_ts")
+                    bad.select(*DLQ_COLS)
                     .write.mode("overwrite")
                     .parquet(os.path.join(lake_dir, "errors", f"batch={batch_id}"))
                 )
-        # footer-true record count: streaming batches' manifests now pass
-        # validate_manifest's count check instead of opting out with -1
+        return files, n_ok
+
+    def flush(batch_df: DataFrame, batch_id: int) -> None:
+        purge_batch(lake_dir, batch_id)
+        in_bytes = _batch_input_bytes(checkpoint_dir, batch_id)
+        if in_bytes is not None and in_bytes <= store.DRIVER_MAX_BYTES:
+            files, n_ok = on_driver(batch_df, batch_id)
+        else:
+            files, n_ok = on_spark(batch_df, batch_id)
+        # the footer-true record count lets validate_manifest check it
         write_manifest(lake_dir, batch_id, files, n_records=n_ok)
 
     writer = env_stream.writeStream.foreachBatch(flush).option(
         "checkpointLocation", checkpoint_dir
     )
     return _triggered(writer, available_now, trigger_seconds).start()
+
+
+def _lake_batch_for_driver(batch_df: DataFrame) -> DataFrame:
+    """The lake flush's driver-shape frame: the decoded batch with its hour
+    partition values, as one Spark action collects it. The raw ``data``
+    column rides only on corrupt rows (the DLQ keeps it; the lake drops
+    it), which halves the collected table: the Arrow table measures 3.5-4.5x
+    the batch's compressed input bytes on the CDC envelope (sf0.001 and
+    sf0.01 orders), against 6-8x with ``data`` on every row."""
+    decoded = with_partition_cols(decode_envelope(batch_df))
+    return decoded.withColumn("data", F.when(F.col("_corrupt"), F.col("data")))
+
+
+def _footer_rows(files: list[str]) -> int:
+    """Rows in parquet ``files``, from their footers on the driver."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
 
 
 def start_alert_path(
@@ -541,9 +604,8 @@ def _batch_input_bytes(checkpoint_dir: str, batch_id: int) -> int | None:
                     # it is both cheaper (zero stats per trigger) and
                     # correct after the input files are archived/deleted
                     # post-processing (cleanSource / retention jobs),
-                    # where a re-stat raised and silently degraded every
-                    # later trigger to the sourceless shape (round-13
-                    # review)
+                    # where a re-stat would raise and silently degrade
+                    # every later trigger to the sourceless shape
                     sz = entry.get("size")
                     if isinstance(sz, int) and sz >= 0:
                         total += sz

@@ -1,15 +1,16 @@
-"""Retry/backoff + DLQ escalation (SURVEY.md B8; reference README.md:87-88,
-155-156, 383-384).
+"""Retry with exponential backoff (SURVEY.md B8; reference README.md:87-88,
+383-384).
 
 The reference's contract: throttled writes retry with exponential backoff
-(1 s -> 32 s); a sink that keeps failing retries for a bounded window and
-then routes the batch to the DLQ — records are never dropped silently
-("zero records lost", README.md:204).
+(1 s -> 32 s) for a bounded number of attempts, then the error surfaces to
+the caller, which escalates — records are never dropped silently ("zero
+records lost", README.md:204).
 
 In Spark the first layer is task retries (spark.task.maxFailures); this
-module is the second, sink-level layer used inside ``foreachBatch``, where a
-whole-batch commit (manifest write, external store PUT) can fail
-transiently.
+module is the second, sink-level layer for a whole-batch commit (manifest
+write, external store PUT) that can fail transiently. Corrupt records are
+a different path: both lake flushes route them to the ``errors/`` DLQ
+themselves (README.md:155-156).
 """
 
 from __future__ import annotations
@@ -17,8 +18,6 @@ from __future__ import annotations
 import time
 from collections.abc import Callable
 from typing import Any
-
-from pyspark.sql import DataFrame
 
 
 def retry_with_backoff(
@@ -31,14 +30,13 @@ def retry_with_backoff(
 ) -> Any:
     """Run ``fn`` with exponential backoff: delays 1, 2, 4, ... capped at
     max_delay (the reference's 1 s -> 32 s ladder, README.md:88). Re-raises
-    the last error after ``attempts`` tries — the caller escalates to the
-    DLQ. The default of 7 attempts is the smallest count whose ladder
-    actually REACHES the 32 s cap (delays 1,2,4,8,16,32) — the old default
-    of 6 stopped at 16 s, silently under-delivering the documented
-    contract (round-13 review)."""
+    the last error after ``attempts`` tries — the caller escalates. The
+    default of 7 attempts is the smallest count whose ladder actually
+    REACHES the 32 s cap (delays 1,2,4,8,16,32); 6 would stop at 16 s and
+    under-deliver the documented contract."""
     if attempts < 1:
         # a zero-iteration loop would return None WITHOUT running fn — the
-        # batch would be neither flushed nor DLQ'd, silently lost
+        # work would be neither done nor escalated, silently lost
         raise ValueError(f"retry_with_backoff: attempts must be >= 1, got {attempts}")
     # clamp the FIRST delay too: base_delay above the cap otherwise yields
     # a DECREASING ladder (60, 32, 32, ...) — backoff in reverse
@@ -51,40 +49,3 @@ def retry_with_backoff(
                 raise
             sleep(delay)
             delay = min(delay * 2, max_delay)
-
-
-def flush_with_dlq(
-    flush: Callable[[DataFrame, int], None],
-    dlq: Callable[[DataFrame, int, BaseException], None],
-    attempts: int = 7,
-    base_delay: float = 1.0,
-    max_delay: float = 32.0,
-    retriable: tuple[type[BaseException], ...] = (Exception,),
-    sleep: Callable[[float], None] = time.sleep,
-) -> Callable[[DataFrame, int], None]:
-    """Wrap a foreachBatch flush: transient failures retry with backoff;
-    persistent failure hands the batch to the DLQ sink instead of failing
-    the query (README.md:155 "retries 24 h then dlq/"; the attempt budget
-    is the knob standing in for the wall-clock window).
-
-    ``max_delay`` and ``retriable`` pass through to the backoff ladder
-    (round-13 review: they were hidden, so a caller raising base_delay
-    past 32 s got a DECREASING ladder, and a deterministic failure — a
-    schema bug raising AnalysisException — burned the full ~63 s retry
-    budget per micro-batch before reaching the DLQ when a narrowed
-    retriable tuple would send it there on the first failure)."""
-
-    def wrapped(batch_df: DataFrame, batch_id: int) -> None:
-        try:
-            retry_with_backoff(
-                lambda: flush(batch_df, batch_id),
-                attempts=attempts,
-                base_delay=base_delay,
-                max_delay=max_delay,
-                retriable=retriable,
-                sleep=sleep,
-            )
-        except Exception as e:  # escalate, never drop
-            dlq(batch_df, batch_id, e)
-
-    return wrapped

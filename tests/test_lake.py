@@ -9,6 +9,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from aws_kinesis_spark import store
 from aws_kinesis_spark.sources.envelope import synthesize_envelope
 from aws_kinesis_spark.sources.lake import (
     PARTITION_COLS,
@@ -171,10 +172,10 @@ def test_compression_accounting(spark, tmp_path):
 
 
 def test_retry_backoff_then_dlq(spark):
-    """B8 (README.md:87-88, 155): transient sink failures retry on the
-     1->32 s exponential ladder; persistent failure escalates the batch to
-    the DLQ instead of dropping it or killing the query."""
-    from aws_kinesis_spark.streaming.retry import flush_with_dlq, retry_with_backoff
+    """B8 (README.md:87-88): transient sink failures retry on the 1->32 s
+    exponential ladder; persistent failure re-raises after the attempt
+    budget, so the caller escalates instead of the error vanishing."""
+    from aws_kinesis_spark.streaming.retry import retry_with_backoff
 
     delays = []
     calls = {"n": 0}
@@ -201,21 +202,6 @@ def test_retry_backoff_then_dlq(spark):
         retry_with_backoff(always_fail, attempts=8, sleep=delays2.append)
     assert delays2 == [1.0, 2.0, 4.0, 8.0, 16.0, 32.0, 32.0]
     assert calls2["n"] == 8
-
-    # DLQ escalation keeps the batch
-    df = spark.range(3)
-    seen = {}
-
-    def bad_flush(batch_df, batch_id):
-        raise OSError("sink down")
-
-    def dlq(batch_df, batch_id, err):
-        seen["batch_id"] = batch_id
-        seen["rows"] = batch_df.count()
-        seen["err"] = str(err)
-
-    flush_with_dlq(bad_flush, dlq, attempts=2, sleep=lambda _d: None)(df, 7)
-    assert seen == {"batch_id": 7, "rows": 3, "err": "sink down"}
 
 
 def test_compaction_binpacks_partition_without_changing_rows(spark, tmp_path):
@@ -1721,3 +1707,423 @@ def test_infer_payload_schema_guards_and_drops_malformed(spark, tmp_path):
     env.write.parquet(inp)
     with _pytest.raises(ValueError, match="streaming"):
         infer_payload_schema(envelope_stream(spark, inp))
+
+
+# --------------------------------------------------------------------------
+# start_lake_path's two flush shapes: the driver shape under
+# store.DRIVER_MAX_BYTES, the Spark shape above it or without byte metadata
+# --------------------------------------------------------------------------
+
+LAKE_GATES = {"driver": store.DRIVER_MAX_BYTES, "spark": 0}
+# processing-time enrichment and the hour partition values derived from
+# it: they differ between two runs of one input, everything else must not
+CLOCK_COLS = {"processed_at", *PARTITION_COLS}
+
+
+def _lake_input(inp: str, parts, first: int = 0) -> str:
+    """Append each frame of ``parts`` as one envelope file, its mtime
+    ordering it after the files already there, so a stream with
+    maxFilesPerTrigger=1 runs one trigger per part, in order."""
+    for i, part in enumerate(parts, start=first):
+        part.repartition(1).write.mode("append").parquet(inp)
+        for f in os.listdir(inp):
+            path = os.path.join(inp, f)
+            if f.endswith(".parquet") and os.path.getmtime(path) > i * 1000:
+                os.utime(path, (i * 1000, i * 1000))
+    return inp
+
+
+def _run_lake(spark, inp: str, root: str, gate: int, monkeypatch):
+    """Drain ``inp`` through start_lake_path under ``gate``, one input file
+    per trigger; returns the lake dir and the finished query."""
+    from aws_kinesis_spark.streaming.pipeline import envelope_stream, start_lake_path
+
+    monkeypatch.setattr(store, "DRIVER_MAX_BYTES", gate)
+    q = start_lake_path(
+        envelope_stream(spark, inp, max_files_per_trigger=1),
+        os.path.join(root, "lake"),
+        os.path.join(root, "ckpt"),
+    )
+    q.awaitTermination(300)
+    assert q.exception() is None
+    return os.path.join(root, "lake"), q
+
+
+def _spy_driver_writes(monkeypatch) -> list[str]:
+    """Record the out dir of every store.write_hive_arrow call: the lake's
+    driver shape writes its data through it, the Spark shape never does."""
+    calls: list[str] = []
+    real = store.write_hive_arrow
+
+    def spy(tbl, out_dir, part_cols):
+        calls.append(os.path.basename(out_dir))
+        real(tbl, out_dir, part_cols)
+
+    monkeypatch.setattr(store, "write_hive_arrow", spy)
+    return calls
+
+
+def _clockless_rows(df) -> list[tuple]:
+    cols = sorted(c for c in df.columns if c not in CLOCK_COLS)
+    return sorted(tuple(r) for r in df.select(*cols).collect())
+
+
+def _lake_leaves(lake: str) -> list[tuple[str, int]]:
+    """(batch dir, data files) per ``batch/year/month/day/hour`` leaf
+    under data/. The hour values follow the processing clock, so they are
+    left out; a batch has one ``processed_at``, so one leaf."""
+    data = os.path.join(lake, "data")
+    leaves = []
+    for dp, _dirs, fs in os.walk(data):
+        n = sum(f.endswith(".parquet") for f in fs)
+        if n:
+            parts = os.path.relpath(dp, data).split(os.sep)
+            assert [p.partition("=")[0] for p in parts] == ["batch", *PARTITION_COLS]
+            leaves.append((parts[0], n))
+    return sorted(leaves)
+
+
+def _newest_leaf_hour(lake: str):
+    """The newest hour a data leaf of ``lake`` is partitioned under."""
+    import datetime as dt
+    import re
+
+    pat = re.compile(r"year=(\d+)/month=(\d+)/day=(\d+)/hour=(\d+)/")
+    return max(
+        dt.datetime(*map(int, pat.search(f.replace(os.sep, "/")).groups()))
+        for f in store.list_parquet_files(os.path.join(lake, "data"))
+    )
+
+
+def _manifest_ids(lake: str) -> list[int]:
+    return sorted(
+        int(n[len("manifest-"):-len(".json")])
+        for n in os.listdir(os.path.join(lake, "_manifests"))
+        if n.startswith("manifest-") and n.endswith(".json")
+    )
+
+
+def test_lake_flush_driver_and_spark_shapes_land_identical_lakes(
+    spark, envelope, tmp_path, monkeypatch
+):
+    """The same envelope input through start_lake_path under the gate (the
+    driver shape) and with the gate at 0 (the Spark shape) lands the same
+    lake: equal rows through every reader (manifest, incremental, catalog
+    table, e08's folder read), equal DLQ rows, equal manifest record
+    counts that validate, the same hour leaves with one file each, and the
+    same Spark schema from the footers."""
+    import pyspark.sql.types as T
+
+    from aws_kinesis_spark.sources.lake import read_incremental, validate_manifest
+
+    env = _corrupt_some(envelope)
+    parts = [env.filter(F.col("sequence_number") % 3 == k) for k in range(3)]
+    inp = _lake_input(str(tmp_path / "input"), parts)
+    runs = {}
+    for shape, gate in LAKE_GATES.items():
+        lake, _q = _run_lake(spark, inp, str(tmp_path / shape), gate, monkeypatch)
+        data = os.path.join(lake, "data")
+        batches = _manifest_ids(lake)
+        register_lake_table(spark, f"parity_{shape}", lake)
+        table = spark.table(f"parity_{shape}")
+        # every leaf's partition values are its rows' processing hour
+        assert table.filter(
+            (F.year("processed_at") != F.col("year"))
+            | (F.month("processed_at") != F.col("month"))
+            | (F.dayofmonth("processed_at") != F.col("day"))
+            | (F.hour("processed_at") != F.col("hour"))
+        ).count() == 0
+        file_schemas = {
+            store.parquet_store_schema(f) for f in store.list_parquet_files(data)
+        }
+        runs[shape] = {
+            "batches": batches,
+            "leaves": _lake_leaves(lake),
+            "manifest": [
+                _clockless_rows(read_via_manifest(spark, lake, b)) for b in batches
+            ],
+            "incremental": _clockless_rows(read_incremental(spark, lake, -1, batches[-1])),
+            "table": _clockless_rows(table),
+            "e08": _clockless_rows(
+                spark.read.parquet(data).select("id", "status", "op", "partition_key")
+            ),
+            "dlq": _clockless_rows(spark.read.parquet(os.path.join(lake, "errors"))),
+            "record_counts": [read_manifest(lake, b)["recordCount"] for b in batches],
+            "valid": [validate_manifest(lake, b, spark).passed for b in batches],
+            "schema": store.parquet_store_schema(data),
+            "table_schema": table.schema,
+            "file_schemas": file_schemas,
+        }
+
+    driver, spark_run = runs["driver"], runs["spark"]
+    for key in driver:
+        assert driver[key] == spark_run[key], key
+    assert driver["batches"] == [0, 1, 2]
+    assert driver["leaves"] == [(f"batch={b}", 1) for b in range(3)]
+    assert all(driver["valid"])
+    n_bad = env.filter(F.col("partition_key").endswith("00")).count()
+    assert len(driver["dlq"]) == n_bad > 0
+    assert sum(driver["record_counts"]) == len(driver["table"]) == env.count() - n_bad
+    schema = driver["schema"]
+    assert schema["arrival_ts"].dataType == T.TimestampType()
+    assert schema["processed_at"].dataType == T.TimestampType()
+    assert schema["sequence_number"].dataType == T.DecimalType(38, 0)
+    for c in ["batch", *PARTITION_COLS]:
+        assert schema[c].dataType == T.IntegerType(), c
+    assert len(driver["file_schemas"]) == 1
+
+
+def test_gated_lake_trigger_runs_one_spark_job(spark, envelope, tmp_path, monkeypatch):
+    """A lake trigger under the byte gate makes exactly one Spark action,
+    the decoded batch's Arrow collect; the Spark shape of the same trigger
+    runs its input count, the clustered write and the DLQ write (4-5
+    jobs). Jobs are counted in the query's job group and outside any group,
+    where a flush's pool threads submit theirs."""
+    tracker = spark.sparkContext.statusTracker()
+    inp = _lake_input(str(tmp_path / "input"), [_corrupt_some(envelope)])
+    jobs = {}
+    for shape, gate in LAKE_GATES.items():
+        before = set(tracker.getJobIdsForGroup(None))
+        _lake, q = _run_lake(spark, inp, str(tmp_path / shape), gate, monkeypatch)
+        ungrouped = set(tracker.getJobIdsForGroup(None)) - before
+        jobs[shape] = len(tracker.getJobIdsForGroup(str(q.runId))) + len(ungrouped)
+    assert jobs["driver"] == 1, jobs
+    assert jobs["spark"] >= 4, jobs
+
+
+def test_lake_flush_takes_the_spark_shape_without_byte_metadata_or_above_the_gate(
+    spark, envelope, tmp_path, monkeypatch
+):
+    """The driver shape needs the batch's input bytes from the file
+    source's WAL and at most store.DRIVER_MAX_BYTES of them. A batch over
+    the gate, or from a source with no file WAL (the kinesis_sim source,
+    standing in for Kinesis), takes the Spark shape and still lands every
+    record."""
+    import time
+
+    from aws_kinesis_spark.sources import kinesis_sim
+    from aws_kinesis_spark.streaming.pipeline import start_lake_path
+
+    calls = _spy_driver_writes(monkeypatch)
+    inp = _lake_input(str(tmp_path / "input"), [envelope])
+    lake, _q = _run_lake(spark, inp, str(tmp_path / "under"), LAKE_GATES["driver"], monkeypatch)
+    assert calls == ["batch=0"]
+    assert read_manifest(lake, 0)["recordCount"] == envelope.count()
+
+    calls.clear()
+    lake, _q = _run_lake(spark, inp, str(tmp_path / "over"), 1, monkeypatch)
+    assert calls == []
+    assert read_manifest(lake, 0)["recordCount"] == envelope.count()
+
+    monkeypatch.setattr(store, "DRIVER_MAX_BYTES", LAKE_GATES["driver"])
+    kinesis_sim.register(spark)
+    stream = (
+        spark.readStream.format("kinesis_sim")
+        .option("shards", 2)
+        .option("recordsPerShard", 30)
+        .option("pollRecords", 10)
+        .load()
+    )
+    lake = str(tmp_path / "kinesis" / "lake")
+    q = start_lake_path(
+        stream, lake, str(tmp_path / "kinesis" / "ckpt"),
+        available_now=False, trigger_seconds=0,
+    )
+
+    def landed() -> int:
+        if not os.path.isdir(os.path.join(lake, "_manifests")):
+            return 0
+        return sum(read_manifest(lake, b)["recordCount"] for b in _manifest_ids(lake))
+
+    try:
+        deadline = time.time() + 120
+        while time.time() < deadline and landed() < 60:
+            time.sleep(0.5)
+    finally:
+        q.stop()
+    assert q.exception() is None
+    assert landed() == 60
+    assert calls == []
+
+
+@pytest.mark.parametrize("shape", ["driver", "spark"])
+def test_lake_empty_and_all_corrupt_triggers_commit_like_any_other(
+    spark, envelope, tmp_path, monkeypatch, shape
+):
+    """An empty input file, a file of only corrupt records and a normal
+    file, one trigger each, commit manifests of 0, 0 and n records on
+    either flush shape; the DLQ holds exactly the corrupt records, and an
+    incremental read over the empty batches is empty with the lake's
+    schema."""
+    from aws_kinesis_spark.sources.lake import read_incremental, validate_manifest
+
+    poison = envelope.filter(F.col("partition_key").endswith("7")).withColumn(
+        "data", F.lit("!!not-base64!!").cast("binary")
+    )
+    normal = _corrupt_some(envelope)
+    inp = _lake_input(str(tmp_path / "input"), [envelope.limit(0), poison, normal])
+    lake, _q = _run_lake(spark, inp, str(tmp_path), LAKE_GATES[shape], monkeypatch)
+
+    bad_normal = normal.filter(F.col("partition_key").endswith("00"))
+    n_ok = normal.count() - bad_normal.count()
+    assert _manifest_ids(lake) == [0, 1, 2]
+    assert [read_manifest(lake, b)["recordCount"] for b in (0, 1, 2)] == [0, 0, n_ok]
+    assert all(validate_manifest(lake, b, spark).passed for b in (0, 1, 2))
+
+    key = ["partition_key", "sequence_number"]
+    dlq = spark.read.parquet(os.path.join(lake, "errors"))
+    want = poison.select(*key, F.lit(1).alias("batch")).unionByName(
+        bad_normal.select(*key, F.lit(2).alias("batch"))
+    )
+    assert sorted(dlq.select(*key, "batch").collect()) == sorted(want.collect())
+
+    delta = read_incremental(spark, lake, -1, 1)
+    full = read_incremental(spark, lake, -1, 2)
+    assert delta.count() == 0 and delta.schema == full.schema
+    assert read_via_manifest(spark, lake, 1).count() == 0
+    assert full.count() == n_ok
+
+
+@pytest.mark.parametrize("first,replay", [("spark", "driver"), ("driver", "spark")])
+def test_lake_batch_replayed_across_the_gate_lands_one_copy(
+    spark, envelope, tmp_path, monkeypatch, first, replay
+):
+    """A batch committed by one flush shape and replayed by the other (the
+    checkpoint's commit entry is removed, so the restarted query re-runs
+    the batch from its offset log) lands one copy of every record: a
+    first attempt's leaf in an earlier hour is purged, and the data and
+    DLQ paths hold the same content as before the replay."""
+    import hashlib
+    import shutil
+
+    from aws_kinesis_spark.sources.lake import validate_manifest
+
+    calls = _spy_driver_writes(monkeypatch)
+    env = _corrupt_some(envelope)
+    inp = _lake_input(str(tmp_path / "input"), [env])
+    root = str(tmp_path / "run")
+
+    def state(lake: str, sub: str):
+        path = os.path.join(lake, sub)
+        pdf = spark.read.parquet(path).toPandas()
+        cols = sorted(c for c in pdf.columns if c not in CLOCK_COLS)
+        body = pdf[cols].astype(str).sort_values(cols).to_csv(index=False)
+        return len(pdf), hashlib.md5(body.encode()).hexdigest()
+
+    lake, _q = _run_lake(spark, inp, root, LAKE_GATES[first], monkeypatch)
+    assert (calls == ["batch=0"]) == (first == "driver")
+    before = {sub: state(lake, sub) for sub in ("data", "errors")}
+    n_ok = read_manifest(lake, 0)["recordCount"]
+
+    batch_root = os.path.join(lake, "data", "batch=0")
+    leaf = next(
+        dp for dp, _d, fs in os.walk(batch_root) if any(f.endswith(".parquet") for f in fs)
+    )
+    stale = os.path.join(batch_root, "year=1970", "month=1", "day=1", "hour=0")
+    shutil.copytree(leaf, stale)
+    for name in ("0", ".0.crc"):
+        path = os.path.join(root, "ckpt", "commits", name)
+        if os.path.exists(path):
+            os.remove(path)
+
+    calls.clear()
+    lake, _q = _run_lake(spark, inp, root, LAKE_GATES[replay], monkeypatch)
+    assert (calls == ["batch=0"]) == (replay == "driver")
+    assert not os.path.exists(os.path.join(batch_root, "year=1970"))
+    after = {sub: state(lake, sub) for sub in ("data", "errors")}
+    assert after == before
+    assert before["errors"][0] > 0
+    assert read_manifest(lake, 0)["recordCount"] == n_ok
+    assert validate_manifest(lake, 0, spark).passed
+    back = read_via_manifest(spark, lake, 0)
+    assert back.count() == back.select("sequence_number").distinct().count() == n_ok
+
+
+def test_lake_maintenance_over_mixed_driver_and_spark_batches(
+    spark, envelope, tmp_path, monkeypatch
+):
+    """A lake whose batches were written by both flush shapes goes through
+    the maintenance passes with the results of an all-Spark-written lake:
+    merge-on-read deletes, orphan vacuum, whole-lake compaction and
+    retention expiry, with every manifest validating after each."""
+    import datetime as dt
+    import shutil
+
+    from aws_kinesis_spark.sources.lake import (
+        compact_lake,
+        expire_partitions,
+        read_incremental,
+        read_with_deletes,
+        vacuum_orphans,
+        validate_manifest,
+        write_delete_vector,
+    )
+
+    env = _corrupt_some(envelope)
+    parts = [env.filter(F.col("sequence_number") % 4 == k) for k in range(4)]
+    doomed = spark.createDataFrame([(k,) for k in range(0, 3000, 7)], "id long")
+    results = {}
+    for name, gates in (("mixed", ("driver", "spark")), ("spark", ("spark", "spark"))):
+        root = str(tmp_path / name)
+        inp = str(tmp_path / name / "input")
+        # batches 0-1 under the first gate, 2-3 under the second
+        _lake_input(inp, parts[:2])
+        lake, _q = _run_lake(spark, inp, root, LAKE_GATES[gates[0]], monkeypatch)
+        _lake_input(inp, parts[2:], first=2)
+        lake, _q = _run_lake(spark, inp, root, LAKE_GATES[gates[1]], monkeypatch)
+        batches = _manifest_ids(lake)
+
+        def valid() -> bool:
+            return all(validate_manifest(lake, b, spark).passed for b in batches)
+
+        r = {"batches": batches, "valid_0": valid()}
+        r["rows"] = _clockless_rows(read_incremental(spark, lake, -1, batches[-1]))
+        write_delete_vector(doomed, lake, delete_id=0, key_col="id")
+        r["live"] = _clockless_rows(read_with_deletes(spark, lake, key_col="id"))
+        first = store.list_parquet_files(os.path.join(lake, "data"))[0]
+        orphan = os.path.join(os.path.dirname(first), "orphan.parquet")
+        shutil.copy(first, orphan)
+        os.utime(orphan, (0, 0))
+        vac = vacuum_orphans(lake, older_than_seconds=60)
+        r["vacuum"] = (vac.n_orphans, vac.n_kept)
+        compacted = compact_lake(spark, lake, min_files=1)
+        r["compacted"] = sorted(
+            (sub.split(os.sep)[1], before, after) for sub, before, after in compacted
+        )
+        r["valid_compacted"] = valid()
+        r["rows_compacted"] = _clockless_rows(
+            read_incremental(spark, lake, -1, batches[-1])
+        )
+        now = _newest_leaf_hour(lake) + dt.timedelta(hours=3)
+        ex = expire_partitions(lake, retention_hours=1, now=now)
+        r["expired"] = (ex.n_partitions, ex.n_files, ex.n_manifests_rewritten)
+        r["valid_expired"] = valid()
+        r["left"] = store.list_parquet_files(os.path.join(lake, "data"))
+        results[name] = r
+
+    assert results["mixed"] == results["spark"]
+    r = results["mixed"]
+    assert r["batches"] == [0, 1, 2, 3]
+    assert r["valid_0"] and r["valid_compacted"] and r["valid_expired"]
+    assert r["rows_compacted"] == r["rows"]
+    assert 0 < len(r["live"]) < len(r["rows"])
+    assert [b for b, _before, _after in r["compacted"]] == [f"batch={b}" for b in range(4)]
+    assert r["vacuum"] == (1, 4)
+    assert r["expired"] == (4, 4, 4) and r["left"] == []
+
+
+def test_lake_driver_flush_holds_at_most_five_times_its_input_bytes(spark, tmp_path):
+    """The driver shape's memory bound: the Arrow table its one collect
+    returns is at most 5x the batch's compressed input bytes on the CDC
+    envelope (orders, 1 % corrupt; measured 3.5-4.5x at sf0.001 and
+    sf0.01), so a flush at the 32 MB gate holds at most ~160 MB."""
+    from aws_kinesis_spark.sources.envelope import ENVELOPE_SCHEMA
+    from aws_kinesis_spark.streaming.pipeline import _lake_batch_for_driver
+
+    inp = str(tmp_path / "input")
+    env = synthesize_envelope(load(spark, SF, "orders"))
+    _corrupt_some(env).repartition(1).write.parquet(inp)
+    in_bytes = sum(os.path.getsize(f) for f in store.list_parquet_files(inp))
+    tbl = _lake_batch_for_driver(spark.read.schema(ENVELOPE_SCHEMA).parquet(inp)).toArrow()
+    assert tbl.num_rows == env.count()
+    assert tbl.nbytes <= 5 * in_bytes, tbl.nbytes / in_bytes

