@@ -74,8 +74,8 @@ def _load_meta(index_dir: str) -> dict:
 def _write_centroids(cent: np.ndarray, index_dir: str) -> None:
     """Centroids are DRIVER metadata (nlist x dim — the stored model, the
     vector analogue of a zone-map stats file): written with pyarrow
-    directly, so a build spends no Spark job on an nlist-row table. Same
-    tmp-dir + atomic-rename commit as every other store object."""
+    directly, so a build spends no Spark job on an nlist-row table, and
+    installed with store.swap_in like every other store dir."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -92,8 +92,7 @@ def _write_centroids(cent: np.ndarray, index_dir: str) -> None:
         }
     )
     pq.write_table(table, os.path.join(tmp, "part-0.parquet"))
-    shutil.rmtree(final, ignore_errors=True)
-    os.replace(tmp, final)
+    store.swap_in(tmp, final)
 
 
 def _load_centroids(index_dir: str, nlist: int) -> np.ndarray:
@@ -202,10 +201,7 @@ def build_ivf_index(
     assigned = base.withColumn("cell", nearest_cell_udf(cent)(F.col(vec_col)))
     _write_cells_batch(assigned, cells_dir, 0)
     # meta last: its presence marks the index readable
-    tmp = _meta_path(index_dir) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, _meta_path(index_dir))
+    store.publish_file(_meta_path(index_dir), json.dumps(meta))
     return len(cent)
 
 
@@ -223,11 +219,11 @@ def update_ivf_index(
     # compact=M supersedes batches <= M, and store.index_dirs only reads batch
     # dirs ABOVE the newest compaction — an append numbered at or below it
     # would land INVISIBLE (written, never searchable, then swept by the
-    # next compaction's cleanup: silent data loss, round-12 review). The
-    # auto-numbering skips past it; an explicit replay id must clear it too.
-    # SINGLE-WRITER assumption (round-12 ADVICE): this is a check-then-
-    # write, not a lock — a compact_ivf_index racing between this listdir
-    # and _write_cells_batch's rename could still supersede the in-flight
+    # next compaction's cleanup: silent data loss). The auto-numbering
+    # skips past it; an explicit replay id must clear it too.
+    # SINGLE-WRITER assumption: this is a check-then-write, not a lock —
+    # a compact_ivf_index racing between this listdir and
+    # _write_cells_batch's rename could still supersede the in-flight
     # append. The store's posture is one maintainer process (same as the
     # dedup-ingest index); concurrent writers need external coordination.
     newest_compact = store.newest_dir_num(cells_dir, ("compact",))
@@ -244,8 +240,8 @@ def update_ivf_index(
     # frame with a drifted type (LONG ids into an INT-id index,
     # array<double> into array<float>) would otherwise commit a batch the
     # schema-enforced probe read rejects — bricking every later probe
-    # long after this append "succeeded" (round-13 review; the same
-    # defect class delete_from_ivf_index already casts away)
+    # long after this append "succeeded" (the same defect class
+    # delete_from_ivf_index casts away)
     base = T.StructType.fromJson(json.loads(meta["row_schema"]))
     assigned = new_vectors.select(
         *[F.col(f.name).cast(f.dataType).alias(f.name) for f in base.fields]
@@ -292,13 +288,10 @@ def _tomb_hwm(index_dir: str) -> int:
 def _bump_tomb_hwm(index_dir: str, cleared: list[int]) -> None:
     if not cleared:
         return
-    tombs_dir = os.path.join(index_dir, _TOMBS)
-    os.makedirs(tombs_dir, exist_ok=True)
     hwm = max(_tomb_hwm(index_dir), *cleared)
-    tmp = os.path.join(tombs_dir, _TOMB_HWM + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump({"hwm": hwm}, f)
-    os.replace(tmp, os.path.join(tombs_dir, _TOMB_HWM))
+    store.publish_file(
+        os.path.join(index_dir, _TOMBS, _TOMB_HWM), json.dumps({"hwm": hwm})
+    )
 
 
 def delete_from_ivf_index(
@@ -373,76 +366,6 @@ def delete_from_ivf_index(
         json.dump({"horizon": horizon}, f)
     store.swap_in(tmp, final)  # replay overwrites; old copy survives the swap
     return batch_id
-
-
-def rebuild_ivf_index(
-    spark: SparkSession,
-    index_dir: str,
-    nlist: int | None = None,
-    train_rows: int = 4096,
-) -> int:
-    """Retrain the index from its OWN live rows — the drift-repair
-    lifecycle op (FAISS: retrain + re-add): after enough appends and
-    deletes the trained centroids no longer match the stored distribution
-    and recall decays; rebuilding re-trains on the current live set and
-    re-assigns it, folding every batch dir and applying every tombstone
-    physically in the process.
-
-    The live rows are staged DURABLY (parquet under the index dir, stage
-    manifest written last) BEFORE the store is reset — build_ivf_index
-    deletes the cells dirs it would otherwise still be lazily reading,
-    and an in-memory copy (localCheckpoint blocks) would be the ONLY
-    copy of the corpus at that point: any executor loss or job failure
-    mid-rebuild would then destroy the index unrecoverably (round-13
-    review). With the on-disk stage, every crash point is replayable:
-    before the stage manifest lands the store is untouched; after it, a
-    re-invoked rebuild detects the uncommitted store and RESUMES from
-    the stage (the manifest carries the column names and nlist the
-    deleted meta held). The stage is reclaimed only after the rebuild
-    commits. A rebuild is a corpus-scale operation by definition; at
-    100 TB it is the same cost class as the original build — the one
-    extra corpus write the stage costs is the price of not holding the
-    only copy in volatile memory — which is why incremental maintenance
-    (update/delete/compact) exists for everything short of distribution
-    drift. Returns the number of cells."""
-    stage = os.path.join(index_dir, "_rebuild_stage")
-    stage_manifest = os.path.join(stage, "_stage_meta.json")
-    if not os.path.exists(_meta_path(index_dir)) and os.path.exists(
-        stage_manifest
-    ):
-        # crashed mid-rebuild after the stage committed: the store is
-        # uncommitted (meta-last) but the live rows are safe on disk —
-        # resume from them instead of failing on the missing meta
-        with open(stage_manifest) as f:
-            smeta = json.load(f)
-    else:
-        meta = _load_meta(index_dir)
-        smeta = {
-            "id_col": meta["id_col"],
-            "vec_col": meta["vec_col"],
-            "nlist": meta["nlist"],
-            "row_schema": meta["row_schema"],
-        }
-        live = read_ivf_cells(spark, index_dir).select(
-            meta["id_col"], meta["vec_col"]
-        )
-        shutil.rmtree(stage, ignore_errors=True)
-        live.write.mode("overwrite").parquet(stage)
-        with open(stage_manifest, "w") as f:
-            json.dump(smeta, f)  # manifest last: marks the stage complete
-    staged = spark.read.schema(
-        T.StructType.fromJson(json.loads(smeta["row_schema"]))
-    ).parquet(stage)
-    n_cells = build_ivf_index(
-        staged,
-        index_dir,
-        nlist=smeta["nlist"] if nlist is None else nlist,
-        train_rows=train_rows,
-        vec_col=smeta["vec_col"],
-        id_col=smeta["id_col"],
-    )
-    shutil.rmtree(stage, ignore_errors=True)
-    return n_cells
 
 
 def read_ivf_tombstones(
@@ -586,7 +509,7 @@ def compact_ivf_index(spark: SparkSession, index_dir: str, upto: int) -> int:
     applied = [b for b, _, horizon in tomb_batches if horizon <= upto]
     with open(os.path.join(tmp, _APPLIED_TOMBS), "w") as f:
         json.dump({"applied": applied}, f)
-    os.replace(tmp, final)
+    store.swap_in(tmp, final)
     store.sweep_superseded_dirs(cells_dir, upto)
     _clear_applied(applied)
     return 1
@@ -746,12 +669,11 @@ def knn_ivf_indexed(
         # The eager local checkpoint materializes the (queries x nprobe)
         # probe table ONCE and CUTS LINEAGE: the probed-cell collect and
         # the returned plan both read the checkpointed blocks, so the
-        # probe UDF evaluates exactly once (round-11 review: the double
-        # evaluation was a documented deterministic cost; now it's gone).
-        # Unlike .persist() — whose cache entry outlives the call until an
-        # explicit unpersist, leaking one relation per probe in a serving
-        # loop (round-12 review) — checkpoint blocks are freed by the
-        # ContextCleaner as soon as the returned DataFrame is unreachable.
+        # probe UDF evaluates exactly once. Unlike .persist() — whose
+        # cache entry outlives the call until an explicit unpersist,
+        # leaking one relation per probe in a serving loop — checkpoint
+        # blocks are freed by the ContextCleaner as soon as the returned
+        # DataFrame is unreachable.
         # bounded driver collect: <= nlist distinct cell ids — exactly the
         # partition-pruning key list a planner holds
         probed = [r[0] for r in qdf.select("cell").distinct().collect()]

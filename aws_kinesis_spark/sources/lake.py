@@ -17,14 +17,20 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import tempfile
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aws_kinesis_spark.sources.envelope import decode_envelope
-from aws_kinesis_spark.store import list_parquet_files, parquet_store_schema
+from aws_kinesis_spark.store import (
+    ASIDE,
+    list_parquet_files,
+    parquet_store_schema,
+    publish_file,
+    recover_swap,
+    swap_in,
+)
 
 PARTITION_COLS = ["year", "month", "day", "hour"]
 # what the DLQ (errors/) keeps of a corrupt record: the raw envelope
@@ -74,8 +80,7 @@ def purge_batch(lake_dir: str, batch_id: int) -> None:
     rewrite window would point external readers ("readers consume
     manifest, never folder", README.md:429) at deleted objects. Retracted,
     the batch reads as not-yet-committed until write_manifest republishes
-    it — the same visibility it had before its first commit (round-13
-    review).
+    it — the same visibility it had before its first commit.
     """
     stale = os.path.join(lake_dir, "_manifests", f"manifest-{batch_id:010d}.json")
     try:
@@ -97,25 +102,34 @@ def write_manifest(
 ) -> str:
     """Atomic manifest commit (README.md:291-303, 514-523): entries[] lists
     the exact object URLs; the manifest appears only after all data files
-    are durable (write-to-temp + atomic rename mirrors the reference's
-    ordered-two-PUT protocol, README.md:413-421). Idempotent per batch_id.
+    are durable (store.publish_file, the reference's ordered-two-PUT
+    protocol, README.md:413-421). Idempotent per batch_id.
     ``subdir="_staged"`` parks the manifest for WAP staging instead of
     publishing it — the batch is then invisible to every manifest reader
     until publish_staged_batch's rename."""
-    manifest_dir = os.path.join(lake_dir, subdir)
-    os.makedirs(manifest_dir, exist_ok=True)
     payload = {
         "batchId": batch_id,
         "entries": [{"url": f} for f in files],
         "recordCount": n_records,
         "totalBytes": sum(os.path.getsize(f) for f in files),
     }
-    final = os.path.join(manifest_dir, f"manifest-{batch_id:010d}.json")
-    fd, tmp = tempfile.mkstemp(dir=manifest_dir, suffix=".tmp")
-    with os.fdopen(fd, "w") as fh:
-        json.dump(payload, fh, indent=1)
-    os.replace(tmp, final)  # atomic on POSIX
+    final = os.path.join(lake_dir, subdir, f"manifest-{batch_id:010d}.json")
+    publish_file(final, json.dumps(payload, indent=1))
     return final
+
+
+def _manifests(lake_dir: str, subdirs=("_manifests",), newest_first=False):
+    """Yield (path, payload) for every committed ``manifest-*.json`` under
+    ``subdirs`` of the lake, in batch order per subdir. In-flight publishes
+    are dot-prefixed temps and never match."""
+    for sub in subdirs:
+        d = os.path.join(lake_dir, sub)
+        names = sorted(os.listdir(d), reverse=newest_first) if os.path.isdir(d) else []
+        for name in names:
+            if name.startswith("manifest-") and name.endswith(".json"):
+                path = os.path.join(d, name)
+                with open(path) as fh:
+                    yield path, json.load(fh)
 
 
 def read_manifest(lake_dir: str, batch_id: int) -> dict:
@@ -301,13 +315,8 @@ def _empty_like_lake(spark: SparkSession, lake_dir: str) -> DataFrame:
     non-empty committed manifest. An all-empty-batch range is a legitimate
     incremental outcome (an idle producer), not an error — but a table that
     has never committed a single file has no schema to offer."""
-    manifest_dir = os.path.join(lake_dir, "_manifests")
-    names = sorted(os.listdir(manifest_dir), reverse=True) if os.path.isdir(manifest_dir) else []
-    for name in names:
-        if not name.startswith("manifest-") or not name.endswith(".json"):
-            continue
-        with open(os.path.join(manifest_dir, name)) as fh:
-            entries = [e["url"] for e in json.load(fh)["entries"]]
+    for _path, payload in _manifests(lake_dir, newest_first=True):
+        entries = [e["url"] for e in payload["entries"]]
         if entries:
             # one footer read, not O(files): a batch is one flush of one
             # DataFrame, so every entry in a manifest shares one schema
@@ -350,7 +359,7 @@ def read_incremental(
     published reads as a zero-file batch. A manifest missing because the
     batch is still parked in ``_staged/`` raises instead — skipping it
     would silently drop the batch from every consumer that checkpoints
-    past it once it publishes (round-11 review).
+    past it once it publishes.
 
     Planned on the driver like read_via_manifest: the schema is the first
     file's footer, as Spark's own one-footer inference would take it."""
@@ -418,25 +427,19 @@ def vacuum_orphans(lake_dir: str, older_than_seconds: float = 3600.0) -> VacuumS
     in flight (tests, single-writer maintenance windows)."""
     import time
 
-    # heal any stranded compaction swap FIRST: after a swap-window crash
-    # the partition's only copy lives in <leaf>.compact.old — unreferenced
-    # by any manifest and old-mtimed, i.e. exactly what the orphan sweep
-    # below would otherwise delete (round-11 review)
+    # heal any stranded leaf swap FIRST: after a swap-window crash the
+    # partition's only copy lives in its aside dir — unreferenced by any
+    # manifest and old-mtimed, i.e. exactly what the orphan sweep below
+    # would otherwise delete
     _heal_compaction_crashes(lake_dir)
     cutoff = time.time() - older_than_seconds
-    referenced: set[str] = set()
     # staged (write-audit-publish) manifests count as references: a batch
     # awaiting its audit is pending, not orphaned
-    for sub in ("_manifests", "_staged"):
-        manifest_dir = os.path.join(lake_dir, sub)
-        if not os.path.isdir(manifest_dir):
-            continue
-        for name in sorted(os.listdir(manifest_dir)):
-            if not name.endswith(".json"):
-                continue
-            with open(os.path.join(manifest_dir, name)) as fh:
-                payload = json.load(fh)
-            referenced.update(os.path.realpath(e["url"]) for e in payload["entries"])
+    referenced = {
+        os.path.realpath(e["url"])
+        for _path, payload in _manifests(lake_dir, ("_manifests", "_staged"))
+        for e in payload["entries"]
+    }
     data_dir = os.path.join(lake_dir, "data")
     n_orphans = n_bytes = n_kept = 0
     for f in list_parquet_files(data_dir):
@@ -486,10 +489,10 @@ def expire_partitions(
     import datetime as dt
     import re
 
-    # heal stranded compaction swaps FIRST (the caller contract named in
-    # _heal_compaction_crashes' docstring, unwired until round-13 review):
-    # an expired hour surviving inside <leaf>.compact.old would dodge the
-    # hour= regex and outlive its retention window on disk
+    # heal stranded leaf swaps FIRST (the caller contract named in
+    # _heal_compaction_crashes' docstring): an expired hour surviving in
+    # its aside dir would dodge the hour= regex and outlive its retention
+    # window on disk
     _heal_compaction_crashes(lake_dir)
     horizon = now - dt.timedelta(hours=retention_hours)
     data_dir = os.path.join(lake_dir, "data")
@@ -516,25 +519,16 @@ def expire_partitions(
     # symlinked) than this sweep was invoked with — a raw string compare
     # would silently skip the rewrite and leave dangling entries (the same
     # defense vacuum_orphans and _remap_partitions_in_manifests carry).
-    # Entry urls are resolved PRE-DELETE too (round-12 review): realpath
-    # cannot resolve a symlinked component once the subtree it traverses
-    # is gone, so a post-delete resolve would miss expired_set and leave
-    # the entry dangling.
+    # Entry urls are resolved PRE-DELETE too: realpath cannot resolve a
+    # symlinked component once the subtree it traverses is gone, so a
+    # post-delete resolve would miss expired_set and leave the entry
+    # dangling.
+    if not expired_dirs:
+        return ExpiryStats(0, 0, 0, 0)
     expired_set = {os.path.realpath(d) for d in expired_dirs}
-    entry_dir_real: dict[str, str] = {}
-    if expired_dirs:
-        for sub in ("_manifests", "_staged"):
-            manifest_dir = os.path.join(lake_dir, sub)
-            if not os.path.isdir(manifest_dir):
-                continue
-            for name in os.listdir(manifest_dir):
-                if not name.startswith("manifest-") or not name.endswith(".json"):
-                    continue
-                with open(os.path.join(manifest_dir, name)) as fh:
-                    for e in json.load(fh)["entries"]:
-                        d = os.path.dirname(e["url"])
-                        if d not in entry_dir_real:
-                            entry_dir_real[d] = os.path.realpath(d)
+    manifests = list(_manifests(lake_dir, ("_manifests", "_staged")))
+    entry_dirs = {os.path.dirname(e["url"]) for _p, m in manifests for e in m["entries"]}
+    entry_dir_real = {d: os.path.realpath(d) for d in entry_dirs}
     for d in expired_dirs:
         shutil.rmtree(d, ignore_errors=True)
         # prune now-empty parents up to (not including) data/
@@ -549,35 +543,19 @@ def expire_partitions(
     # staged batch must not keep listing deleted files — its audit and any
     # unfenced publish would otherwise act on a manifest of ghosts
     n_rewritten = 0
-    for sub in ("_manifests", "_staged"):
-        manifest_dir = os.path.join(lake_dir, sub)
-        if not os.path.isdir(manifest_dir) or not expired_set:
+    for path, payload in manifests:
+        kept = [
+            e
+            for e in payload["entries"]
+            if entry_dir_real[os.path.dirname(e["url"])] not in expired_set
+        ]
+        if len(kept) == len(payload["entries"]):
             continue
-        for name in sorted(os.listdir(manifest_dir)):
-            if not name.startswith("manifest-") or not name.endswith(".json"):
-                continue
-            path = os.path.join(manifest_dir, name)
-            with open(path) as fh:
-                payload = json.load(fh)
-            kept = [
-                e
-                for e in payload["entries"]
-                if entry_dir_real.get(
-                    os.path.dirname(e["url"]),
-                    os.path.realpath(os.path.dirname(e["url"])),
-                )
-                not in expired_set
-            ]
-            if len(kept) == len(payload["entries"]):
-                continue
-            payload["entries"] = kept
-            payload["recordCount"] = -1
-            payload["totalBytes"] = sum(os.path.getsize(e["url"]) for e in kept)
-            fd, tmp = tempfile.mkstemp(dir=manifest_dir, suffix=".tmp")
-            with os.fdopen(fd, "w") as fh:
-                json.dump(payload, fh, indent=1)
-            os.replace(tmp, path)
-            n_rewritten += 1
+        payload["entries"] = kept
+        payload["recordCount"] = -1
+        payload["totalBytes"] = sum(os.path.getsize(e["url"]) for e in kept)
+        publish_file(path, json.dumps(payload, indent=1))
+        n_rewritten += 1
     return ExpiryStats(
         n_partitions=len(expired_dirs),
         n_files=n_files,
@@ -587,26 +565,20 @@ def expire_partitions(
 
 
 def _heal_compaction_crashes(lake_dir: str) -> int:
-    """Run recover_compaction for every leaf with a stranded
-    ``.compact.old`` / ``.compact.tmp`` sibling under data/. Maintenance
-    passes (vacuum, whole-lake compaction, retention) call this FIRST: a
-    crash in _rewrite_leaf's swap window leaves the partition's ONLY copy
-    in ``.compact.old`` — a walk that misreads that dir as a live leaf
-    would compact it under the wrong name, and a vacuum would delete the
-    unreferenced old-mtime files: unrecoverable loss (round-11 review).
-    Returns leaves healed."""
-    data_dir = os.path.join(lake_dir, "data")
+    """Run store.recover_swap for every leaf under data/ with a stranded
+    aside (``<leaf>.prev.tmp``) or rewrite (``<leaf>.tmp``) sibling.
+    Maintenance passes (vacuum, whole-lake compaction, delete
+    materialization, retention) call this FIRST: a crash in _rewrite_leaf's
+    swap window leaves the partition's ONLY copy in the aside dir — a walk
+    that misreads that dir as a live leaf would rewrite it under the wrong
+    name, and a vacuum would delete the unreferenced old-mtime files:
+    unrecoverable loss. Returns leaves healed."""
     healed = 0
-    if not os.path.isdir(data_dir):
-        return 0
-    for dirpath, dirs, _files in os.walk(data_dir):
-        for d in list(dirs):
-            if d.endswith((".compact.old", ".compact.tmp")):
-                base = d[: -len(".compact.old")]  # both suffixes same length
-                sub = os.path.relpath(os.path.join(dirpath, base), lake_dir)
-                if recover_compaction(lake_dir, sub):
-                    healed += 1
-                dirs.remove(d)  # healed away — don't descend
+    for dirpath, dirs, _files in os.walk(os.path.join(lake_dir, "data")):
+        for d in [n for n in dirs if n.endswith(".tmp")]:
+            leaf = d[: -len(ASIDE)] if d.endswith(ASIDE) else d[: -len(".tmp")]
+            healed += recover_swap(os.path.join(dirpath, leaf)) is not None
+            dirs.remove(d)  # healed away — don't descend
     return healed
 
 
@@ -636,7 +608,7 @@ def compact_lake(
     for dirpath, dirs, files in os.walk(data_dir):
         if dirs:
             continue  # only leaf partitions hold data files
-        if dirpath.endswith((".compact.old", ".compact.tmp")):
+        if dirpath.endswith(".tmp"):
             continue  # a CONCURRENT sweep's in-flight swap — never a leaf
         if sum(1 for f in files if f.endswith(".parquet")) >= min_files:
             leaves.append(os.path.relpath(dirpath, lake_dir))
@@ -660,35 +632,6 @@ def compact_lake(
     return [(sub, b, a) for sub, b, a, _nf in results if b]
 
 
-def recover_compaction(lake_dir: str, partition_subdir: str) -> str | None:
-    """Heal a compaction interrupted between its two atomic renames.
-
-    Crash states and their recovery (startup / pre-compaction call):
-    - live dir MISSING + ``.compact.old`` present: the crash hit the swap
-      window — rename the old data back into place (zero loss).
-    - live dir present + ``.compact.old`` present: crash after the second
-      rename — the swap completed; drop the trash copy.
-    - ``.compact.tmp`` present in any state: incomplete rewrite — drop it
-      (the live/old dir still holds every row).
-
-    Returns which action was taken ("restored", "cleaned") or None."""
-    part_dir = os.path.join(lake_dir, partition_subdir)
-    tmp = part_dir + ".compact.tmp"
-    trash = part_dir + ".compact.old"
-    action = None
-    if os.path.exists(trash):
-        if not os.path.exists(part_dir):
-            os.replace(trash, part_dir)
-            action = "restored"
-        else:
-            shutil.rmtree(trash, ignore_errors=True)
-            action = "cleaned"
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp, ignore_errors=True)
-        action = action or "cleaned"
-    return action
-
-
 def compact_lake_partition(
     spark: SparkSession,
     lake_dir: str,
@@ -703,11 +646,11 @@ def compact_lake_partition(
     restores scan-efficient file sizes without changing a single row).
 
     Protocol mirrors the manifest commit's write-then-swap (README.md:413-421):
-    rewrite into a temp dir next to the partition, then two atomic renames
-    (old -> trash, tmp -> live) so readers see either the old or the new file
-    set, never a mix. A crash between the two renames leaves the partition
-    absent with its data intact in ``.compact.old`` —
-    ``recover_compaction`` (called here on entry) restores it, so the
+    rewrite into a temp dir next to the partition, then store.swap_in's two
+    renames (live -> aside, tmp -> live) so readers see either the old or
+    the new file set, never a mix. A crash between the two renames leaves
+    the partition absent with its data intact in ``<leaf>.prev.tmp`` —
+    ``store.recover_swap`` (called here on entry) restores it, so the
     invariant is "every row is always durable, the live dir may lag one
     recovery call". Returns (files_before, files_after).
 
@@ -752,8 +695,8 @@ def _rewrite_leaf(
     the leaf's rows before the rewrite — the delete-materialization hook;
     output files stay sized from the INPUT bytes (conservative when the
     transform drops rows)."""
-    recover_compaction(lake_dir, partition_subdir)
     part_dir = os.path.join(lake_dir, partition_subdir)
+    recover_swap(part_dir)
     files = list_parquet_files(part_dir)
     if not files:
         return (0, 0, [])
@@ -762,10 +705,7 @@ def _rewrite_leaf(
     df = spark.read.parquet(part_dir)
     if transform is not None:
         df = transform(df)
-    tmp = part_dir + ".compact.tmp"
-    trash = part_dir + ".compact.old"
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(trash, ignore_errors=True)
+    tmp = part_dir + ".tmp"
     if cluster_col is not None:
         # F.expr accepts both a plain column name and a SQL expression, so
         # a caller can cluster on a COMPUTED key — e.g. a Z-order curve
@@ -779,9 +719,7 @@ def _rewrite_leaf(
     out.write.mode("overwrite").option(
         "compression", "snappy"
     ).parquet(tmp)
-    os.replace(part_dir, trash)
-    os.replace(tmp, part_dir)
-    shutil.rmtree(trash, ignore_errors=True)
+    swap_in(tmp, part_dir)
     new_files = list_parquet_files(part_dir)
     return (len(files), len(new_files), new_files)
 
@@ -806,13 +744,13 @@ def _remap_partitions_in_manifests(
     (b) make vacuum_orphans DELETE the new files as unreferenced — a
     data-loss composition. Leaf dirs are batch-scoped
     (``data/batch=<id>/…``), so exactly one manifest references a leaf:
-    its dead entries are replaced by the new file set via the same atomic
-    tmp-then-rename rewrite as retention expiry. Cost is
-    O(manifests × entries) TOTAL per sweep — the per-leaf form was
-    O(leaves × manifests) (VERDICT r6 #2). Entry ownership is one dict
-    lookup on the entry's parent dir (data files live directly in their
-    leaf). ``recordCount`` is kept for a pure re-pack (rows unchanged)
-    and set to -1 (unknown) when the caller rewrote rows (delete
+    its dead entries are replaced by the new file set via
+    store.publish_file, as in retention expiry. Cost is O(manifests ×
+    entries) TOTAL per sweep, not the O(leaves × manifests) of one pass per
+    leaf. Entry ownership is one dict lookup on the entry's parent dir (data
+    files live directly in their leaf). ``recordCount`` is kept for a pure
+    re-pack (rows unchanged) and set to -1 (unknown) when the caller
+    rewrote rows (delete
     materialization), matching the expiry convention. Returns manifests
     rewritten.
 
@@ -827,38 +765,26 @@ def _remap_partitions_in_manifests(
     if not by_leaf_real:
         return 0
     n_rewritten = 0
-    for sub in ("_manifests", "_staged"):
-        manifest_dir = os.path.join(lake_dir, sub)
-        if not os.path.isdir(manifest_dir):
+    for path, payload in _manifests(lake_dir, ("_manifests", "_staged")):
+        kept, touched = [], set()
+        for e in payload["entries"]:
+            owner = os.path.realpath(os.path.dirname(e["url"]))
+            if owner in by_leaf_real:
+                touched.add(owner)
+            else:
+                kept.append(e)
+        if not touched:
             continue
-        for name in sorted(os.listdir(manifest_dir)):
-            if not name.startswith("manifest-") or not name.endswith(".json"):
-                continue
-            path = os.path.join(manifest_dir, name)
-            with open(path) as fh:
-                payload = json.load(fh)
-            kept, touched = [], set()
-            for e in payload["entries"]:
-                owner = os.path.realpath(os.path.dirname(e["url"]))
-                if owner in by_leaf_real:
-                    touched.add(owner)
-                else:
-                    kept.append(e)
-            if not touched:
-                continue
-            for owner in sorted(touched):
-                kept.extend({"url": f} for f in by_leaf_real[owner])
-            payload["entries"] = kept
-            if rows_changed:
-                payload["recordCount"] = -1  # unknown post-delete, expiry convention
-            payload["totalBytes"] = sum(
-                os.path.getsize(e["url"]) for e in kept if os.path.exists(e["url"])
-            )
-            fd, tmp = tempfile.mkstemp(dir=manifest_dir, suffix=".tmp")
-            with os.fdopen(fd, "w") as fh:
-                json.dump(payload, fh, indent=1)
-            os.replace(tmp, path)
-            n_rewritten += 1
+        for owner in sorted(touched):
+            kept.extend({"url": f} for f in by_leaf_real[owner])
+        payload["entries"] = kept
+        if rows_changed:
+            payload["recordCount"] = -1  # unknown post-delete, expiry convention
+        payload["totalBytes"] = sum(
+            os.path.getsize(e["url"]) for e in kept if os.path.exists(e["url"])
+        )
+        publish_file(path, json.dumps(payload, indent=1))
+        n_rewritten += 1
     return n_rewritten
 
 
@@ -877,60 +803,48 @@ def write_delete_vector(
     as new objects).
 
     The keys to delete are written as their own parquet object set under
-    ``_deletes/`` via the same write-to-temp + atomic-rename commit as the
-    manifest (README.md:413-421): readers see a delete vector entirely or
-    not at all, never a partial key list. Distributed write — the key set
-    streams from executors, never through the driver. Idempotent per
-    delete_id (re-run overwrites the same commit).
+    ``_deletes/`` and installed with store.swap_in (README.md:413-421):
+    readers see a delete vector entirely or not at all, never a partial key
+    list. Distributed write — the key set streams from executors, never
+    through the driver. Idempotent per delete_id (re-run overwrites the
+    same commit).
 
     Scale: the delete file is O(deleted keys); a 100 TB table with a
     point-delete workload carries MB-scale vectors that AQE broadcasts at
     read time (see read_with_deletes).
 
-    Re-runs commit through a two-rename swap (write tmp, committed->.old,
-    tmp->final, drop .old): the committed vector stays readable for the
-    whole distributed write — the old protocol rmtree'd it FIRST, so a
-    replayed delete un-committed the vector for the write's duration
-    (concurrent reads resurrected the deleted rows) and a crash in that
-    window lost it permanently (round-13 review). The residual
-    between-renames crash state (.old present, final missing) is healed
-    by _delete_vector_dirs, which serves the .old as the committed copy."""
-    deletes_root = os.path.join(lake_dir, "_deletes")
-    os.makedirs(deletes_root, exist_ok=True)
-    final = os.path.join(deletes_root, f"delete-{delete_id:010d}")
+    A re-run writes the new vector beside the committed one and swaps it
+    in, so the committed vector stays readable for the whole distributed
+    write: deleting it first would let concurrent reads resurrect the
+    deleted rows for the write's duration, and a crash in that window would
+    lose it. The between-renames crash state (aside copy present, final
+    missing) is served by _delete_vector_dirs as the committed copy."""
+    final = os.path.join(lake_dir, "_deletes", f"delete-{delete_id:010d}")
     tmp = final + ".tmp"
-    old = final + ".old"
-    shutil.rmtree(tmp, ignore_errors=True)
     df_keys.select(F.col(key_col).alias("key")).distinct().write.mode(
         "overwrite"
     ).parquet(tmp)
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.exists(final):
-        os.replace(final, old)
-    os.replace(tmp, final)
-    shutil.rmtree(old, ignore_errors=True)
+    swap_in(tmp, final)
     return final
 
 
 def _delete_vector_dirs(deletes_root: str) -> list[str]:
     """Committed delete-vector dirs. ``.tmp`` dirs are in-flight writes
-    (invisible); a ``.old`` dir is a replay's swap trash — normally
-    shadowed by its final dir, but after a crash BETWEEN the two swap
-    renames it is the only committed copy, so it is served in the final's
-    place (the replay rewrites identical content, per-delete_id
+    (invisible); an aside dir (``.prev.tmp``) is a re-run's swap leftover —
+    normally shadowed by its final dir, but after a crash BETWEEN the two
+    swap renames it is the only committed copy, so it is served in the
+    final's place (the re-run rewrites identical content, per-delete_id
     idempotency)."""
-    if not os.path.isdir(deletes_root):
-        return []
-    names = sorted(os.listdir(deletes_root))
-    finals = {
-        n for n in names
-        if n.startswith("delete-") and not n.endswith((".tmp", ".old"))
-    }
-    out = [os.path.join(deletes_root, n) for n in sorted(finals)]
-    for n in names:
-        if n.endswith(".old") and n[: -len(".old")] not in finals:
-            out.append(os.path.join(deletes_root, n))
-    return sorted(out)
+    names = set(os.listdir(deletes_root)) if os.path.isdir(deletes_root) else set()
+    return sorted(
+        os.path.join(deletes_root, n)
+        for n in names
+        if n.startswith("delete-")
+        and (
+            not n.endswith(".tmp")
+            or (n.endswith(ASIDE) and n[: -len(ASIDE)] not in names)
+        )
+    )
 
 
 def read_with_deletes(
@@ -973,11 +887,11 @@ def materialize_deletes(
     invalidated once."""
     from concurrent.futures import ThreadPoolExecutor
 
-    # heal stranded compaction swaps FIRST: a crash in the swap window
-    # leaves a partition's only copy in <leaf>.compact.old — walking that
-    # trash dir as a live leaf would rewrite it under the wrong name while
-    # the manifests still point at the missing live paths (round-13
-    # review; the same guard compact_lake and vacuum_orphans carry)
+    # heal stranded leaf swaps FIRST: a crash in the swap window leaves a
+    # partition's only copy in its aside dir — walking that dir as a live
+    # leaf would rewrite it under the wrong name while the manifests still
+    # point at the missing live paths (the same guard compact_lake and
+    # vacuum_orphans carry)
     _heal_compaction_crashes(lake_dir)
     vecs = _delete_vector_dirs(os.path.join(lake_dir, "_deletes"))
     if not vecs:
@@ -988,7 +902,7 @@ def materialize_deletes(
         dirpath
         for dirpath, dirs, files in os.walk(data_dir)
         if not dirs
-        and not dirpath.endswith((".compact.old", ".compact.tmp"))
+        and not dirpath.endswith(".tmp")
         and any(f.endswith(".parquet") for f in files)
     ]
     if not leaves:
@@ -1034,8 +948,8 @@ def build_zone_maps(spark: SparkSession, lake_dir: str, cols: list[str]) -> str:
     One distributed pass: group by input_file_name(), min/max per tracked
     column (map-side partials — the shuffle carries one partial row per
     (file, partition) pair, not data). The stats table itself is written as
-    parquet by executors via the same write-to-temp + atomic-rename commit
-    as every other lake object — the driver never holds the stats. Stats
+    parquet by executors and installed with store.swap_in, like every other
+    lake dir — the driver never holds the stats. Stats
     are only useful when the layout clusters the column (e.g. a
     repartitionByRange write); build after compaction/clustering."""
     data_dir = os.path.join(lake_dir, "data")
@@ -1046,18 +960,15 @@ def build_zone_maps(spark: SparkSession, lake_dir: str, cols: list[str]) -> str:
         aggs.append(F.max(c).alias(f"max_{c}"))
     zm = df.groupBy("__file").agg(*aggs)
     final = os.path.join(lake_dir, "_zonemaps")
-    tmp = final + ".tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(final, ignore_errors=True)
-    zm.write.mode("overwrite").parquet(tmp)
-    os.replace(tmp, final)
+    zm.write.mode("overwrite").parquet(final + ".tmp")
+    swap_in(final + ".tmp", final)
     return final
 
 
 def update_zone_maps(spark: SparkSession, lake_dir: str, cols: list[str]) -> int:
     """INCREMENTAL zone-map maintenance: scan ONLY data files the stats
     table does not cover yet, union their stats with the surviving prior
-    rows, and commit through the same write-to-tmp + atomic-rename swap.
+    rows, and commit through the same store.swap_in.
     Also drops rows for files that no longer exist (compaction/vacuum
     replaced them), so stats never bloat or point at dead paths.
 
@@ -1072,6 +983,7 @@ def update_zone_maps(spark: SparkSession, lake_dir: str, cols: list[str]) -> int
 
     data_dir = os.path.join(lake_dir, "data")
     final = os.path.join(lake_dir, "_zonemaps")
+    recover_swap(final)  # the prior stats are read below
     if not os.path.isdir(final):
         build_zone_maps(spark, lake_dir, cols)
         return len(list_parquet_files(data_dir))
@@ -1094,9 +1006,9 @@ def update_zone_maps(spark: SparkSession, lake_dir: str, cols: list[str]) -> int
     if new_files:
         fresh = (
             # basePath keeps hive partition columns resolvable on a
-            # FILE-LIST read (a bare file read drops them, so stats on a
-            # partition column built fine and then crashed every
-            # incremental update — round-13 review, repro'd)
+            # FILE-LIST read: a bare file read drops them, and stats on a
+            # partition column would build fine and then crash every
+            # incremental update
             spark.read.option("basePath", data_dir)
             .parquet(*new_files)
             .withColumn("__file", F.input_file_name())
@@ -1106,11 +1018,8 @@ def update_zone_maps(spark: SparkSession, lake_dir: str, cols: list[str]) -> int
         zm = keep.unionByName(fresh)
     else:
         zm = keep
-    tmp = final + ".tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    zm.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(final, ignore_errors=True)
-    os.replace(tmp, final)
+    zm.write.mode("overwrite").parquet(final + ".tmp")
+    swap_in(final + ".tmp", final)
     return len(new_files)
 
 
@@ -1214,7 +1123,7 @@ def read_zone_pruned(spark: SparkSession, lake_dir: str, col: str, lo, hi) -> Da
     if not surviving:
         return spark.read.parquet(data_dir).filter(pred).limit(0)
     # basePath: partition columns must stay resolvable on the pruned
-    # file-list read (round-13 review — see update_zone_maps)
+    # file-list read (see update_zone_maps)
     return spark.read.option("basePath", data_dir).parquet(*surviving).filter(pred)
 
 
@@ -1256,27 +1165,18 @@ def stage_lake_batch(
     batch as its own."""
     import uuid
 
-    # the manifest lands DIRECTLY in _staged/ (round-11 review): routing it
-    # through _manifests/ first opened a window where the unaudited batch
-    # was visible to every manifest reader — and a crash in that window
-    # left it permanently published with no staged manifest to drop
-    staged_dir = os.path.join(lake_dir, "_staged")
+    # the manifest lands DIRECTLY in _staged/: routing it through
+    # _manifests/ first would open a window where the unaudited batch is
+    # visible to every manifest reader — and a crash in that window would
+    # leave it published with no staged manifest to drop. Two stagers
+    # racing on one batch_id each install a WHOLE manifest (publish_file)
     stats = run_lake_batch(
         env, lake_dir, batch_id=batch_id, manifest_subdir="_staged", **kwargs
     )
-    name = f"manifest-{batch_id:010d}.json"
-    staged = os.path.join(staged_dir, name)
     token = uuid.uuid4().hex
-    with open(staged) as fh:
+    with open(stats.manifest_path) as fh:
         payload = json.load(fh)
-    payload["writer"] = token
-    # unique tmp name (mkstemp): two stagers racing on the same batch_id
-    # must each install a WHOLE manifest — a shared fixed tmp path could
-    # interleave truncate+writes into torn JSON neither fence can read
-    fd, tmp = tempfile.mkstemp(dir=staged_dir, suffix=".tmp")
-    with os.fdopen(fd, "w") as fh:
-        json.dump(payload, fh)
-    os.replace(tmp, staged)
+    publish_file(stats.manifest_path, json.dumps({**payload, "writer": token}))
     return FlushStats(**{**stats.__dict__, "writer": token})
 
 
@@ -1388,7 +1288,7 @@ def drop_staged_batch(lake_dir: str, batch_id: int, writer: str | None = None) -
     fence publish_staged_batch enforces, because the failure path is just
     as destructive: a fenced-out writer whose audit failed would otherwise
     delete the SUPERSEDING writer's staged manifest, its files, and (via
-    purge_batch) the whole batch prefix (round-13 review). On a token
+    purge_batch) the whole batch prefix. On a token
     mismatch the drop raises — the superseding writer owns the batch now,
     and this writer's files were already purged by that writer's re-stage.
     None skips the check (single-writer pipelines)."""
@@ -1484,27 +1384,20 @@ def export_symlink_manifests(lake_dir: str) -> int:
     exported even while they still exist on disk awaiting vacuum.
 
     Idempotent and atomic per partition: each manifest lands via
-    write-to-temp + os.replace (readers see old or new, never partial),
+    store.publish_file (readers see old or new, never partial),
     and partition dirs that no longer hold committed files get their
     manifests removed — a re-export after compaction converges to the
     current snapshot. Driver cost is O(committed files): the same
     metadata any table-format planner materializes to plan a scan.
 
     Returns the number of partition manifests written."""
-    import shutil
-
-    manifest_dir = os.path.join(lake_dir, "_manifests")
     data_root = os.path.join(lake_dir, "data")
     by_partition: dict[str, list[str]] = {}
-    names = sorted(os.listdir(manifest_dir)) if os.path.isdir(manifest_dir) else []
-    for name in names:
-        if not name.startswith("manifest-") or not name.endswith(".json"):
-            continue
-        with open(os.path.join(manifest_dir, name)) as fh:
-            for entry in json.load(fh)["entries"]:
-                f = entry["url"]
-                rel = os.path.relpath(os.path.dirname(f), data_root)
-                by_partition.setdefault(rel, []).append(os.path.abspath(f))
+    for _path, payload in _manifests(lake_dir):
+        for entry in payload["entries"]:
+            f = entry["url"]
+            rel = os.path.relpath(os.path.dirname(f), data_root)
+            by_partition.setdefault(rel, []).append(os.path.abspath(f))
     sym_root = os.path.join(lake_dir, "_symlink_format_manifest")
     os.makedirs(sym_root, exist_ok=True)
     # drop manifests for partitions that left the committed set
@@ -1513,16 +1406,11 @@ def export_symlink_manifests(lake_dir: str) -> int:
             rel = os.path.relpath(dirpath, sym_root)
             if rel not in by_partition:
                 shutil.rmtree(dirpath, ignore_errors=True)
-    n_written = 0
     for rel, files in by_partition.items():
-        pdir = os.path.join(sym_root, rel)
-        os.makedirs(pdir, exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=pdir, suffix=".tmp")
-        with os.fdopen(fd, "w") as fh:
-            fh.write("\n".join(sorted(files)) + "\n")
-        os.replace(tmp, os.path.join(pdir, "manifest"))
-        n_written += 1
-    return n_written
+        publish_file(
+            os.path.join(sym_root, rel, "manifest"), "\n".join(sorted(files)) + "\n"
+        )
+    return len(by_partition)
 
 
 def read_via_symlink_manifests(spark: SparkSession, lake_dir: str) -> DataFrame:

@@ -1,6 +1,21 @@
-"""The engine's on-disk store layout: one module owns it.
+"""The engine's on-disk store layout and its commit protocol: one module
+owns both.
 
-Two store protocols, both hive-partitioned snappy parquet:
+The commit protocol is three primitives, and every commit in the engine
+goes through one of them:
+
+- ``publish_file(path, text)``: the atomic small-object commit (lake and
+  staged manifests, symlink manifests, ``_CURRENT``, the IVF ``_meta.json``
+  and ``_hwm.json``). A unique hidden temp in the target dir, then one
+  rename, so two writers never tear each other's file.
+- ``swap_in(tmp, final)``: the atomic dir install (append-store folds and
+  batches, version dirs, lake leaves, delete vectors, zone maps, IVF
+  centroids). An existing ``final`` moves aside as ``<final>.prev.tmp`` and
+  is reclaimed only after the new dir lands.
+- ``recover_swap(final)``: the crash heal for a swap cut between its two
+  renames. Writers that read ``final`` before swapping call it first.
+
+Store layouts, both hive-partitioned snappy parquet:
 
 - The APPEND store (the dedup-ingest ``bands``/``corpus`` index, the IVF
   ``cells`` store)::
@@ -10,7 +25,6 @@ Two store protocols, both hive-partitioned snappy parquet:
 
   ``index_dirs`` resolves the live dirs, ``compact_store`` folds them and
   ``sweep_superseded_dirs`` reclaims what a committed fold superseded.
-  ``swap_in`` installs a finished ``<dir>.tmp`` under its final name.
 
 - The POINTER-SWAP store (warehouse upsert, SCD2 dimension, rollup)::
 
@@ -21,9 +35,10 @@ Two store protocols, both hive-partitioned snappy parquet:
   ``pointer_dir``, ``committed_versions``, ``version_dir`` and
   ``latest_version_dir_below`` resolve it.
 
-Dir-visibility rule shared by both: ``.tmp``-suffixed names are in-flight
-writes (or ``.prev.tmp`` swap leftovers) and invisible to every reader, and
-names that do not parse are ignored, never fatal.
+Visibility rule shared by both: ``.tmp``-suffixed dir names are in-flight
+writes or swap asides, dot-prefixed files are in-flight publishes, and
+both are invisible to every reader; names that do not parse are ignored,
+never fatal.
 
 Writers: ``write_hive_arrow`` lays out an Arrow table the driver holds;
 ``write_partitioned`` picks it or a clustered Spark write at the ONE
@@ -38,6 +53,7 @@ import json
 import os
 import re
 import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -59,6 +75,65 @@ DRIVER_MAX_BYTES = 32 << 20
 # and shuffles: partition counts scale with the data they carry, never with
 # a constant tuned for local mode or for the cluster.
 TASK_INPUT_BYTES = 256 << 10
+
+
+# --------------------------------------------------------------- commit
+
+# suffix of the committed dir a swap moves aside; like every ``.tmp`` name
+# it is invisible to readers that list a store
+ASIDE = ".prev.tmp"
+
+
+def publish_file(path: str, text: str) -> None:
+    """Atomically commit ``text`` as the file ``path``: readers see the old
+    file or the new one, never a partial write. The temp is unique per
+    call, so concurrent publishers of one path each install a whole file
+    (the last rename wins), and it is dot-prefixed, so a temp stranded by a
+    crash stays invisible to Spark, Hive and every manifest or dir lister.
+    On S3 this is one single-object PUT (conditional where the caller
+    needs a compare-and-swap)."""
+    d, name = os.path.split(path)
+    os.makedirs(d, exist_ok=True)
+    fd, tmp = tempfile.mkstemp(dir=d, prefix=f".{name}.", suffix=".tmp")
+    with os.fdopen(fd, "w") as fh:
+        fh.write(text)
+    os.replace(tmp, path)
+
+
+def swap_in(tmp: str, final: str) -> None:
+    """Install the finished dir ``tmp`` as ``final``. An existing ``final``
+    moves aside in one rename to ``<final>.prev.tmp``, the new dir lands in
+    a second, and only then is the aside copy reclaimed: committed data is
+    never deleted before its replacement is in place. A crash between the
+    two renames leaves ``final`` missing and its data in the aside copy;
+    ``recover_swap`` restores it, and rerunning the write converges too.
+    On S3 the dir is a prefix of objects made visible by one completion
+    marker PUT."""
+    prev = final + ASIDE
+    if os.path.exists(final):
+        shutil.rmtree(prev, ignore_errors=True)
+        os.replace(final, prev)
+    os.replace(tmp, final)
+    shutil.rmtree(prev, ignore_errors=True)
+
+
+def recover_swap(final: str) -> str | None:
+    """Heal ``final`` after a crash in ``swap_in`` or in the write before
+    it: an aside copy with ``final`` missing is renamed back ("restored"),
+    an aside copy next to ``final`` is dropped ("cleaned"), and so is a
+    stray ``<final>.tmp``. Returns the action taken, or None."""
+    prev, action = final + ASIDE, None
+    if os.path.exists(prev):
+        if os.path.exists(final):
+            shutil.rmtree(prev, ignore_errors=True)
+            action = "cleaned"
+        else:
+            os.replace(prev, final)
+            action = "restored"
+    if os.path.exists(final + ".tmp"):
+        shutil.rmtree(final + ".tmp", ignore_errors=True)
+        action = action or "cleaned"
+    return action
 
 
 # ---------------------------------------------------------------- files
@@ -320,26 +395,9 @@ def compact_store(spark: SparkSession, root: str, part_col: str, upto: int) -> i
         merged.repartition(n_tasks, F.col(part_col)).write.partitionBy(
             part_col
         ).mode("overwrite").parquet(tmp)
-    os.replace(tmp, final)
+    swap_in(tmp, final)
     sweep_superseded_dirs(root, upto)
     return 1
-
-
-def swap_in(tmp: str, final: str) -> None:
-    """Install the finished dir ``tmp`` as ``final``. The old ``final`` is
-    moved aside in one atomic rename (the ``.prev.tmp`` suffix keeps it
-    invisible to every reader), the new dir lands in a second rename, and
-    only then is the old copy reclaimed. The committed data is never
-    deleted before its replacement is in place: the crash window is the
-    instant between two renames, and even there the old data still exists
-    on disk as ``<final>.prev.tmp`` — the replay that caused the overwrite
-    rewrites the dir and reclaims it (single-writer posture)."""
-    prev = final + ".prev.tmp"
-    shutil.rmtree(prev, ignore_errors=True)
-    if os.path.exists(final):
-        os.replace(final, prev)
-    os.replace(tmp, final)
-    shutil.rmtree(prev, ignore_errors=True)
 
 
 # --------------------------------------------------- pointer-swap store
@@ -425,8 +483,8 @@ def commit_table_version(
         merged.write.mode("overwrite").parquet(vtmp)
     else:
         write(merged, vtmp)
-    os.replace(vtmp, vdir)
-    tmp = os.path.join(table_dir, f"._CURRENT.{batch_id}")
-    with open(tmp, "w") as fh:
-        json.dump({"version": batch_id, "dir": os.path.basename(vdir)}, fh)
-    os.replace(tmp, os.path.join(table_dir, "_CURRENT"))
+    swap_in(vtmp, vdir)
+    publish_file(
+        os.path.join(table_dir, "_CURRENT"),
+        json.dumps({"version": batch_id, "dir": os.path.basename(vdir)}),
+    )

@@ -35,9 +35,9 @@ def _read_version(spark: SparkSession, rollup_dir: str, name: str) -> DataFrame:
     """Read one version dir with an EXPLICIT schema: an empty combined
     frame written through partitionBy('day') leaves a version dir with no
     parquet part files (only _SUCCESS), and a schema-inferring read of it
-    died with UNABLE_TO_INFER_SCHEMA — killing the stream on the next
-    trigger and every read_rollup (round-13 review). With the schema
-    supplied, an empty version reads as an empty frame."""
+    dies with UNABLE_TO_INFER_SCHEMA — killing the stream on the next
+    trigger and every read_rollup. With the schema supplied, an empty
+    version reads as an empty frame."""
     return (
         spark.read.schema(ROLLUP_SCHEMA + ", day DATE")
         .parquet(os.path.join(rollup_dir, name))
@@ -58,9 +58,9 @@ def _retire_and_merge_base(
     spark: SparkSession, rollup_dir: str, batch_id: int
 ) -> DataFrame:
     """One flush's sweep + merge-base selection (module-level so the
-    replay-sweep interaction is unit-testable — the round-13 truncation
-    defect below lived exactly here). Retires unreachable version dirs,
-    then returns the frame this batch combines against."""
+    replay-sweep interaction, where a wrong keep set truncates the rollup,
+    is unit-testable). Retires unreachable version dirs, then returns the
+    frame this batch combines against."""
     ptr_dir = store.pointer_dir(rollup_dir)
     ptr = store.version_of_dir(ptr_dir) if ptr_dir is not None else None
     committed = store.committed_versions(rollup_dir)
@@ -122,8 +122,8 @@ def start_continuous_rollup(
         # deferred here from the superseding flush (a grace period of one
         # trigger) so a reader that resolved the pre-flip pointer an
         # instant earlier finishes its read before the dir vanishes; an
-        # immediate post-flip rmtree re-created the torn-read window the
-        # pointer swap exists to close (round-12 review). Per batch id the
+        # immediate post-flip rmtree would re-create the torn-read window
+        # the pointer swap exists to close. Per batch id the
         # kept dir is the POINTER's dir when the pointer references that
         # batch (attempt names recycle after sweeps, so "highest attempt"
         # alone could evict the live dir), else any one attempt — every
@@ -136,19 +136,19 @@ def start_continuous_rollup(
         # OR BELOW this batch: a replayed batch only ever combines against
         # the newest version BELOW itself, and read_rollup resolves only
         # _CURRENT, so any older version is unreachable — without this,
-        # every micro-batch left one full copy of the cumulative rollup on
-        # disk forever, O(stream age x table size) (round-13 review). Two
+        # every micro-batch would leave one full copy of the cumulative
+        # rollup on disk forever, O(stream age x table size). Two
         # batch ids cover every reachable replay (the uncommitted-
         # checkpoint batch plus its merge base); retired dirs are >= two
         # triggers stale, so the one-trigger read grace above is
         # inherently satisfied. RELATIVE to batch_id, not globally newest:
         # a fresh-checkpoint replay into a dir holding stale HIGHER
-        # versions (v9/v10 from the pre-wipe run) otherwise monopolized
-        # the keep set, the replayed batch's merge base was swept, and the
-        # recombine against an empty frame silently truncated the rollup
-        # for every later batch (round-13 review); stale future ids now
-        # retire as the replay advances. One listdir pass drives both
-        # sweeps (the per-bid re-list was quadratic in version count).
+        # versions (v9/v10 from the pre-wipe run) would otherwise
+        # monopolize the keep set, sweep the replayed batch's merge base,
+        # and recombine against an empty frame, silently truncating the
+        # rollup for every later batch; stale future ids instead retire as
+        # the replay advances. One listdir pass drives both sweeps (a
+        # per-bid re-list would be quadratic in version count).
         current = _retire_and_merge_base(spark, rollup_dir, batch_id)
         combined = (
             current.unionByName(delta)

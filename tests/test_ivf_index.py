@@ -627,38 +627,6 @@ def test_delete_casts_ids_to_the_index_id_type(spark, em, tmp_path):
     assert live.filter(F.col("vec_id").isin(3, 7, 11)).count() == 0
 
 
-def test_rebuild_retrains_from_live_rows_and_applies_deletes(spark, em, tmp_path):
-    """rebuild_ivf_index retrains on the store's own live rows: appended
-    batches fold in, deleted ids stay gone physically, stale tombstones
-    die with the old generation, and the rebuilt store's full probe
-    equals brute force over the live set."""
-    from aws_kinesis_spark.operators.ivf_index import (
-        delete_from_ivf_index,
-        rebuild_ivf_index,
-    )
-
-    idx = str(tmp_path / "ivf")
-    halves = [em.filter(F.col("vec_id") % 2 == r) for r in range(2)]
-    build_ivf_index(halves[0], idx, nlist=8)
-    update_ivf_index(halves[1], idx)
-    dead = em.filter(F.col("vec_id") % 5 == 2).select("vec_id")
-    delete_from_ivf_index(dead, idx)
-    n_live = em.count() - dead.count()
-    assert rebuild_ivf_index(spark, idx, nlist=16) == 16
-    # one fresh batch=0 generation, physically clean, no tombstones left
-    names = sorted(os.listdir(os.path.join(idx, "cells")))
-    assert names == ["batch=0"], names
-    assert not os.path.isdir(os.path.join(idx, "tombs"))
-    assert read_ivf_cells(spark, idx, include_deleted=True).count() == n_live
-    got = knn_ivf_indexed(spark, idx, _queries(em), k=10, nprobe=16)
-    exact = knn_bruteforce(em.join(dead, "vec_id", "left_anti"), _queries(em), k=10)
-    g = {(r.query_id, r.neighbor_id, r.cos_sim) for r in got.collect()}
-    e = {(r.query_id, r.neighbor_id, r.cos_sim) for r in exact.collect()}
-    assert g == e
-    # the new generation accepts deletes from a clean slate (id 0 again)
-    assert delete_from_ivf_index(em.limit(1).select("vec_id"), idx) == 0
-
-
 def test_plain_rebuild_over_tombstoned_store_clears_stale_tombstones(
     spark, em, tmp_path
 ):
@@ -738,69 +706,6 @@ def test_update_casts_drifted_types_to_the_stored_schema(spark, em, tmp_path):
     got = knn_ivf_indexed(spark, idx, _queries(em, 3), k=5, nprobe=8)
     rows = got.collect()
     assert rows and any(r.neighbor_id % 2 == 1 for r in rows)
-
-
-def test_swap_leftover_prev_dirs_are_invisible_and_reclaimed(spark, em, tmp_path):
-    """The replay swap parks the old committed dir as batch=N.prev.tmp for
-    the instant between renames; a crash there must leave (a) readers and
-    auto-numbering blind to the leftover and (b) the data recoverable,
-    and the next replay of the same batch reclaims it."""
-    idx = str(tmp_path / "ivf_swap")
-    build_ivf_index(em.filter(F.col("vec_id") % 2 == 0), idx, nlist=8)
-    inc = em.filter(F.col("vec_id") % 2 == 1)
-    update_ivf_index(inc, idx, batch_id=1)
-    cells = os.path.join(idx, "cells")
-    # simulate the crash window: committed batch=1 moved aside, new copy
-    # never landed
-    os.replace(os.path.join(cells, "batch=1"), os.path.join(cells, "batch=1.prev.tmp"))
-    before = knn_ivf_indexed(spark, idx, _queries(em, 3), k=5, nprobe=8).collect()
-    assert all(r.neighbor_id % 2 == 0 for r in before)  # leftover invisible
-    from aws_kinesis_spark.operators.ivf_index import _newest_committed_cells
-
-    assert _newest_committed_cells(cells) == 0  # auto-numbering blind to it
-    update_ivf_index(inc, idx, batch_id=1)  # the replay that caused it
-    assert not os.path.exists(os.path.join(cells, "batch=1.prev.tmp"))
-    after = knn_ivf_indexed(spark, idx, _queries(em, 3), k=5, nprobe=8).collect()
-    assert any(r.neighbor_id % 2 == 1 for r in after)
-
-
-def test_rebuild_resumes_from_durable_stage_after_crash(spark, em, tmp_path):
-    """Round-13 review: mid-rebuild the staged live rows are the ONLY copy
-    of the corpus — they must live on disk, and a re-invoked rebuild must
-    resume from them when the store is uncommitted (meta-last) instead of
-    failing on the missing meta."""
-    import json as _json
-    import shutil as _shutil
-
-    from aws_kinesis_spark.operators.ivf_index import rebuild_ivf_index
-
-    idx = str(tmp_path / "ivf_stage")
-    build_ivf_index(em, idx, nlist=8)
-    # reproduce the crash point: stage committed (manifest last), store
-    # already reset by build (meta gone, cells deleted)
-    stage = os.path.join(idx, "_rebuild_stage")
-    live = read_ivf_cells(spark, idx).select("vec_id", "embedding")
-    with open(os.path.join(idx, "_meta.json")) as f:
-        meta = _json.load(f)
-    live.write.mode("overwrite").parquet(stage)
-    with open(os.path.join(stage, "_stage_meta.json"), "w") as f:
-        _json.dump(
-            {
-                "id_col": "vec_id",
-                "vec_col": "embedding",
-                "nlist": meta["nlist"],
-                "row_schema": meta["row_schema"],
-            },
-            f,
-        )
-    os.remove(os.path.join(idx, "_meta.json"))
-    _shutil.rmtree(os.path.join(idx, "cells"))
-    n = rebuild_ivf_index(spark, idx)
-    assert n == 8
-    assert not os.path.exists(stage)  # reclaimed after the commit
-    got = knn_ivf_indexed(spark, idx, _queries(em, 3), k=5, nprobe=8)
-    brute = knn_bruteforce(em, _queries(em, 3), k=5)
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, brute.collect()))
 
 
 def test_null_embedding_fails_with_named_error(spark, em, tmp_path):

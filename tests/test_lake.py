@@ -224,8 +224,8 @@ def test_compaction_binpacks_partition_without_changing_rows(spark, tmp_path):
     after = spark.read.parquet(part_dir)
     after_rows = sorted(r.event_id for r in after.select("event_id").collect())
     assert after_rows == before_rows
-    assert not os.path.exists(part_dir + ".compact.tmp")
-    assert not os.path.exists(part_dir + ".compact.old")
+    assert not os.path.exists(part_dir + ".tmp")
+    assert not os.path.exists(part_dir + store.ASIDE)
 
 
 def test_dynamic_table_partitioning_creates_per_table_folders(spark, envelope, tmp_path):
@@ -394,12 +394,12 @@ def test_merge_upsert_fallback_matches_merge_semantics(spark, tmp_path):
 
 def test_compaction_crash_window_recovers(spark, tmp_path):
     """A crash between compaction's two renames leaves the live dir absent
-    and the data in .compact.old; recover_compaction (run on entry to the
+    and the data in its aside dir; store.recover_swap (run on entry to the
     next compaction) must restore it with zero row loss. Crash after the
-    second rename (stray trash/tmp dirs) must clean up."""
+    second rename (stray aside/tmp dirs) must clean up."""
     import shutil as sh
 
-    from aws_kinesis_spark.sources.lake import compact_lake_partition, recover_compaction
+    from aws_kinesis_spark.sources.lake import compact_lake_partition
 
     lake = str(tmp_path / "lake")
     part = "data/part=a"
@@ -408,20 +408,21 @@ def test_compaction_crash_window_recovers(spark, tmp_path):
     ev.repartition(4).write.mode("overwrite").parquet(part_dir)
     rows = sorted(r.event_id for r in spark.read.parquet(part_dir).collect())
 
-    # simulate the crash window: live dir renamed to trash, tmp half-written
-    sh.move(part_dir, part_dir + ".compact.old")
-    os.makedirs(part_dir + ".compact.tmp")
-    assert recover_compaction(lake, part) == "restored"
+    # simulate the crash window: live dir moved aside, tmp half-written
+    sh.move(part_dir, part_dir + store.ASIDE)
+    os.makedirs(part_dir + ".tmp")
+    assert store.recover_swap(part_dir) == "restored"
     assert sorted(r.event_id for r in spark.read.parquet(part_dir).collect()) == rows
-    assert not os.path.exists(part_dir + ".compact.old")
-    assert not os.path.exists(part_dir + ".compact.tmp")
+    assert not os.path.exists(part_dir + store.ASIDE)
+    assert not os.path.exists(part_dir + ".tmp")
+    assert store.recover_swap(part_dir) is None
 
-    # crash after the swap completed: trash copy remains next to live dir
-    sh.copytree(part_dir, part_dir + ".compact.old")
+    # crash after the swap completed: aside copy remains next to live dir
+    sh.copytree(part_dir, part_dir + store.ASIDE)
     n_before, n_after = compact_lake_partition(spark, lake, part, target_file_bytes=1 << 30)
     assert (n_before, n_after) == (4, 1)
     assert sorted(r.event_id for r in spark.read.parquet(part_dir).collect()) == rows
-    assert not os.path.exists(part_dir + ".compact.old")
+    assert not os.path.exists(part_dir + store.ASIDE)
 
 
 def test_lake_cost_report_accounts_for_actual_files(spark, envelope, tmp_path):
@@ -1288,10 +1289,9 @@ def test_envelope_fixture_keeps_scale_factors_apart(spark):
 
 
 def test_vacuum_heals_compaction_crash_instead_of_deleting_backup(spark, envelope, tmp_path):
-    """Round-11 review (data-loss hole): a crash in _rewrite_leaf's swap
-    window leaves the partition's ONLY copy in <leaf>.compact.old —
-    unreferenced and old-mtimed, exactly what the orphan sweep would have
-    deleted. vacuum_orphans must heal the swap first (restore the leaf),
+    """A crash in _rewrite_leaf's swap window leaves the partition's ONLY
+    copy in its aside dir — unreferenced and old-mtimed, exactly what the
+    orphan sweep would delete. vacuum_orphans must heal the swap first (restore the leaf),
     then sweep; zero rows may be lost."""
     import shutil as _sh
 
@@ -1315,7 +1315,7 @@ def test_vacuum_heals_compaction_crash_instead_of_deleting_backup(spark, envelop
             if f.endswith(".parquet")
         )
     )
-    os.replace(leaf, leaf + ".compact.old")
+    os.replace(leaf, leaf + store.ASIDE)
     stats = vacuum_orphans(lake, older_than_seconds=0)
     assert os.path.isdir(leaf), "swap not healed before the sweep"
     assert read_via_manifest(spark, lake, 0).count() == before
@@ -1323,8 +1323,8 @@ def test_vacuum_heals_compaction_crash_instead_of_deleting_backup(spark, envelop
 
 
 def test_compact_lake_skips_inflight_swap_dirs(spark, envelope, tmp_path):
-    """compact_lake must never treat a stranded .compact.old dir as a live
-    leaf (it would compact the trash copy under the wrong name): the sweep
+    """compact_lake must never treat a stranded aside dir as a live leaf
+    (it would compact the aside copy under the wrong name): the sweep
     heals the crash first and the healed leaf compacts under its own name."""
     from aws_kinesis_spark.sources.lake import (
         compact_lake,
@@ -1346,10 +1346,10 @@ def test_compact_lake_skips_inflight_swap_dirs(spark, envelope, tmp_path):
             if f.endswith(".parquet")
         )
     )
-    os.replace(leaf, leaf + ".compact.old")
+    os.replace(leaf, leaf + store.ASIDE)
     results = compact_lake(spark, lake, min_files=2)
-    assert not any(".compact." in sub for sub, _b, _a in results)
-    assert not os.path.exists(leaf + ".compact.old")
+    assert not any(".tmp" in sub for sub, _b, _a in results)
+    assert not os.path.exists(leaf + store.ASIDE)
     assert read_via_manifest(spark, lake, 0).count() == before
 
 
@@ -1414,49 +1414,10 @@ def test_read_incremental_tolerates_dropped_batches_but_not_staged(spark, envelo
     assert read_incremental(spark, lake, after_batch=2, upto_batch=3).count() == 5
 
 
-def test_delete_vector_rerun_and_swap_crash_keep_vector_committed(
-    spark, envelope, tmp_path
-):
-    """Round-13 review: a replayed write_delete_vector must keep the
-    committed vector visible for the whole rewrite (two-rename swap, not
-    rmtree-then-write), and the between-renames crash state (.old present,
-    final missing) must still serve the committed keys."""
-    from aws_kinesis_spark.sources.lake import (
-        read_with_deletes,
-        run_lake_batch,
-        write_delete_vector,
-    )
-
-    lake = str(tmp_path / "lake")
-    run_lake_batch(envelope, lake, batch_id=0, raw_backup=False)
-    all_ids = {
-        r.id
-        for r in spark.read.parquet(os.path.join(lake, "data")).select("id").collect()
-    }
-    doomed = sorted(all_ids)[::7]
-    keys = spark.createDataFrame([(k,) for k in doomed], "id long")
-    write_delete_vector(keys, lake, delete_id=1, key_col="id")
-    want = all_ids - set(doomed)
-    # idempotent replay: still committed, same answer
-    write_delete_vector(keys, lake, delete_id=1, key_col="id")
-    got = {r.id for r in read_with_deletes(spark, lake, key_col="id").select("id").collect()}
-    assert got == want
-    # simulate the between-renames crash: committed copy lives only in .old
-    final = os.path.join(lake, "_deletes", "delete-0000000001")
-    os.replace(final, final + ".old")
-    got = {r.id for r in read_with_deletes(spark, lake, key_col="id").select("id").collect()}
-    assert got == want
-    # ...and a shadowing final takes precedence again after the replay
-    write_delete_vector(keys, lake, delete_id=1, key_col="id")
-    got = {r.id for r in read_with_deletes(spark, lake, key_col="id").select("id").collect()}
-    assert got == want
-
-
 def test_materialize_deletes_heals_stranded_swap_first(spark, envelope, tmp_path):
-    """Round-13 review: a leaf stranded in .compact.old by a swap-window
-    crash must be healed BEFORE the delete-materialization walk — not
-    rewritten under the trash name while manifests point at the missing
-    live paths."""
+    """A leaf stranded in its aside dir by a swap-window crash must be
+    healed BEFORE the delete-materialization walk — not rewritten under the
+    aside name while manifests point at the missing live paths."""
     from aws_kinesis_spark.sources.lake import (
         materialize_deletes,
         read_with_deletes,
@@ -1480,12 +1441,11 @@ def test_materialize_deletes_heals_stranded_swap_first(spark, envelope, tmp_path
     leaves = [dp for dp, ds, fs in os.walk(data_dir)
               if not ds and any(f.endswith(".parquet") for f in fs)]
     victim = leaves[0]
-    os.replace(victim, victim + ".compact.old")
+    os.replace(victim, victim + store.ASIDE)
     n = materialize_deletes(spark, lake, key_col="id")
     assert n > 0
-    # no trash dirs remain anywhere; the healed leaf was rewritten in place
-    assert not [dp for dp, _, _ in os.walk(data_dir)
-                if dp.endswith((".compact.old", ".compact.tmp"))]
+    # no aside dirs remain anywhere; the healed leaf was rewritten in place
+    assert not [dp for dp, _, _ in os.walk(data_dir) if dp.endswith(".tmp")]
     folded = {r.id for r in spark.read.parquet(data_dir).select("id").collect()}
     assert folded == all_ids - set(doomed)
     # manifests stayed truthful through heal + rewrite
@@ -1494,9 +1454,8 @@ def test_materialize_deletes_heals_stranded_swap_first(spark, envelope, tmp_path
 
 
 def test_expire_partitions_reaps_stranded_swap_trash(spark, envelope, tmp_path):
-    """Round-13 review: retention must heal stranded compaction swaps
-    first — expired rows must not survive inside a .compact.old dir the
-    hour= regex never matches."""
+    """Retention must heal stranded leaf swaps first — expired rows must
+    not survive inside an aside dir the hour= regex never matches."""
     import datetime as dt
 
     from aws_kinesis_spark.sources.lake import expire_partitions, run_lake_batch
@@ -1507,7 +1466,7 @@ def test_expire_partitions_reaps_stranded_swap_trash(spark, envelope, tmp_path):
     leaves = [dp for dp, ds, fs in os.walk(data_dir)
               if not ds and any(f.endswith(".parquet") for f in fs)]
     victim = leaves[0]
-    os.replace(victim, victim + ".compact.old")
+    os.replace(victim, victim + store.ASIDE)
     # everything is in the past relative to this horizon
     stats = expire_partitions(lake, retention_hours=1,
                               now=dt.datetime(2099, 1, 1))

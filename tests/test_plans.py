@@ -724,66 +724,25 @@ def test_containment_join_probes_prefix_only(spark):
 
 
 def test_rename_sites_enumerated_against_s3_translation_table():
-    """SCALE.md §7 invariant, enforced (VERDICT r8 #8): every os.replace /
-    os.rename in non-test source must be one of the enumerated commit
-    sites whose rename→conditional-PUT translation the table documents.
-    A new rename site is an object-store commit-protocol review (and a
-    SCALE.md §7 row), not a silent merge."""
+    """SCALE.md §7 invariant, enforced: every os.replace / os.rename in
+    non-test source is one of the commit primitives whose
+    rename→conditional-PUT translation the table documents, and every
+    temp file comes from the one publish primitive. A new rename site is
+    an object-store commit-protocol review (and a SCALE.md §7 row), not a
+    silent merge."""
     import ast
     from pathlib import Path
 
     pkg = Path(__file__).resolve().parent.parent / "aws_kinesis_spark"
     # (module, enclosing function) -> SCALE.md §7 row that covers it
     documented = {
-        ("sources/lake.py", "write_manifest"),          # manifest-last PUT
-        ("sources/lake.py", "stage_lake_batch"),        # WAP stage move
-        ("sources/lake.py", "publish_staged_batch"),    # WAP publish flip
-        ("sources/lake.py", "_rewrite_leaf"),           # two-rename leaf swap
-                                                        # (also the
-                                                        # materialize_deletes
-                                                        # worker body since the
-                                                        # round-13 reuse)
-        ("sources/lake.py", "recover_compaction"),      # swap-crash undo
-        ("sources/lake.py", "expire_partitions"),       # retention leaf drop
-        ("sources/lake.py", "_remap_partitions_in_manifests"),  # manifest PUT
-        ("sources/lake.py", "write_delete_vector"),     # DV completion marker
-        ("sources/lake.py", "export_symlink_manifests"),  # per-partition
-                                                        # symlink manifest PUT
-        ("sources/lake.py", "build_zone_maps"),         # stats-table marker
-        ("sources/lake.py", "update_zone_maps"),        # stats-table marker
-                                                        # (incremental swap)
-        ("operators/ivf_index.py", "_write_centroids"),  # centroid-table
-                                                        # swap (stats-table
-                                                        # marker discipline,
-                                                        # pyarrow-written)
-        ("store.py", "swap_in"),                        # THE atomic install
-                                                        # body behind cell-
-                                                        # batch appends AND
-                                                        # tombstone appends
-                                                        # (SCALE.md §7's
-                                                        # _write_cells_batch
-                                                        # row documents it)
-        ("operators/ivf_index.py", "build_ivf_index"),  # meta-last PUT flips
-                                                        # the index readable
-        ("operators/ivf_index.py", "compact_ivf_index"),  # tombstone-applying
-                                                        # fold commit (same
-                                                        # compact=<upto> key
-                                                        # PUT as
-                                                        # compact_store)
-        ("operators/ivf_index.py", "_bump_tomb_hwm"),   # cleared-id
-                                                        # high-water-mark
-                                                        # swap (stats-table
-                                                        # marker discipline)
-        ("store.py", "commit_table_version"),           # warehouse/SCD2/
-                                                        # rollup pointer-swap
-                                                        # commit (fresh
-                                                        # version dir +
-                                                        # _CURRENT CAS)
-        ("store.py", "compact_store"),                  # batch-dir key PUT
-                                                        # (dedup-index and
-                                                        # IVF cells folds)
+        ("store.py", "publish_file"),                # small-object PUT
+        ("store.py", "swap_in"),                     # dir install
+        ("store.py", "recover_swap"),                # swap-crash undo
+        ("sources/lake.py", "publish_staged_batch"),  # WAP publish flip
     }
     found = set()
+    mkstemp_sites = set()
 
     def walk(node, fn, rel):
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
@@ -792,11 +751,13 @@ def test_rename_sites_enumerated_against_s3_translation_table():
             if (
                 isinstance(child, ast.Call)
                 and isinstance(child.func, ast.Attribute)
-                and child.func.attr in ("replace", "rename")
                 and isinstance(child.func.value, ast.Name)
-                and child.func.value.id == "os"
             ):
-                found.add((rel, fn))
+                mod, attr = child.func.value.id, child.func.attr
+                if mod == "os" and attr in ("replace", "rename"):
+                    found.add((rel, fn))
+                if mod == "tempfile" and attr == "mkstemp":
+                    mkstemp_sites.add(rel)
             walk(child, fn, rel)
 
     for py in pkg.rglob("*.py"):
@@ -806,6 +767,7 @@ def test_rename_sites_enumerated_against_s3_translation_table():
     stale = documented - found
     assert not undocumented, f"rename sites missing a SCALE.md §7 row: {undocumented}"
     assert not stale, f"SCALE.md §7 rows with no surviving rename site: {stale}"
+    assert mkstemp_sites == {"store.py"}, mkstemp_sites
 
 
 def test_store_layering_has_no_cross_module_private_imports():
