@@ -20,6 +20,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from aws_kinesis_spark.sources.lake import iter_manifests
+
 
 @dataclass(frozen=True)
 class CostRates:
@@ -76,47 +78,34 @@ def lake_cost_report(
     cost snapshot computed from what actually landed (files, bytes,
     records), not estimates. Driver-side work is O(manifests); the math is
     a tiny local DataFrame so it joins/unions freely with query results."""
-    import json
+    import pyarrow.parquet as pq
 
-    manifest_dir = os.path.join(lake_dir, "_manifests")
     rows = []
-    if os.path.isdir(manifest_dir):
-        for name in sorted(os.listdir(manifest_dir)):
-            if not name.startswith("manifest-") or not name.endswith(".json"):
-                continue
-            with open(os.path.join(manifest_dir, name)) as fh:
-                m = json.load(fh)
-            n_records = m["recordCount"]
-            n_bytes = m["totalBytes"]
-            n_files = len(m["entries"])
-            if n_records is not None and n_records < 0:
-                # retention/delete rewrites reset recordCount to -1
-                # ("unknown") — feeding that into the rate math produced
-                # NEGATIVE ingest/transform dollars (round-12 review).
-                # Recount from the surviving entries' parquet footers:
-                # O(files) driver metadata, the same planner-grade reads
-                # run_lake_batch uses for its own count. The recount
-                # re-derives BYTES and FILE COUNT from the same surviving
-                # set: keeping the manifest's stale totalBytes priced
-                # storage/retrieval on files the recount itself just
-                # observed dangling — dollars internally inconsistent with
-                # the record-based terms in the same row (round-13 review).
-                import pyarrow.parquet as pq
-
-                n_records, n_bytes, n_files = 0, 0, 0
-                for e in m["entries"]:
-                    try:
-                        n_records += pq.ParquetFile(e["url"]).metadata.num_rows
-                        n_bytes += os.path.getsize(e["url"])
-                        n_files += 1
-                    except (OSError, ValueError):
-                        # dangling OR corrupt entry: count what exists.
-                        # pyarrow's ArrowInvalid ('magic bytes not found' on
-                        # a truncated crash survivor — exactly the lakes
-                        # where -1 rewrites happen) subclasses ValueError,
-                        # not OSError (round-12 review)
-                        pass
-            rows.append((m["batchId"], n_records, n_bytes, n_files))
+    for _path, m in iter_manifests(lake_dir):
+        n_records = m["recordCount"]
+        n_bytes = m["totalBytes"]
+        n_files = len(m["entries"])
+        if n_records is not None and n_records < 0:
+            # retention/delete rewrites reset recordCount to -1 ("unknown"),
+            # which the rate math would price as NEGATIVE ingest/transform
+            # dollars. Recount from the surviving entries' parquet footers
+            # (O(files) driver metadata), and re-derive bytes and file
+            # count from the same surviving set, so storage/retrieval are
+            # priced on the files the records were counted from.
+            n_records, n_bytes, n_files = 0, 0, 0
+            for e in m["entries"]:
+                try:
+                    n_records += pq.ParquetFile(e["url"]).metadata.num_rows
+                    n_bytes += os.path.getsize(e["url"])
+                    n_files += 1
+                except (OSError, ValueError):
+                    # a dangling or corrupt entry is left out of the
+                    # recount: a report prices what exists. pyarrow's
+                    # ArrowInvalid ('magic bytes not found' on a truncated
+                    # crash survivor, exactly the lakes where -1 rewrites
+                    # happen) subclasses ValueError, not OSError.
+                    pass
+        rows.append((m["batchId"], n_records, n_bytes, n_files))
     base = spark.createDataFrame(
         rows, "batch_id LONG, n_records LONG, n_bytes LONG, n_files LONG"
     )

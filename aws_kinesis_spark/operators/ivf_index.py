@@ -226,9 +226,13 @@ def update_ivf_index(
     # _write_cells_batch's rename could still supersede the in-flight
     # append. The store's posture is one maintainer process (same as the
     # dedup-ingest index); concurrent writers need external coordination.
+    # A swap cut between its renames leaves batch N only in its aside dir:
+    # heal it first, or the numbering would hand out N again and the swap
+    # would reclaim the aside, losing batch N's rows for good.
+    store.recover_swaps(cells_dir)
     newest_compact = store.newest_dir_num(cells_dir, ("compact",))
     if batch_id is None:
-        batch_id = store.newest_dir_num(cells_dir, ("batch", "compact")) + 1
+        batch_id = _newest_committed_cells(cells_dir) + 1
     elif batch_id <= newest_compact:
         raise ValueError(
             f"batch_id={batch_id} is at or below the newest compaction "
@@ -321,7 +325,12 @@ def delete_from_ivf_index(
     appends). Returns the tombstone batch id."""
     meta = _load_meta(index_dir)
     id_col = meta["id_col"]
-    horizon = _newest_committed_cells(os.path.join(index_dir, _CELLS))
+    # heal a stranded append swap first, as update_ivf_index does: a
+    # horizon blind to the aside batch would leave its rows undeleted once
+    # it is restored
+    cells_dir = os.path.join(index_dir, _CELLS)
+    store.recover_swaps(cells_dir)
+    horizon = _newest_committed_cells(cells_dir)
     if horizon < 0:
         raise ValueError(f"IVF index {index_dir} has no committed cells")
     tombs_dir = os.path.join(index_dir, _TOMBS)

@@ -6,6 +6,13 @@ backup. The manifest is the commit record: "If PUT #1 fails -> no manifest ->
 zero partial data" (README.md:429-430); readers consume the manifest, never
 the folder (README.md:429, 453-455).
 
+One flush lifecycle, two write shapes behind it: write_lake_batch (a
+clustered Spark write) and write_lake_batch_on_driver (pyarrow on the
+driver, for a batch of known input bytes under store.DRIVER_MAX_BYTES).
+Both land the same ``data/``, ``errors/`` layout; every flush
+(run_lake_batch, stage_lake_batch, the streaming lake path) is
+purge_batch -> one shape -> write_manifest.
+
 Scale notes: the only shuffle is the repartition by partition columns before
 the write (avoids small files — one task per partition dir); everything else
 is narrow. File listings happen on the driver but are O(files-per-batch),
@@ -22,15 +29,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from aws_kinesis_spark import store
 from aws_kinesis_spark.sources.envelope import decode_envelope
-from aws_kinesis_spark.store import (
-    ASIDE,
-    list_parquet_files,
-    parquet_store_schema,
-    publish_file,
-    recover_swap,
-    swap_in,
-)
 
 PARTITION_COLS = ["year", "month", "day", "hour"]
 # what the DLQ (errors/) keeps of a corrupt record: the raw envelope
@@ -65,6 +65,19 @@ def split_errors(decoded: DataFrame, corrupt_col: str = "_corrupt") -> tuple[Dat
     return ok, bad
 
 
+def _batch_dir(lake_dir: str, sub: str, batch_id: int) -> str:
+    """A batch's prefix in one of the lake's batch-scoped sinks: ``data``
+    (the hive-partitioned lake), ``errors`` (the DLQ) or ``raw`` (the
+    backup)."""
+    return os.path.join(lake_dir, sub, f"batch={batch_id}")
+
+
+def _manifest_path(lake_dir: str, batch_id: int, subdir: str = "_manifests") -> str:
+    """A batch's manifest file: published under ``_manifests/``, parked for
+    write-audit-publish under ``_staged/``."""
+    return os.path.join(lake_dir, subdir, f"manifest-{batch_id:010d}.json")
+
+
 def purge_batch(lake_dir: str, batch_id: int) -> None:
     """Make a batch replay idempotent across partition-value changes.
 
@@ -82,15 +95,12 @@ def purge_batch(lake_dir: str, batch_id: int) -> None:
     the batch reads as not-yet-committed until write_manifest republishes
     it — the same visibility it had before its first commit.
     """
-    stale = os.path.join(lake_dir, "_manifests", f"manifest-{batch_id:010d}.json")
     try:
-        os.remove(stale)
+        os.remove(_manifest_path(lake_dir, batch_id))
     except FileNotFoundError:
         pass
     for sub in ("data", "errors", "raw"):
-        shutil.rmtree(
-            os.path.join(lake_dir, sub, f"batch={batch_id}"), ignore_errors=True
-        )
+        shutil.rmtree(_batch_dir(lake_dir, sub, batch_id), ignore_errors=True)
 
 
 def write_manifest(
@@ -113,12 +123,12 @@ def write_manifest(
         "recordCount": n_records,
         "totalBytes": sum(os.path.getsize(f) for f in files),
     }
-    final = os.path.join(lake_dir, subdir, f"manifest-{batch_id:010d}.json")
-    publish_file(final, json.dumps(payload, indent=1))
+    final = _manifest_path(lake_dir, batch_id, subdir)
+    store.publish_file(final, json.dumps(payload, indent=1))
     return final
 
 
-def _manifests(lake_dir: str, subdirs=("_manifests",), newest_first=False):
+def iter_manifests(lake_dir: str, subdirs=("_manifests",), newest_first=False):
     """Yield (path, payload) for every committed ``manifest-*.json`` under
     ``subdirs`` of the lake, in batch order per subdir. In-flight publishes
     are dot-prefixed temps and never match."""
@@ -133,7 +143,7 @@ def _manifests(lake_dir: str, subdirs=("_manifests",), newest_first=False):
 
 
 def read_manifest(lake_dir: str, batch_id: int) -> dict:
-    with open(os.path.join(lake_dir, "_manifests", f"manifest-{batch_id:010d}.json")) as fh:
+    with open(_manifest_path(lake_dir, batch_id)) as fh:
         return json.load(fh)
 
 
@@ -155,17 +165,31 @@ class FlushStats:
     writer: str | None = None
 
 
-def run_lake_batch(
+def _footer_rows(files: list[str]) -> int:
+    """Rows in parquet ``files``, from their footers on the driver: the
+    row-group metadata the writer just produced, O(own files) reads and no
+    Spark job."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+
+
+def write_lake_batch(
     env: DataFrame,
     lake_dir: str,
-    batch_id: int = 0,
+    batch_id: int,
     raw_backup: bool = True,
     dynamic_tables: bool = False,
     files_per_partition: int = 1,
-    manifest_subdir: str = "_manifests",
-) -> FlushStats:
-    """One buffer flush through the lake path (README.md:266-303):
-    decode -> DLQ split -> partitioned snappy parquet -> manifest -> backup.
+) -> tuple[list[str], int, int]:
+    """The Spark shape of one lake flush: decode -> DLQ split -> one
+    clustered, hive-partitioned snappy parquet write under
+    ``data/batch=<id>/`` -> the corrupt records under ``errors/batch=<id>/``
+    and, with ``raw_backup``, the unparsed envelope under ``raw/batch=<id>/``.
+    Returns the batch's data files, their footer row count and the corrupt
+    record count. It commits nothing: the caller purges the batch first
+    (purge_batch) and writes its manifest after (write_manifest), as
+    run_lake_batch, stage_lake_batch and start_lake_path's flush do.
 
     ``dynamic_tables=True`` enables the reference's dynamic partitioning
     (README.md:157, 434): the table name derived from each record's
@@ -182,17 +206,10 @@ def run_lake_batch(
     N tasks per partition dir at the cost of N files there (Firehose
     itself emits multiple objects per prefix per flush when throughput
     demands; compaction re-packs later). Values land deterministically
-    (hash of the sequence number), so replay stays idempotent.
+    (hash of the sequence number), so replay stays idempotent."""
+    from concurrent.futures import ThreadPoolExecutor
 
-    Idempotent per batch_id: the batch-scoped prefixes are purged before the
-    rewrite (see purge_batch — partition values derive from processing time,
-    so replay in a later hour would otherwise strand the first attempt's
-    files), then data lands under data/batch=<id>/ subpartitions. A retried
-    flush produces zero duplicates (README.md:204).
-    """
     spark = env.sparkSession
-    purge_batch(lake_dir, batch_id)
-
     # Spread the DECODE, not just the write: the partition columns derive
     # from the decoded rows, so the key-computing map stage runs on the
     # INPUT's split layout — and a buffered flush usually arrives as ONE
@@ -209,7 +226,7 @@ def run_lake_batch(
     # covers records, and a backup should mirror arrival shape). Gated on
     # files_per_partition > 1 — the caller's declaration that this flush
     # is big enough to fan out (a KB-scale trickle batch should not pin
-    # defaultParallelism near-empty tasks, the g35 lesson).
+    # defaultParallelism near-empty tasks).
     spread = (
         env.repartition(spark.sparkContext.defaultParallelism)
         if files_per_partition > 1
@@ -230,8 +247,6 @@ def run_lake_batch(
     if dynamic_tables:
         ok = ok.withColumn("table", table_from_key())
         part_cols = ["table", *part_cols]
-
-    data_dir = os.path.join(lake_dir, "data")
     if files_per_partition > 1:
         salt = F.pmod(F.xxhash64("sequence_number"), F.lit(files_per_partition))
         shaped = ok.repartition(*part_cols, salt)
@@ -243,14 +258,12 @@ def run_lake_batch(
     # downstream ordering constraint except the manifest-last commit —
     # overlap them with the data write as concurrent Spark jobs instead
     # of paying three serial passes over the batch
-    from concurrent.futures import ThreadPoolExecutor
-
     try:
         with ThreadPoolExecutor(max_workers=2) as pool:
             raw_f = (
                 pool.submit(
                     lambda: env.write.mode("overwrite").parquet(
-                        os.path.join(lake_dir, "raw", f"batch={batch_id}")
+                        _batch_dir(lake_dir, "raw", batch_id)
                     )
                 )
                 if raw_backup
@@ -263,24 +276,16 @@ def run_lake_batch(
                 # dynamic overwrite as a PER-WRITE option, not session
                 # conf: a session-conf write from this flush would race
                 # any job planning concurrently on a pool thread (DV
-                # commits overlap this very write in a19), and STATIC
-                # overwrite here would truncate every other batch's data
+                # commits overlap this very write), and STATIC overwrite
+                # here would truncate every other batch's data
                 .option("partitionOverwriteMode", "dynamic")
                 .option("compression", "snappy")
-                .parquet(data_dir)
+                .parquet(os.path.join(lake_dir, "data"))
             )
-            batch_root = os.path.join(data_dir, f"batch={batch_id}")
-            files = list_parquet_files(batch_root)
-            # an all-error or empty flush writes no data files: commit an empty
-            # manifest (the batch HAPPENED, with zero ok records) instead of
-            # crashing on the missing batch dir. The count comes from the
-            # written files' parquet FOOTERS (row-group metadata the committer
-            # just produced) — O(own files) driver reads, the same planner
-            # metadata as the listing above, one whole Spark job cheaper
-            import pyarrow.parquet as pq
-
-            n_ok = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-
+            # an all-error or empty flush writes no data files, and the
+            # batch commits with zero ok records
+            files = store.list_parquet_files(_batch_dir(lake_dir, "data", batch_id))
+            n_ok = _footer_rows(files)
             # DLQ accounting by subtraction: ok ∪ bad partitions the input
             # exactly (split_errors is one boolean filter pair), and both
             # counts are metadata-cheap — counting `bad` directly would cost
@@ -290,7 +295,7 @@ def run_lake_batch(
                 (
                     bad.select(*DLQ_COLS)
                     .write.mode("overwrite")
-                    .parquet(os.path.join(lake_dir, "errors", f"batch={batch_id}"))
+                    .parquet(_batch_dir(lake_dir, "errors", batch_id))
                 )
             if raw_f is not None:
                 raw_f.result()  # manifest-last: backup is durable before commit
@@ -299,7 +304,85 @@ def run_lake_batch(
         # long-lived caller (streaming foreachBatch) never accumulates
         # per-flush caches, crash or no crash
         decoded.unpersist()
-    manifest = write_manifest(lake_dir, batch_id, files, n_ok, subdir=manifest_subdir)
+    return files, n_ok, n_error
+
+
+def _lake_batch_for_driver(batch_df: DataFrame) -> DataFrame:
+    """The lake flush's driver-shape frame: the decoded batch with its hour
+    partition values, as one Spark action collects it. The raw ``data``
+    column rides only on corrupt rows (the DLQ keeps it; the lake drops
+    it), which halves the collected table: the Arrow table measures 3.5-4.5x
+    the batch's compressed input bytes on the CDC envelope (sf0.001 and
+    sf0.01 orders), against 6-8x with ``data`` on every row."""
+    decoded = with_partition_cols(decode_envelope(batch_df))
+    return decoded.withColumn("data", F.when(F.col("_corrupt"), F.col("data")))
+
+
+def write_lake_batch_on_driver(
+    batch_df: DataFrame, lake_dir: str, batch_id: int
+) -> tuple[list[str], int, int]:
+    """The driver shape of one lake flush, for a batch whose input bytes
+    are known and at most ``store.DRIVER_MAX_BYTES``: one Spark action
+    collects the decoded batch with its partition values as Arrow (decode,
+    ``processed_at`` and the hour values stay Catalyst expressions,
+    evaluated once). The driver splits ok and corrupt rows, writes the ok
+    rows one file per hour leaf (store.write_hive_arrow), the corrupt rows
+    as one DLQ file. It lands the leaves, file schemas and DLQ rows
+    write_lake_batch lands, returns what it returns, and likewise commits
+    nothing.
+
+    Driver memory holds the decoded table (3.5-4.5x the compressed input
+    bytes, see _lake_batch_for_driver) and, when the batch has corrupt
+    rows, a filtered copy of its ok rows: under the 32 MB gate the peak
+    stays below ~300 MB."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    tbl = _lake_batch_for_driver(batch_df).toArrow()
+    corrupt = tbl.column("_corrupt")
+    n_bad = pc.sum(corrupt).as_py() or 0
+    ok = tbl.filter(pc.invert(corrupt)) if n_bad else tbl
+    ok = ok.drop_columns(["_corrupt", "data"])
+    batch_root = _batch_dir(lake_dir, "data", batch_id)
+    if ok.num_rows:
+        store.write_hive_arrow(ok, batch_root, PARTITION_COLS)
+    if n_bad:
+        bad = tbl.filter(corrupt)
+        err_dir = _batch_dir(lake_dir, "errors", batch_id)
+        os.makedirs(err_dir, exist_ok=True)
+        pq.write_table(
+            bad.select(DLQ_COLS),
+            os.path.join(err_dir, "part-0.parquet"),
+            compression="snappy",
+        )
+    files = store.list_parquet_files(batch_root)
+    return files, _footer_rows(files), n_bad
+
+
+def run_lake_batch(
+    env: DataFrame,
+    lake_dir: str,
+    batch_id: int = 0,
+    raw_backup: bool = True,
+    dynamic_tables: bool = False,
+    files_per_partition: int = 1,
+) -> FlushStats:
+    """One buffer flush through the lake path (README.md:266-303):
+    purge_batch, then write_lake_batch (decode -> DLQ split -> partitioned
+    snappy parquet -> backup; its options are write_lake_batch's), then
+    the manifest.
+
+    Idempotent per batch_id: the batch-scoped prefixes are purged before the
+    rewrite (see purge_batch — partition values derive from processing time,
+    so replay in a later hour would otherwise strand the first attempt's
+    files), then data lands under data/batch=<id>/ subpartitions. A retried
+    flush produces zero duplicates (README.md:204).
+    """
+    purge_batch(lake_dir, batch_id)
+    files, n_ok, n_error = write_lake_batch(
+        env, lake_dir, batch_id, raw_backup, dynamic_tables, files_per_partition
+    )
+    manifest = write_manifest(lake_dir, batch_id, files, n_ok)
     return FlushStats(
         batch_id=batch_id,
         n_ok=n_ok,
@@ -315,14 +398,14 @@ def _empty_like_lake(spark: SparkSession, lake_dir: str) -> DataFrame:
     non-empty committed manifest. An all-empty-batch range is a legitimate
     incremental outcome (an idle producer), not an error — but a table that
     has never committed a single file has no schema to offer."""
-    for _path, payload in _manifests(lake_dir, newest_first=True):
+    for _path, payload in iter_manifests(lake_dir, newest_first=True):
         entries = [e["url"] for e in payload["entries"]]
         if entries:
             # one footer read, not O(files): a batch is one flush of one
             # DataFrame, so every entry in a manifest shares one schema
             # (cross-batch evolution is irrelevant — the NEWEST committed
             # schema is exactly what an empty delta should carry)
-            schema = parquet_store_schema(entries[0])
+            schema = store.parquet_store_schema(entries[0])
             return spark.read.schema(schema).parquet(entries[0]).limit(0)
     raise ValueError(
         f"lake {lake_dir} has no non-empty committed batch to take a schema from"
@@ -338,7 +421,7 @@ def read_via_manifest(spark: SparkSession, lake_dir: str, batch_id: int) -> Data
     entries = [e["url"] for e in read_manifest(lake_dir, batch_id)["entries"]]
     if not entries:
         return _empty_like_lake(spark, lake_dir)
-    return spark.read.schema(parquet_store_schema(entries[0])).parquet(*entries)
+    return spark.read.schema(store.parquet_store_schema(entries[0])).parquet(*entries)
 
 
 def read_incremental(
@@ -368,10 +451,7 @@ def read_incremental(
         try:
             files.extend(e["url"] for e in read_manifest(lake_dir, b)["entries"])
         except FileNotFoundError:
-            staged = os.path.join(
-                lake_dir, "_staged", f"manifest-{b:010d}.json"
-            )
-            if os.path.exists(staged):
+            if os.path.exists(_manifest_path(lake_dir, b, "_staged")):
                 raise RuntimeError(
                     f"read_incremental: batch {b} is staged but unpublished — "
                     "a consistent delta through it does not exist yet "
@@ -380,7 +460,7 @@ def read_incremental(
             continue  # dropped stage: the batch never existed to readers
     if not files:
         return _empty_like_lake(spark, lake_dir)
-    return spark.read.schema(parquet_store_schema(files[0])).parquet(*files)
+    return spark.read.schema(store.parquet_store_schema(files[0])).parquet(*files)
 
 
 def register_lake_table(spark: SparkSession, name: str, lake_dir: str) -> None:
@@ -390,7 +470,7 @@ def register_lake_table(spark: SparkSession, name: str, lake_dir: str) -> None:
     one footer (parquet_store_schema), so registering launches no Spark
     job; Spark infers it only when no footer can answer."""
     data = os.path.join(lake_dir, "data")
-    schema = parquet_store_schema(data)
+    schema = store.parquet_store_schema(data)
     reader = spark.read if schema is None else spark.read.schema(schema)
     reader.parquet(data).createOrReplaceTempView(name)
 
@@ -431,18 +511,18 @@ def vacuum_orphans(lake_dir: str, older_than_seconds: float = 3600.0) -> VacuumS
     # partition's only copy lives in its aside dir — unreferenced by any
     # manifest and old-mtimed, i.e. exactly what the orphan sweep below
     # would otherwise delete
-    _heal_compaction_crashes(lake_dir)
+    data_dir = os.path.join(lake_dir, "data")
+    store.recover_swaps(data_dir)
     cutoff = time.time() - older_than_seconds
     # staged (write-audit-publish) manifests count as references: a batch
     # awaiting its audit is pending, not orphaned
     referenced = {
         os.path.realpath(e["url"])
-        for _path, payload in _manifests(lake_dir, ("_manifests", "_staged"))
+        for _path, payload in iter_manifests(lake_dir, ("_manifests", "_staged"))
         for e in payload["entries"]
     }
-    data_dir = os.path.join(lake_dir, "data")
     n_orphans = n_bytes = n_kept = 0
-    for f in list_parquet_files(data_dir):
+    for f in store.list_parquet_files(data_dir):
         if os.path.realpath(f) in referenced:
             n_kept += 1
             continue
@@ -489,13 +569,12 @@ def expire_partitions(
     import datetime as dt
     import re
 
-    # heal stranded leaf swaps FIRST (the caller contract named in
-    # _heal_compaction_crashes' docstring): an expired hour surviving in
-    # its aside dir would dodge the hour= regex and outlive its retention
-    # window on disk
-    _heal_compaction_crashes(lake_dir)
-    horizon = now - dt.timedelta(hours=retention_hours)
+    # heal stranded leaf swaps FIRST (store.recover_swaps): an expired
+    # hour surviving in its aside dir would dodge the hour= regex and
+    # outlive its retention window on disk
     data_dir = os.path.join(lake_dir, "data")
+    store.recover_swaps(data_dir)
+    horizon = now - dt.timedelta(hours=retention_hours)
     pat = re.compile(r"year=(\d+)/month=(\d+)/day=(\d+)/hour=(\d+)$")
     expired_dirs: list[str] = []
     n_files = n_bytes = 0
@@ -526,7 +605,7 @@ def expire_partitions(
     if not expired_dirs:
         return ExpiryStats(0, 0, 0, 0)
     expired_set = {os.path.realpath(d) for d in expired_dirs}
-    manifests = list(_manifests(lake_dir, ("_manifests", "_staged")))
+    manifests = list(iter_manifests(lake_dir, ("_manifests", "_staged")))
     entry_dirs = {os.path.dirname(e["url"]) for _p, m in manifests for e in m["entries"]}
     entry_dir_real = {d: os.path.realpath(d) for d in entry_dirs}
     for d in expired_dirs:
@@ -554,7 +633,7 @@ def expire_partitions(
         payload["entries"] = kept
         payload["recordCount"] = -1
         payload["totalBytes"] = sum(os.path.getsize(e["url"]) for e in kept)
-        publish_file(path, json.dumps(payload, indent=1))
+        store.publish_file(path, json.dumps(payload, indent=1))
         n_rewritten += 1
     return ExpiryStats(
         n_partitions=len(expired_dirs),
@@ -562,24 +641,6 @@ def expire_partitions(
         n_bytes=n_bytes,
         n_manifests_rewritten=n_rewritten,
     )
-
-
-def _heal_compaction_crashes(lake_dir: str) -> int:
-    """Run store.recover_swap for every leaf under data/ with a stranded
-    aside (``<leaf>.prev.tmp``) or rewrite (``<leaf>.tmp``) sibling.
-    Maintenance passes (vacuum, whole-lake compaction, delete
-    materialization, retention) call this FIRST: a crash in _rewrite_leaf's
-    swap window leaves the partition's ONLY copy in the aside dir — a walk
-    that misreads that dir as a live leaf would rewrite it under the wrong
-    name, and a vacuum would delete the unreferenced old-mtime files:
-    unrecoverable loss. Returns leaves healed."""
-    healed = 0
-    for dirpath, dirs, _files in os.walk(os.path.join(lake_dir, "data")):
-        for d in [n for n in dirs if n.endswith(".tmp")]:
-            leaf = d[: -len(ASIDE)] if d.endswith(ASIDE) else d[: -len(".tmp")]
-            healed += recover_swap(os.path.join(dirpath, leaf)) is not None
-            dirs.remove(d)  # healed away — don't descend
-    return healed
 
 
 def compact_lake(
@@ -602,8 +663,8 @@ def compact_lake(
     leaf) and zone maps invalidated once at the end."""
     from concurrent.futures import ThreadPoolExecutor
 
-    _heal_compaction_crashes(lake_dir)  # a stranded swap must not walk as a leaf
     data_dir = os.path.join(lake_dir, "data")
+    store.recover_swaps(data_dir)  # a stranded swap must not walk as a leaf
     leaves: list[str] = []
     for dirpath, dirs, files in os.walk(data_dir):
         if dirs:
@@ -696,8 +757,8 @@ def _rewrite_leaf(
     output files stay sized from the INPUT bytes (conservative when the
     transform drops rows)."""
     part_dir = os.path.join(lake_dir, partition_subdir)
-    recover_swap(part_dir)
-    files = list_parquet_files(part_dir)
+    store.recover_swap(part_dir)
+    files = store.list_parquet_files(part_dir)
     if not files:
         return (0, 0, [])
     total = sum(os.path.getsize(f) for f in files)
@@ -719,8 +780,8 @@ def _rewrite_leaf(
     out.write.mode("overwrite").option(
         "compression", "snappy"
     ).parquet(tmp)
-    swap_in(tmp, part_dir)
-    new_files = list_parquet_files(part_dir)
+    store.swap_in(tmp, part_dir)
+    new_files = store.list_parquet_files(part_dir)
     return (len(files), len(new_files), new_files)
 
 
@@ -765,7 +826,7 @@ def _remap_partitions_in_manifests(
     if not by_leaf_real:
         return 0
     n_rewritten = 0
-    for path, payload in _manifests(lake_dir, ("_manifests", "_staged")):
+    for path, payload in iter_manifests(lake_dir, ("_manifests", "_staged")):
         kept, touched = [], set()
         for e in payload["entries"]:
             owner = os.path.realpath(os.path.dirname(e["url"]))
@@ -783,7 +844,7 @@ def _remap_partitions_in_manifests(
         payload["totalBytes"] = sum(
             os.path.getsize(e["url"]) for e in kept if os.path.exists(e["url"])
         )
-        publish_file(path, json.dumps(payload, indent=1))
+        store.publish_file(path, json.dumps(payload, indent=1))
         n_rewritten += 1
     return n_rewritten
 
@@ -824,7 +885,7 @@ def write_delete_vector(
     df_keys.select(F.col(key_col).alias("key")).distinct().write.mode(
         "overwrite"
     ).parquet(tmp)
-    swap_in(tmp, final)
+    store.swap_in(tmp, final)
     return final
 
 
@@ -842,7 +903,7 @@ def _delete_vector_dirs(deletes_root: str) -> list[str]:
         if n.startswith("delete-")
         and (
             not n.endswith(".tmp")
-            or (n.endswith(ASIDE) and n[: -len(ASIDE)] not in names)
+            or (n.endswith(store.ASIDE) and n[: -len(store.ASIDE)] not in names)
         )
     )
 
@@ -892,12 +953,12 @@ def materialize_deletes(
     # leaf would rewrite it under the wrong name while the manifests still
     # point at the missing live paths (the same guard compact_lake and
     # vacuum_orphans carry)
-    _heal_compaction_crashes(lake_dir)
+    data_dir = os.path.join(lake_dir, "data")
+    store.recover_swaps(data_dir)
     vecs = _delete_vector_dirs(os.path.join(lake_dir, "_deletes"))
     if not vecs:
         return 0
     dels = spark.read.parquet(*vecs).distinct().localCheckpoint(eager=True)
-    data_dir = os.path.join(lake_dir, "data")
     leaves = [
         dirpath
         for dirpath, dirs, files in os.walk(data_dir)
@@ -961,7 +1022,7 @@ def build_zone_maps(spark: SparkSession, lake_dir: str, cols: list[str]) -> str:
     zm = df.groupBy("__file").agg(*aggs)
     final = os.path.join(lake_dir, "_zonemaps")
     zm.write.mode("overwrite").parquet(final + ".tmp")
-    swap_in(final + ".tmp", final)
+    store.swap_in(final + ".tmp", final)
     return final
 
 
@@ -983,16 +1044,16 @@ def update_zone_maps(spark: SparkSession, lake_dir: str, cols: list[str]) -> int
 
     data_dir = os.path.join(lake_dir, "data")
     final = os.path.join(lake_dir, "_zonemaps")
-    recover_swap(final)  # the prior stats are read below
+    store.recover_swap(final)  # the prior stats are read below
     if not os.path.isdir(final):
         build_zone_maps(spark, lake_dir, cols)
-        return len(list_parquet_files(data_dir))
+        return len(store.list_parquet_files(data_dir))
 
     def _local(path: str) -> str:
         return os.path.realpath(unquote(urlparse(path).path)) if "://" in path else os.path.realpath(path)
 
     prior = spark.read.parquet(final)
-    live = {_local(f): f for f in list_parquet_files(data_dir)}
+    live = {_local(f): f for f in store.list_parquet_files(data_dir)}
     # per-file stats rows: the same O(files) metadata a planner holds
     prior_names = [r[0] for r in prior.select("__file").collect()]
     covered = {_local(n) for n in prior_names}
@@ -1019,7 +1080,7 @@ def update_zone_maps(spark: SparkSession, lake_dir: str, cols: list[str]) -> int
     else:
         zm = keep
     zm.write.mode("overwrite").parquet(final + ".tmp")
-    swap_in(final + ".tmp", final)
+    store.swap_in(final + ".tmp", final)
     return len(new_files)
 
 
@@ -1105,7 +1166,7 @@ def read_zone_pruned(spark: SparkSession, lake_dir: str, col: str, lo, hi) -> Da
     )
     lo_c = _coerce_zone_bound(lo, sample, col)
     hi_c = _coerce_zone_bound(hi, sample, col)
-    live = {_local(f): f for f in list_parquet_files(data_dir)}
+    live = {_local(f): f for f in store.list_parquet_files(data_dir)}
     # stale stats rows (files a later compaction/vacuum removed) are
     # dropped, not scheduled — scheduling a dead path fails the scan;
     # None min/max = file is all-NULL for col; BETWEEN never matches NULL
@@ -1148,13 +1209,14 @@ def stage_lake_batch(
     **kwargs,
 ) -> FlushStats:
     """WAP step 1 (the Iceberg write-audit-publish pattern realized on this
-    lake's manifest protocol, README.md:413-430): run the normal flush but
-    park the manifest under ``_staged/`` instead of ``_manifests/``. The
-    data files are durable, but manifest readers — the ONLY sanctioned
-    readers (README.md:429) — cannot see the batch, and vacuum_orphans
-    treats staged manifests as references (a staged batch is not an
-    orphan). Publishing is one atomic cross-dir rename; an abandoned stage
-    is dropped with its files.
+    lake's manifest protocol, README.md:413-430): the flush run_lake_batch
+    runs (purge_batch, then write_lake_batch with ``kwargs`` as its
+    options), with the manifest parked under ``_staged/`` instead of
+    ``_manifests/``. The data files are durable, but manifest readers —
+    the ONLY sanctioned readers (README.md:429) — cannot see the batch,
+    and vacuum_orphans treats staged manifests as references (a staged
+    batch is not an orphan). Publishing is one atomic cross-dir rename;
+    an abandoned stage is dropped with its files.
 
     The stage is FENCED: a per-stage writer token lands inside the staged
     manifest (atomic rewrite), and ``publish_staged_batch(writer=...)``
@@ -1165,19 +1227,21 @@ def stage_lake_batch(
     batch as its own."""
     import uuid
 
+    purge_batch(lake_dir, batch_id)
+    files, n_ok, n_error = write_lake_batch(env, lake_dir, batch_id, **kwargs)
     # the manifest lands DIRECTLY in _staged/: routing it through
     # _manifests/ first would open a window where the unaudited batch is
     # visible to every manifest reader — and a crash in that window would
     # leave it published with no staged manifest to drop. Two stagers
     # racing on one batch_id each install a WHOLE manifest (publish_file)
-    stats = run_lake_batch(
-        env, lake_dir, batch_id=batch_id, manifest_subdir="_staged", **kwargs
-    )
+    path = write_manifest(lake_dir, batch_id, files, n_ok, subdir="_staged")
     token = uuid.uuid4().hex
-    with open(stats.manifest_path) as fh:
+    with open(path) as fh:
         payload = json.load(fh)
-    publish_file(stats.manifest_path, json.dumps({**payload, "writer": token}))
-    return FlushStats(**{**stats.__dict__, "writer": token})
+    store.publish_file(path, json.dumps({**payload, "writer": token}))
+    return FlushStats(
+        batch_id, n_ok, n_error, payload["totalBytes"], len(files), path, token
+    )
 
 
 def audit_staged_batch(
@@ -1194,8 +1258,7 @@ def audit_staged_batch(
     nothing). Checks: row count floor, NOT NULL columns, key uniqueness.
     One Spark pass: a single aggregate computes every gate — O(audited
     batch), never O(table)."""
-    name = f"manifest-{batch_id:010d}.json"
-    with open(os.path.join(lake_dir, "_staged", name)) as fh:
+    with open(_manifest_path(lake_dir, batch_id, "_staged")) as fh:
         payload = json.load(fh)
     files = [e["url"] for e in payload["entries"]]
     failures: list[str] = []
@@ -1245,7 +1308,7 @@ def publish_staged_batch(
     single-writer pipeline that never fences).
 
     The fence has a TOCTOU window the token alone cannot see: a concurrent
-    stager that finished run_lake_batch (purging/rewriting this batch's
+    stager that finished write_lake_batch (purging/rewriting this batch's
     data files) but has not yet renamed its manifest into ``_staged/``
     leaves our token intact while our entries point at superseded files.
     So after the token check every listed file is re-validated to EXIST
@@ -1254,9 +1317,8 @@ def publish_staged_batch(
     (re-stage lands between this existence sweep and the rename) is
     accepted: closing it needs a real lock service, which the local-FS
     protocol stands in for (reference README.md:429-430)."""
-    name = f"manifest-{batch_id:010d}.json"
-    src = os.path.join(lake_dir, "_staged", name)
-    dst = os.path.join(lake_dir, "_manifests", name)
+    src = _manifest_path(lake_dir, batch_id, "_staged")
+    dst = _manifest_path(lake_dir, batch_id)
     if writer is not None:
         with open(src) as fh:
             payload = json.load(fh)
@@ -1292,8 +1354,7 @@ def drop_staged_batch(lake_dir: str, batch_id: int, writer: str | None = None) -
     mismatch the drop raises — the superseding writer owns the batch now,
     and this writer's files were already purged by that writer's re-stage.
     None skips the check (single-writer pipelines)."""
-    name = f"manifest-{batch_id:010d}.json"
-    path = os.path.join(lake_dir, "_staged", name)
+    path = _manifest_path(lake_dir, batch_id, "_staged")
     with open(path) as fh:
         payload = json.load(fh)
     if writer is not None and payload.get("writer") != writer:
@@ -1393,7 +1454,7 @@ def export_symlink_manifests(lake_dir: str) -> int:
     Returns the number of partition manifests written."""
     data_root = os.path.join(lake_dir, "data")
     by_partition: dict[str, list[str]] = {}
-    for _path, payload in _manifests(lake_dir):
+    for _path, payload in iter_manifests(lake_dir):
         for entry in payload["entries"]:
             f = entry["url"]
             rel = os.path.relpath(os.path.dirname(f), data_root)
@@ -1407,7 +1468,7 @@ def export_symlink_manifests(lake_dir: str) -> int:
             if rel not in by_partition:
                 shutil.rmtree(dirpath, ignore_errors=True)
     for rel, files in by_partition.items():
-        publish_file(
+        store.publish_file(
             os.path.join(sym_root, rel, "manifest"), "\n".join(sorted(files)) + "\n"
         )
     return len(by_partition)

@@ -10,10 +10,12 @@ goes through one of them:
   rename, so two writers never tear each other's file.
 - ``swap_in(tmp, final)``: the atomic dir install (append-store folds and
   batches, version dirs, lake leaves, delete vectors, zone maps, IVF
-  centroids). An existing ``final`` moves aside as ``<final>.prev.tmp`` and
-  is reclaimed only after the new dir lands.
+  centroids, every ``write_hive_arrow`` dir). An existing ``final`` moves
+  aside as ``<final>.prev.tmp`` and is reclaimed only after the new dir
+  lands.
 - ``recover_swap(final)``: the crash heal for a swap cut between its two
-  renames. Writers that read ``final`` before swapping call it first.
+  renames. Writers that read ``final`` before swapping call it first;
+  ``recover_swaps(root)`` runs it for every stranded swap under a store.
 
 Store layouts, both hive-partitioned snappy parquet:
 
@@ -36,9 +38,9 @@ Store layouts, both hive-partitioned snappy parquet:
   ``latest_version_dir_below`` resolve it.
 
 Visibility rule shared by both: ``.tmp``-suffixed dir names are in-flight
-writes or swap asides, dot-prefixed files are in-flight publishes, and
-both are invisible to every reader; names that do not parse are ignored,
-never fatal.
+writes or swap asides, dot-prefixed names are in-flight publishes and
+driver-side dir writes, and both are invisible to every reader; names
+that do not parse are ignored, never fatal.
 
 Writers: ``write_hive_arrow`` lays out an Arrow table the driver holds;
 ``write_partitioned`` picks it or a clustered Spark write at the ONE
@@ -136,6 +138,22 @@ def recover_swap(final: str) -> str | None:
     return action
 
 
+def recover_swaps(root: str) -> int:
+    """Run recover_swap for every dir under ``root`` with a stranded aside
+    (``<dir>.prev.tmp``) or rewrite (``<dir>.tmp``) sibling, so a walk
+    that follows never misreads an aside as a live dir, and a numbering
+    that follows counts the dir the aside holds. Dot-prefixed names are
+    other writers' in-flight dir writes and are left alone. Returns the
+    dirs healed."""
+    healed = 0
+    for dirpath, dirs, _files in os.walk(root):
+        for d in [n for n in dirs if n.endswith(".tmp") and not n.startswith(".")]:
+            final = d[: -len(ASIDE)] if d.endswith(ASIDE) else d[: -len(".tmp")]
+            healed += recover_swap(os.path.join(dirpath, final)) is not None
+            dirs.remove(d)  # healed away — don't descend
+    return healed
+
+
 # ---------------------------------------------------------------- files
 
 
@@ -228,24 +246,30 @@ def write_hive_arrow(tbl, out_dir: str, part_cols: str | list[str]) -> None:
     hive-partitioned snappy parquet under ``out_dir``: one file per value
     of ``part_cols`` (one column name, or a list nesting in that order),
     the layout Spark's partitioned writer produces, so readers cannot tell
-    which side wrote a store. Replay-idempotent like ``mode("overwrite")``:
-    the dir is wiped and rewritten, and it exists afterwards even for an
-    empty table, as the Spark writer's does."""
+    which side wrote a store. Replay-idempotent like ``mode("overwrite")``,
+    and atomic: the table is staged in the hidden sibling ``.<name>.tmp``
+    (invisible to Spark, Hive and dir_num) and installed with swap_in, so
+    a reader of ``out_dir`` never lists a half-written file and a crash
+    mid-write leaves the committed copy whole. The dir exists afterwards
+    even for an empty table, as the Spark writer's does."""
     import pyarrow as pa
     import pyarrow.dataset as pds
 
     cols = [part_cols] if isinstance(part_cols, str) else part_cols
-    shutil.rmtree(out_dir, ignore_errors=True)
+    head, name = os.path.split(out_dir)
+    tmp = os.path.join(head, f".{name}.tmp")
+    shutil.rmtree(tmp, ignore_errors=True)
     pds.write_dataset(
         tbl,
-        out_dir,
+        tmp,
         format="parquet",
         partitioning=pds.partitioning(
             pa.schema([tbl.schema.field(c) for c in cols]), flavor="hive"
         ),
         existing_data_behavior="overwrite_or_ignore",
     )
-    os.makedirs(out_dir, exist_ok=True)
+    os.makedirs(tmp, exist_ok=True)
+    swap_in(tmp, out_dir)
 
 
 def write_partitioned(

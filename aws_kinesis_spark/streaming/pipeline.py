@@ -18,11 +18,9 @@ from pyspark.sql.streaming import StreamingQuery
 from aws_kinesis_spark import store
 from aws_kinesis_spark.sources.envelope import ENVELOPE_SCHEMA, decode_envelope
 from aws_kinesis_spark.sources.lake import (
-    DLQ_COLS,
-    PARTITION_COLS,
     purge_batch,
-    split_errors,
-    with_partition_cols,
+    write_lake_batch,
+    write_lake_batch_on_driver,
     write_manifest,
 )
 
@@ -103,94 +101,26 @@ def start_lake_path(
     from processing time, so a replay in a later hour would otherwise strand
     the first attempt's files in the earlier hour's subpartitions.
 
-    Two shapes of one flush, one gate (``store.DRIVER_MAX_BYTES``, the
-    dedup trigger's): a flush is KB to MB, so its cost is per-trigger
-    scheduling, not data.
-
-    - DRIVER shape, when the batch's input bytes are known (file source
-      WAL) and under the gate: one Spark action collects the decoded batch
-      with its partition values as Arrow (decode, ``processed_at`` and the
-      hour values stay Catalyst expressions, evaluated once). The driver
-      splits ok and corrupt rows, writes the ok rows one file per hour leaf
-      (store.write_hive_arrow), the corrupt rows as one DLQ file, and the
-      manifest. Driver memory holds the decoded table (3.5-4.5x the
-      compressed input bytes, see _lake_batch_for_driver) and, when the
-      batch has corrupt rows, a filtered copy of its ok rows: under the
-      32 MB gate the peak stays below ~300 MB.
-    - SPARK shape otherwise (no byte metadata, as on a Kinesis source, or
-      a batch over the gate): a clustered Spark write, one file per
-      (batch, hour) leaf, then the DLQ write when the counts say the batch
-      had corrupt records.
-
-    Both shapes land the same leaves, file schemas, DLQ rows and manifest.
+    Two shapes of one flush (sources/lake.py), one gate
+    (``store.DRIVER_MAX_BYTES``, the dedup trigger's): a flush is KB to MB,
+    so its cost is per-trigger scheduling, not data. A batch whose input
+    bytes the file source's WAL knows and the gate admits takes
+    write_lake_batch_on_driver (one Spark action, the writes on the
+    driver); one with no byte metadata (a Kinesis source) or over the gate
+    takes write_lake_batch, the Spark body run_lake_batch runs, without
+    the raw backup. Both land the same leaves, file schemas, DLQ rows and
+    manifest.
     """
-
-    def on_driver(batch_df: DataFrame, batch_id: int) -> tuple[list[str], int]:
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        tbl = _lake_batch_for_driver(batch_df).toArrow()
-        corrupt = tbl.column("_corrupt")
-        n_bad = pc.sum(corrupt).as_py() or 0
-        ok = tbl.filter(pc.invert(corrupt)) if n_bad else tbl
-        ok = ok.drop_columns(["_corrupt", "data"])
-        batch_root = os.path.join(lake_dir, "data", f"batch={batch_id}")
-        if ok.num_rows:
-            store.write_hive_arrow(ok, batch_root, PARTITION_COLS)
-        if n_bad:
-            bad = tbl.filter(corrupt)
-            err_dir = os.path.join(lake_dir, "errors", f"batch={batch_id}")
-            os.makedirs(err_dir, exist_ok=True)
-            pq.write_table(
-                bad.select(DLQ_COLS),
-                os.path.join(err_dir, "part-0.parquet"),
-                compression="snappy",
-            )
-        files = store.list_parquet_files(batch_root)
-        return files, _footer_rows(files)
-
-    def on_spark(batch_df: DataFrame, batch_id: int) -> tuple[list[str], int]:
-        from concurrent.futures import ThreadPoolExecutor
-
-        decoded = decode_envelope(batch_df)
-        ok, bad = split_errors(decoded)
-        ok = with_partition_cols(ok.drop("data")).withColumn("batch", F.lit(batch_id))
-        data_dir = os.path.join(lake_dir, "data")
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            # the raw input count needs no decode — overlap it with the write
-            n_in_f = pool.submit(batch_df.count)
-            (
-                ok.repartition(*PARTITION_COLS)
-                .write.mode("overwrite")
-                .partitionBy("batch", *PARTITION_COLS)
-                # dynamic overwrite as a per-write option (see
-                # run_lake_batch): a session-conf write would race jobs
-                # planning on other threads, and static overwrite would
-                # truncate the other batches' data
-                .option("partitionOverwriteMode", "dynamic")
-                .option("compression", "snappy")
-                .parquet(data_dir)
-            )
-            files = store.list_parquet_files(os.path.join(data_dir, f"batch={batch_id}"))
-            n_ok = _footer_rows(files)
-            # DLQ by subtraction: input count minus the written footers'
-            # count is metadata the flush already holds, where probing
-            # `bad` would re-run the whole decode on every clean batch
-            if n_in_f.result() - n_ok:
-                (
-                    bad.select(*DLQ_COLS)
-                    .write.mode("overwrite")
-                    .parquet(os.path.join(lake_dir, "errors", f"batch={batch_id}"))
-                )
-        return files, n_ok
 
     def flush(batch_df: DataFrame, batch_id: int) -> None:
         purge_batch(lake_dir, batch_id)
         in_bytes = _batch_input_bytes(checkpoint_dir, batch_id)
         if in_bytes is not None and in_bytes <= store.DRIVER_MAX_BYTES:
-            files, n_ok = on_driver(batch_df, batch_id)
+            files, n_ok, _ = write_lake_batch_on_driver(batch_df, lake_dir, batch_id)
         else:
-            files, n_ok = on_spark(batch_df, batch_id)
+            files, n_ok, _ = write_lake_batch(
+                batch_df, lake_dir, batch_id, raw_backup=False
+            )
         # the footer-true record count lets validate_manifest check it
         write_manifest(lake_dir, batch_id, files, n_records=n_ok)
 
@@ -198,24 +128,6 @@ def start_lake_path(
         "checkpointLocation", checkpoint_dir
     )
     return _triggered(writer, available_now, trigger_seconds).start()
-
-
-def _lake_batch_for_driver(batch_df: DataFrame) -> DataFrame:
-    """The lake flush's driver-shape frame: the decoded batch with its hour
-    partition values, as one Spark action collects it. The raw ``data``
-    column rides only on corrupt rows (the DLQ keeps it; the lake drops
-    it), which halves the collected table: the Arrow table measures 3.5-4.5x
-    the batch's compressed input bytes on the CDC envelope (sf0.001 and
-    sf0.01 orders), against 6-8x with ``data`` on every row."""
-    decoded = with_partition_cols(decode_envelope(batch_df))
-    return decoded.withColumn("data", F.when(F.col("_corrupt"), F.col("data")))
-
-
-def _footer_rows(files: list[str]) -> int:
-    """Rows in parquet ``files``, from their footers on the driver."""
-    import pyarrow.parquet as pq
-
-    return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
 
 
 def start_alert_path(

@@ -55,7 +55,7 @@ def _lake(spark, tmp_path):
 def _lake_leaf(spark, tmp_path, monkeypatch):
     # a delete materialization cut in its leaf swaps: every committed row
     # waits in the aside leaves, merge-on-read still excludes the deleted
-    # keys, _heal_compaction_crashes restores the manifest-read rows, and
+    # keys, store.recover_swaps restores the manifest-read rows, and
     # the rerun converges
     lake_dir, all_ids, live, _keys = _lake(spark, tmp_path)
     data_dir = os.path.join(lake_dir, "data")
@@ -67,7 +67,7 @@ def _lake_leaf(spark, tmp_path, monkeypatch):
     assert asides
     assert _ids(spark.read.parquet(*asides)) == all_ids
     assert _ids(L.read_with_deletes(spark, lake_dir, key_col="id")) == live
-    assert L._heal_compaction_crashes(lake_dir) == len(asides)
+    assert store.recover_swaps(data_dir) == len(asides)
     assert not [dp for dp, _, _ in os.walk(data_dir) if dp.endswith(".tmp")]
     assert _ids(L.read_via_manifest(spark, lake_dir, 0)) == all_ids
     assert L.materialize_deletes(spark, lake_dir, key_col="id") == len(asides)
@@ -158,6 +158,70 @@ def test_swap_crash_window_keeps_committed_rows_and_converges(
     swaps a committed dir: every committed row survives the crash, deleted
     keys stay deleted, and the caller's next maintenance call converges."""
     caller(spark, tmp_path, monkeypatch)
+
+
+def test_write_hive_arrow_cut_mid_write_keeps_the_committed_dir(tmp_path, monkeypatch):
+    """A driver-side store write cut after its first file landed leaves the
+    committed dir it was replacing whole, files and rows: the write is
+    staged in a hidden sibling and swapped in, never written into the dir
+    a reader lists. The next write converges and reclaims the stage."""
+    import pyarrow as pa
+    import pyarrow.dataset as pds
+    import pyarrow.parquet as pq
+
+    root = str(tmp_path / "store")
+    out = os.path.join(root, "batch=0")
+    store.write_hive_arrow(pa.table({"v": [1, 2, 3], "k": [0, 0, 1]}), out, "k")
+    committed = store.list_parquet_files(out)
+
+    def rows() -> list[tuple]:
+        t = pds.dataset(out, format="parquet", partitioning="hive").to_table()
+        return sorted(zip(t["v"].to_pylist(), t["k"].to_pylist()))
+
+    def cut(tbl, base_dir, **_kw):
+        os.makedirs(os.path.join(base_dir, "k=9"))
+        pq.write_table(tbl, os.path.join(base_dir, "k=9", "part-0.parquet"))
+        raise OSError("cut mid-write")
+
+    monkeypatch.setattr(pds, "write_dataset", cut)
+    with pytest.raises(OSError, match="mid-write"):
+        store.write_hive_arrow(pa.table({"v": [7], "k": [9]}), out, "k")
+    monkeypatch.undo()
+    assert store.list_parquet_files(out) == committed
+    assert rows() == [(1, 0), (2, 0), (3, 1)]
+    assert store.newest_dir_num(root, ("batch",)) == 0
+    store.write_hive_arrow(pa.table({"v": [7], "k": [9]}), out, "k")
+    assert rows() == [(7, 9)]
+    assert os.listdir(root) == ["batch=0"]
+
+
+def test_ivf_numbering_and_delete_horizon_see_a_stranded_swap_aside(spark, tmp_path):
+    """A cells batch that a swap crash left only in its aside dir keeps its
+    rows: the next auto-numbered append and the next delete heal the swap
+    first, so the append takes a fresh id instead of reclaiming the aside,
+    and the delete's horizon covers the restored batch."""
+    em = load(spark, SF, "embeddings")
+    idx = str(tmp_path / "ivf")
+    parts = [em.filter(F.col("vec_id") % 3 == r) for r in range(3)]
+    ivf.build_ivf_index(parts[0], idx, nlist=8)
+    assert ivf.update_ivf_index(parts[1], idx) == 1
+
+    def strand(batch_id: int) -> None:
+        final = os.path.join(idx, "cells", f"batch={batch_id}")
+        os.replace(final, final + store.ASIDE)
+
+    strand(1)
+    assert ivf.update_ivf_index(parts[2], idx) == 2
+    seen = ivf.read_ivf_cells(spark, idx).select("vec_id")
+    assert seen.count() == seen.distinct().count()
+    assert _ids(seen, "vec_id") == _ids(em, "vec_id")
+
+    strand(2)
+    dead = parts[2].filter(F.col("vec_id") % 2 == 0).select("vec_id")
+    ivf.delete_from_ivf_index(dead, idx)
+    seen = ivf.read_ivf_cells(spark, idx).select("vec_id")
+    assert seen.count() == seen.distinct().count()
+    assert _ids(seen, "vec_id") == _ids(em, "vec_id") - _ids(dead, "vec_id")
 
 
 @pytest.mark.parametrize("target", ["_CURRENT", "_hwm.json", "manifest"])

@@ -1766,21 +1766,36 @@ def test_lake_flush_driver_and_spark_shapes_land_identical_lakes(
     spark, envelope, tmp_path, monkeypatch
 ):
     """The same envelope input through start_lake_path under the gate (the
-    driver shape) and with the gate at 0 (the Spark shape) lands the same
-    lake: equal rows through every reader (manifest, incremental, catalog
-    table, e08's folder read), equal DLQ rows, equal manifest record
-    counts that validate, the same hour leaves with one file each, and the
-    same Spark schema from the footers."""
+    driver shape), with the gate at 0 (the Spark shape) and, one part per
+    batch, through run_lake_batch lands the same lake: equal rows through
+    every reader (manifest, incremental, catalog table, e08's folder
+    read), equal DLQ rows, equal manifest record counts that validate, the
+    same hour leaves with one file each, and the same Spark schema from
+    the footers."""
     import pyspark.sql.types as T
 
+    from aws_kinesis_spark.sources.envelope import ENVELOPE_SCHEMA
     from aws_kinesis_spark.sources.lake import read_incremental, validate_manifest
 
     env = _corrupt_some(envelope)
     parts = [env.filter(F.col("sequence_number") % 3 == k) for k in range(3)]
     inp = _lake_input(str(tmp_path / "input"), parts)
-    runs = {}
+    lakes = {}
     for shape, gate in LAKE_GATES.items():
-        lake, _q = _run_lake(spark, inp, str(tmp_path / shape), gate, monkeypatch)
+        lakes[shape], _q = _run_lake(spark, inp, str(tmp_path / shape), gate, monkeypatch)
+    # the batch flush reads each input file as the stream does: one file
+    # per batch, in arrival order, under the envelope schema
+    files = sorted(
+        (os.path.join(inp, f) for f in os.listdir(inp) if f.endswith(".parquet")),
+        key=os.path.getmtime,
+    )
+    assert len(files) == len(parts)
+    lakes["batch"] = str(tmp_path / "batch" / "lake")
+    for i, f in enumerate(files):
+        part = spark.read.schema(ENVELOPE_SCHEMA).parquet(f)
+        run_lake_batch(part, lakes["batch"], batch_id=i, raw_backup=False)
+    runs = {}
+    for shape, lake in lakes.items():
         data = os.path.join(lake, "data")
         batches = _manifest_ids(lake)
         register_lake_table(spark, f"parity_{shape}", lake)
@@ -1814,9 +1829,9 @@ def test_lake_flush_driver_and_spark_shapes_land_identical_lakes(
             "file_schemas": file_schemas,
         }
 
-    driver, spark_run = runs["driver"], runs["spark"]
+    driver = runs["driver"]
     for key in driver:
-        assert driver[key] == spark_run[key], key
+        assert driver[key] == runs["spark"][key] == runs["batch"][key], key
     assert driver["batches"] == [0, 1, 2]
     assert driver["leaves"] == [(f"batch={b}", 1) for b in range(3)]
     assert all(driver["valid"])
@@ -2077,7 +2092,7 @@ def test_lake_driver_flush_holds_at_most_five_times_its_input_bytes(spark, tmp_p
     envelope (orders, 1 % corrupt; measured 3.5-4.5x at sf0.001 and
     sf0.01), so a flush at the 32 MB gate holds at most ~160 MB."""
     from aws_kinesis_spark.sources.envelope import ENVELOPE_SCHEMA
-    from aws_kinesis_spark.streaming.pipeline import _lake_batch_for_driver
+    from aws_kinesis_spark.sources.lake import _lake_batch_for_driver
 
     inp = str(tmp_path / "input")
     env = synthesize_envelope(load(spark, SF, "orders"))
